@@ -175,7 +175,7 @@ object IncrementalIvm {
     val dAgg = graft.Phase("ivmspec.step.dagg") { aggDelta(spec, dCOL) }
 
     def upkeep(state: DataFrame, delta: DataFrame): DataFrame = {
-      val merged = state.unionByName(delta)
+      val merged = ZSet.append(state, delta)
       // eager: each consolidated state is pinned per batch, so the ±
       // cancellation pays off immediately in THIS batch's join sizes and
       // the end-of-run evaluation never re-walks a deep lazy chain

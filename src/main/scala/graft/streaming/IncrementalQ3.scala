@@ -426,8 +426,12 @@ object IncrementalQ3 {
     //    so retracted rows actually leave the state;
     //  - otherwise → a plain union over the already-cached delta blocks:
     //    NOTHING is rewritten (the reference's per-record state insert,
-    //    amortized). The union chain stays shallow because every link is a
-    //    checkpointed delta.
+    //    amortized). The append happens at the RDD level ([[ZSet.append]]):
+    //    every link is a pinned leaf, so the state stays ONE plan leaf and
+    //    the delta-join, dAgg and emission plans keep a constant shape
+    //    between compactions. A Union gaining a branch per batch renamed
+    //    their generated classes (the name carries the codegen stage id),
+    //    so the fold recompiled identical code every micro-batch.
     // Materialize the SHARED plan parents in dependency order BEFORE the
     // concurrent per-state fan-out below. Concurrent Spark jobs do not
     // share in-flight computation — five futures racing over the same
@@ -542,7 +546,7 @@ object IncrementalQ3 {
             carry = Some((meta.version, dirty)))
         case _ =>
           spillFmt(root).write(spark, root, version.get, name, key,
-            cons(state.unionByName(delta)), carry = None)
+            cons(ZSet.append(state, delta)), carry = None)
       }
     }
 
@@ -560,8 +564,8 @@ object IncrementalQ3 {
       spillTo match {
         case Some(root) => spill(root, name, key, cons, state, delta)
         case None if consolidateNow =>
-          cons(state.unionByName(delta)).localCheckpoint(eager = false)
-        case None => state.unionByName(delta)
+          cons(ZSet.append(state, delta)).localCheckpoint(eager = false)
+        case None => ZSet.append(state, delta)
       }
 
     def upkeep(name: String, state: DataFrame, delta: DataFrame): DataFrame =

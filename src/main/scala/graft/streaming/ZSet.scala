@@ -1,7 +1,13 @@
 package graft.streaming
 
+import org.apache.spark.rdd.{RDD, UnionRDD}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.classic.{SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Signed-weight relation (z-set) algebra over DataFrames.
   *
@@ -35,6 +41,50 @@ object ZSet {
     val keys = df.columns.filterNot(_ == W).toIndexedSeq.map(col)
     df.groupBy(keys: _*).agg(sum(col(W)).as(W)).filter(col(W) =!= 0)
   }
+
+  /** `state ∪ delta` as state upkeep: the plain union a non-compacting
+    * batch applies, nothing rewritten.
+    *
+    * When both sides are pinned leaves — a `localCheckpoint`, an earlier
+    * append, or an empty frame from `createDataFrame` — with the same
+    * column names and types, the result is ONE new leaf over an RDD-level
+    * union of their RDDs (nested unions flattened). `unionByName` would
+    * instead add a `Union` child per batch, and each child is its own
+    * whole-stage-codegen stage: every plan reading the state (delta joins,
+    * aggregate partials, emission) grows one branch per batch, and since
+    * Spark names generated classes by stage id, a growing chain renames
+    * otherwise identical classes, so they miss the codegen cache and get
+    * recompiled every batch. The RDD is the same `UnionRDD` that
+    * `UnionExec` would build, so partitions and tasks do not change; only
+    * the plan keeps a constant shape between compactions.
+    *
+    * The leaf's output attributes are fresh, nullability merged the way
+    * `Union` merges it, and its statistics are the sum of the sides' (row
+    * count only when both have one), so the planner sizes it as it sized
+    * the `Union`. Any other side — a spilled state is a bucketed file scan
+    * and must stay one so delta joins read it pre-partitioned — keeps
+    * `unionByName`.
+    */
+  def append(state: DataFrame, delta: DataFrame): DataFrame =
+    (state.queryExecution.analyzed, delta.queryExecution.analyzed) match {
+      case (a: LogicalRDD, b: LogicalRDD) if !a.isStreaming && !b.isStreaming &&
+          a.output.map(x => (x.name, x.dataType)) == b.output.map(x => (x.name, x.dataType)) =>
+        val output = a.output.zip(b.output).map { case (x, y) =>
+          x.withNullability(x.nullable || y.nullable).newInstance()
+        }
+        def parts(rdd: RDD[InternalRow]): Seq[RDD[InternalRow]] = rdd match {
+          case u: UnionRDD[InternalRow @unchecked] => u.rdds
+          case r => Seq(r)
+        }
+        val rdd = new UnionRDD(a.rdd.sparkContext, parts(a.rdd) ++ parts(b.rdd))
+        val (sa, sb) = (a.stats, b.stats)
+        val stats = Statistics(sa.sizeInBytes + sb.sizeInBytes,
+          for (x <- sa.rowCount; y <- sb.rowCount) yield x + y)
+        val spark = state.sparkSession
+        Bridge.ofRows(spark, LogicalRDD(output, rdd)(
+          spark.asInstanceOf[ClassicSparkSession], Some(stats)))
+      case _ => state.unionByName(delta)
+    }
 
   /** Weighted inner join: weights multiply through. */
   def join(l: DataFrame, r: DataFrame, cond: Column): DataFrame = {
