@@ -29,8 +29,7 @@ object FoldWidthDump {
 
     val events = Changelog.generateCached(spark, dir, insertOnly = true)
     val tMax = events.agg(max(col("t"))).head().getLong(0)
-    val batched = events.withColumn("batch",
-      least(expr(s"CAST(((t - 1L) * ${k}L) DIV ${tMax}L AS INT)"), lit(k - 1)))
+    val batched = events.withColumn("batch", Changelog.batchOf(k, tMax))
     println(s"=== IncrementalQ3 three-grain fold, k=$k, sfDir=$dir ===")
     println(s"events partitions: ${events.rdd.getNumPartitions}")
     var st = IncrementalQ3.init(spark, grains = Seq(

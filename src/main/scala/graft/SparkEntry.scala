@@ -121,16 +121,17 @@ object SparkEntry {
     "stream_q3_two_consumers_partitioned" ->
       (streaming.ReplayIngest.q3TwoConsumersPartitioned _),
     "stream_q3_converged" -> (streaming.StreamQueries.q3Converged _),
-    // the query-PARAMETRIC fold (IncrementalIvm): Q10 and Q5 maintained
-    // incrementally over the same changelog by declaring an IvmSpec each —
-    // zero fold code per query; static dims broadcast at emission
+    // the one z-set fold (IncrementalQ3) run as an engine: Q10 and Q5
+    // maintained incrementally over the same changelog by declaring an
+    // IvmSpec each — zero fold code per query; static dims broadcast at
+    // emission
     "stream_q10_incremental" -> (streaming.IvmQueries.q10Incremental _),
     "stream_q5_incremental" -> (streaming.IvmQueries.q5Incremental _),
     // the agg-only member: additive sums maintained exactly, averages
     // derived at emission (the standard IVM treatment of AVG)
     "stream_q1_incremental" -> (streaming.IvmQueries.q1Incremental _),
     // the parametric fold under a REAL streaming runtime: file-source
-    // micro-batches, foreachBatch → the same IncrementalIvm.step
+    // micro-batches, foreachBatch → the same IncrementalQ3.step
     "stream_q10_live" -> (streaming.IvmQueries.q10Live _),
     // full ± cycle through the Q5 spec: exact-empty convergence proves the
     // retraction algebra holds for the whole parametric family

@@ -226,6 +226,13 @@ object Changelog {
     } finally parts.close()
   }
 
+  /** The micro-batch, `0 until k`, of an event at trigger `t` when
+    * triggers `1..tMax` are cut into `k` event-time-contiguous slices —
+    * exact long arithmetic (`DIV`), triggers past `tMax` in the last slice.
+    */
+  def batchOf(k: Int, tMax: Long): Column =
+    least(expr(s"CAST(((t - 1L) * ${k}L) DIV ${tMax}L AS INT)"), lit(k - 1))
+
   // -------------------------------------------------------------------
   // Parser (no_websocket.java:281–320 re-expressed as declarative columns)
   // -------------------------------------------------------------------

@@ -1,14 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Relational
 
-/** Incremental (retraction-correct) TPC-H Q3 over a changelog stream —
-  * the reference's capability #2 (SURVEY.md §0), re-expressed as
-  * signed-weight incremental view maintenance.
+/** The z-set fold: retraction-correct incremental view maintenance of a
+  * customer ⋈ orders ⋈ lineitem aggregate over the ±CU/OR/LI changelog —
+  * the reference's capability #2 (SURVEY.md §0). It is the ONE fold every
+  * incremental join query runs; a query is an [[IvmSpec]] (its per-relation
+  * delta projections and the c⋈o columns it keeps), TPC-H Q3 is
+  * [[Q3Spec]], and Q5/Q10 are specs in [[IvmQueries]].
   *
   * The reference chains four hand-built stateful operators
   * (no_websocket.java:168–241): symmetric join customer⋈orders, symmetric
@@ -23,10 +26,13 @@ import graft.operators.Relational
   *   emit top-20 of Agg_0'
   * }}}
   *
-  * The aggregation grain is a PARAMETER, and since r11 a state maintains
-  * ANY NUMBER of grains off ONE shared ΔJ per batch — the multi-query IVM
-  * shape a real deployment runs (N dashboards over one changelog pay one
-  * delta-join pipeline, not N).
+  * The fold owns the join keys (every query joins on `c_custkey =
+  * o_custkey` and `o_orderkey = l_orderkey`, which the spill layout buckets
+  * on) and the one additive measure, `revenue`; the spec owns everything
+  * that varies. The aggregation grain is a PARAMETER of [[init]], and a
+  * state maintains ANY NUMBER of grains off ONE shared ΔJ per batch — the
+  * multi-query IVM shape a real deployment runs (N dashboards over one
+  * changelog pay one delta-join pipeline, not N).
   *
   * Revenue is kept as exact decimal so insert/delete pairs cancel to
   * EXACTLY zero and the converged streaming answer is bit-equal to the
@@ -38,6 +44,18 @@ import graft.operators.Relational
   * aggregation, whole-stage codegen, AQE.
   */
 object IncrementalQ3 {
+
+  /** A query the fold maintains: parsed changelog → each relation's delta
+    * z-set (parse-time filter + column pruning, the reference's pre-join
+    * placement, no_websocket.java:192–201), and the columns kept after
+    * c⋈o. Every delta keeps [[ZSet.W]] and its relation's join keys; `dL`
+    * also produces the additive `revenue` (see [[revenue]]); `coCols` must
+    * include `o_orderkey` plus whatever the grains need from c⋈o.
+    */
+  final case class IvmSpec(dC: DataFrame => DataFrame,
+                           dO: DataFrame => DataFrame,
+                           dL: DataFrame => DataFrame,
+                           coCols: Seq[String])
 
   /** Spill bookkeeping carried between compactions (spill mode only):
     * which buckets each state has dirtied since `version` was written, and
@@ -53,7 +71,8 @@ object IncrementalQ3 {
 
   /** All maintained state. `c/o/l/co` are z-set DataFrames with weight
     * [[ZSet.W]]; `aggs` is one maintained aggregate per grain (key list →
-    * z-set frame), all served by the shared ΔJ. `dirty` counts batches
+    * z-set frame), all served by the shared ΔJ. `spec` is the query the
+    * states belong to ([[Snapshots]] restore Q3's). `dirty` counts batches
     * since the base states were last compacted (see the
     * amortized-compaction note in [[step]]). `spillHistory` is this fold's
     * spill versions, newest first (at most the two newest stay on disk —
@@ -81,7 +100,8 @@ object IncrementalQ3 {
                            * only the delta ([[Snapshots.saveBatch]], r14).
                            * Never persisted; rebuilt every step.
                            */
-                         snapDeltas: Map[String, DataFrame] = Map.empty) {
+                         snapDeltas: Map[String, DataFrame] = Map.empty,
+                         spec: IvmSpec = Q3Spec) {
     /** The maintained aggregates, one per grain, CONSOLIDATED on read.
       * Internally (`aggsRaw`) each grain is a chain of per-batch delta
       * partials — consolidating only at compaction and at emission is
@@ -224,9 +244,33 @@ object IncrementalQ3 {
     org.apache.commons.io.FileUtils.deleteQuietly(vDir)
   }
 
+  private val revType = "decimal(38,4)"
+
+  /** The fold's additive measure: a lineitem's exact-decimal revenue. */
+  private[streaming] val revenue: Column =
+    Relational.revenueExpr.cast(revType).as("revenue")
+
+  // the fold's two equi-joins, shared by every spec (see the object doc)
+  private val byCustkey = col("c_custkey") === col("o_custkey")
+  private val byOrderkey = col("o_orderkey") === col("l_orderkey")
+
   private val cutoff = to_date(lit(Relational.Q3Date))
 
-  private val revType = "decimal(38,4)"
+  /** TPC-H Q3: the reference's pushed-down filters + projections on the
+    * delta (no_websocket.java:192–201, parse-time projection 292–315).
+    */
+  val Q3Spec: IvmSpec = IvmSpec(
+    dC = p => Changelog.customers(p)
+      .filter(col("c_mktsegment") === "BUILDING")
+      .select(col("c_custkey"), col(ZSet.W)),
+    dO = p => Changelog.orders(p)
+      .filter(col("o_orderdate") < cutoff)
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
+        col("o_orderpriority"), col(ZSet.W)),
+    dL = p => Changelog.lineitems(p)
+      .filter(col("l_shipdate") > cutoff)
+      .select(col("l_orderkey"), revenue, col(ZSet.W)),
+    coCols = Seq("o_orderkey", "o_orderdate", "o_orderpriority"))
 
   /** Q3's native aggregation grain. The grain is a PARAMETER of the
     * engine, not part of it: any subset of the join output's dimension
@@ -237,49 +281,34 @@ object IncrementalQ3 {
   val DefaultAggKeys: Seq[String] =
     Seq("l_orderkey", "o_orderdate", "o_orderpriority")
 
-  private val keyTypes: Map[String, DataType] = Map(
-    "l_orderkey" -> LongType, "o_orderkey" -> LongType,
-    "o_orderdate" -> DateType, "o_orderpriority" -> StringType)
+  private def coDelta(spec: IvmSpec, joined: DataFrame): DataFrame =
+    joined.select((spec.coCols.map(col) :+ col(ZSet.W)): _*)
 
-  private def empty(spark: SparkSession, fields: (String, DataType)*): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(fields.map { case (n, t) => StructField(n, t) } :+
-        StructField(ZSet.W, LongType)))
+  /** Weighted partial aggregate of a (signed) ΔJ at one grain. */
+  private def aggPartial(keys: Seq[String], dJ: DataFrame): DataFrame =
+    dJ.groupBy(keys.map(col): _*)
+      .agg(sum(col(ZSet.W) * col("revenue")).cast(revType).as("revenue"),
+        sum(col(ZSet.W)).as("cnt"))
+      .withColumn(ZSet.W, lit(1L))
 
-  private def emptyAgg(spark: SparkSession, keys: Seq[String]): DataFrame =
-    empty(spark, keys.map(k => k -> keyTypes(k)) :+
-      ("revenue" -> DataType.fromDDL(revType)) :+ ("cnt" -> (LongType: DataType)): _*)
-
-  def init(spark: SparkSession,
-           grains: Seq[Seq[String]] = Seq(DefaultAggKeys)): State = State(
-    c = empty(spark, "c_custkey" -> LongType),
-    o = empty(spark, "o_orderkey" -> LongType, "o_custkey" -> LongType,
-      "o_orderdate" -> DateType, "o_orderpriority" -> StringType),
-    l = empty(spark, "l_orderkey" -> LongType,
-      "revenue" -> DataType.fromDDL(revType)),
-    co = empty(spark, "o_orderkey" -> LongType, "o_orderdate" -> DateType,
-      "o_orderpriority" -> StringType),
-    aggsRaw = grains.toVector.map(keys => keys -> emptyAgg(spark, keys)))
-
-  /** Q3's pushed-down filters + projections on the delta, mirroring the
-    * reference's pre-join filter placement (no_websocket.java:192–201) and
-    * parse-time projection (no_websocket.java:292–315).
+  /** Empty states for `spec` at `grains`. Every schema is derived by
+    * projecting an empty parse through the spec, so no query keeps a
+    * hand-listed schema in sync with its projections.
     */
-  private def project(parsed: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val dC = Changelog.customers(parsed)
-      .filter(col("c_mktsegment") === "BUILDING")
-      .select(col("c_custkey"), col(ZSet.W))
-    val dO = Changelog.orders(parsed)
-      .filter(col("o_orderdate") < cutoff)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-        col("o_orderpriority"), col(ZSet.W))
-    val dL = Changelog.lineitems(parsed)
-      .filter(col("l_shipdate") > cutoff)
-      .select(col("l_orderkey"),
-        Relational.revenueExpr.cast(revType).as("revenue"),
-        col(ZSet.W))
-    (dC, dO, dL)
+  def init(spark: SparkSession,
+           grains: Seq[Seq[String]] = Seq(DefaultAggKeys),
+           spec: IvmSpec = Q3Spec): State = {
+    import spark.implicits._
+    val parsed = Changelog.parse(Seq.empty[String].toDF("line"))
+    val (c, o, l) = (spec.dC(parsed), spec.dO(parsed), spec.dL(parsed))
+    val co = coDelta(spec, ZSet.join(c, o, byCustkey))
+    val joined = ZSet.join(co, l, byOrderkey)
+    def empty(proto: DataFrame): DataFrame = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row],
+      StructType(proto.schema.map(_.copy(nullable = true))))
+    State(empty(c), empty(o), empty(l), empty(co),
+      aggsRaw = grains.toVector.map(keys => keys -> empty(aggPartial(keys, joined))),
+      spec = spec)
   }
 
   /** The session default for [[step]]'s `spillAtRows` when a caller opts
@@ -295,7 +324,7 @@ object IncrementalQ3 {
     java.lang.Long.getLong("graft.ivm.spill.threshold", 8000000L)
 
   /** Apply one micro-batch of raw changelog lines to the state. The
-    * maintained grains come from `st` (set at [[init]]); `spillDir`
+    * query and its grains come from `st` (set at [[init]]); `spillDir`
     * bounds the memory envelope via bucketed-table state spill (default:
     * the `graft.ivm.spill.dir` system property — threaded as a parameter
     * so concurrent folds in one JVM never share a mutable global).
@@ -362,22 +391,18 @@ object IncrementalQ3 {
     // coalesce() never widens — a batch narrower than the setting is left
     // alone.
     val nDelta = lines.sparkSession.sessionState.conf.numShufflePartitions
-    val (dC0, dO0, dL0) = project(parsed)
     val (dC, dO, dL) = graft.Phase("ivm.step.build.deltas") {
-      (dC0.coalesce(nDelta).localCheckpoint(eager = false),
-       dO0.coalesce(nDelta).localCheckpoint(eager = false),
-       dL0.coalesce(nDelta).localCheckpoint(eager = false))
+      (st.spec.dC(parsed).coalesce(nDelta).localCheckpoint(eager = false),
+       st.spec.dO(parsed).coalesce(nDelta).localCheckpoint(eager = false),
+       st.spec.dL(parsed).coalesce(nDelta).localCheckpoint(eager = false))
     }
 
     val dCO = graft.Phase("ivm.step.build.dco") {
-      ZSet.deltaJoin(st.c, dC, st.o, dO,
-          col("c_custkey") === col("o_custkey"))
-        .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"), col(ZSet.W))
+      coDelta(st.spec, ZSet.deltaJoin(st.c, dC, st.o, dO, byCustkey))
         .coalesce(nDelta)
         .localCheckpoint(eager = false)
     }
-    val dJ0 = ZSet.deltaJoin(st.co, dCO, st.l, dL,
-      col("o_orderkey") === col("l_orderkey"))
+    val dJ0 = ZSet.deltaJoin(st.co, dCO, st.l, dL, byOrderkey)
     // the shared ΔJ: with several grains each reads it once — checkpoint so
     // the delta joins run ONCE per batch, not once per grain; with a single
     // grain the extra pin would be pure storage cost
@@ -395,10 +420,7 @@ object IncrementalQ3 {
     // consolidations must hit cached blocks, never re-run the delta joins.
     val dAggs: Vector[DataFrame] = graft.Phase("ivm.step.build.daggs") {
       st.aggsRaw.map { case (keys, agg) =>
-      dJ.groupBy(keys.map(col): _*)
-        .agg(sum(col(ZSet.W) * col("revenue")).cast(revType).as("revenue"),
-          sum(col(ZSet.W)).as("cnt"))
-        .withColumn(ZSet.W, lit(1L))
+      aggPartial(keys, dJ)
         .select(agg.columns.toIndexedSeq.map(col): _*)
         .localCheckpoint(eager = false)
       }
@@ -617,7 +639,8 @@ object IncrementalQ3 {
         else Map.empty[String, DataFrame]) ++
         (if (spillTo.isEmpty && !aggCompact)
           dAggs.zipWithIndex.map { case (d, i) => aggName(i) -> d }.toMap
-        else Map.empty[String, DataFrame]))
+        else Map.empty[String, DataFrame]),
+      spec = st.spec)
     if (graft.Phase.enabled) System.err.println(
       f"[phase] ivm.step.upkeepBuild: ${(System.nanoTime() - upkeepT0) / 1e9}%.2fs")
     // everything older than the previous spill is now unreachable (carried-
@@ -688,13 +711,14 @@ object IncrementalQ3 {
       .limit(n)
 
   /** Batch-simulated run: slice the generated changelog into `k`
-    * trigger-ordered micro-batches and fold [[step]] over them.
-    * `onBatch(b, state)` fires after each applied batch — mid-stream
+    * trigger-ordered micro-batches and fold [[step]] over them, from
+    * [[init]]`(spark, grains, spec)`. `onBatch(b, state)` fires after each applied batch — mid-stream
     * consumers (the prefix-snapshot query shares this fold instead of
     * re-folding its prefix) read intermediate state there.
     */
   def runBatches(spark: SparkSession, events: DataFrame, k: Int,
                  grains: Seq[Seq[String]] = Seq(DefaultAggKeys),
+                 spec: IvmSpec = Q3Spec,
                  tMaxKnown: Option[Long] = None,
                  spillDir: Option[String] = spillRoot,
                  spillAtRows: Long = 0L,
@@ -704,9 +728,8 @@ object IncrementalQ3 {
     // hand over an already-pinned frame, and the batch column is a trivial
     // projection per cached scan — re-materializing millions of lines just
     // to attach it cost more than every per-batch filter combined.
-    val batched = events.withColumn("batch",
-      least(expr(s"CAST(((t - 1L) * ${k}L) DIV ${tMax}L AS INT)"), lit(k - 1)))
-    val fin = (0 until k).foldLeft(init(spark, grains)) { (st, b) =>
+    val batched = events.withColumn("batch", Changelog.batchOf(k, tMax))
+    val fin = (0 until k).foldLeft(init(spark, grains, spec)) { (st, b) =>
       val t0 = System.nanoTime()
       val r = step(st, batched.filter(col("batch") === b).select("line"),
         spillDir, spillAtRows)

@@ -2,32 +2,41 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Relational.d2
 import graft.sources.Tables
 
-/** Driver-contract queries for [[IncrementalIvm]]: TPC-H Q10 and Q5
-  * maintained incrementally over the SAME changelog the Q3 pipeline
-  * streams, converged and checked against the plain batch oracles
-  * (`q10_returned` / `q5_local_supplier` share the SQL).
+/** TPC-H Q10, Q5 and Q1 maintained incrementally over the SAME changelog
+  * the Q3 pipeline streams, converged and checked against the plain batch
+  * oracles (`q10_returned` / `q5_local_supplier` / `q1_pricing` share the
+  * SQL).
   *
-  * What these pin that the `stream_q3_*` family cannot: the fold is
-  * query-parametric. Q10 carries no customer filter but a lineitem
-  * RETURNFLAG filter and a per-customer grain; Q5 threads c_nationkey
-  * through the join tree and maintains a (nation, supplier) grain that
-  * the static supplier⋈nation⋈region dims re-aggregate at emission.
-  * Neither touches a line of fold code — each is an [[IncrementalIvm.IvmSpec]].
+  * There is one fold, [[IncrementalQ3.step]], and a query is an
+  * [[IncrementalQ3.IvmSpec]] plus a grain: Q10 carries no customer filter
+  * but a lineitem RETURNFLAG filter and a per-customer grain; Q5 threads
+  * c_nationkey through the join tree and maintains a (nation, supplier)
+  * grain. Neither adds a line of fold code, and both get what Q3 gets:
+  * amortized compaction, spill, multi-grain state.
+  *
+  * Design rule the specs follow (and a real deployment would): STATIC
+  * dimensions stay OUT of the incremental state. Q5 joins supplier ⋈
+  * nation ⋈ region and Q10 joins nation/customer display columns, but
+  * none of those relations arrive on the stream — so the fold maintains
+  * the aggregate at the finest grain the STREAMED relations determine,
+  * and the driver query finishes with broadcast joins against the parquet
+  * dims at emission. Sound because the maintained measure is additive and
+  * the dim attributes are functionally dependent on the grain keys;
+  * scale-critical because the incremental state never widens with
+  * dimension payload, and a dim UPDATE (repriced region, renamed
+  * customer) needs no state rebuild at all — the next emission just joins
+  * the new dim rows.
   */
 object IvmQueries {
-
-  private def d2(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
-  private val rev =
-    (d2(col("l_extendedprice")) * (lit(1) - d2(col("l_discount"))))
-      .cast("decimal(38,4)").as("revenue")
 
   /** Q10's streamed shape: all customers, one quarter of orders, returned
     * lineitems; grain = customer. Display columns (c_name, n_name) are
     * emission-time dims.
     */
-  private def q10Spec = IncrementalIvm.IvmSpec(
+  private[streaming] val q10Spec = IncrementalQ3.IvmSpec(
     dC = p => Changelog.customers(p).select(col("c_custkey"), col(ZSet.W)),
     dO = p => Changelog.orders(p)
       .filter(col("o_orderdate") >= to_date(lit("1996-01-01")) &&
@@ -35,11 +44,9 @@ object IvmQueries {
       .select(col("o_orderkey"), col("o_custkey"), col(ZSet.W)),
     dL = p => Changelog.lineitems(p)
       .filter(col("l_returnflag") === "R")
-      .select(col("l_orderkey"), rev, col(ZSet.W)),
-    coCond = col("c_custkey") === col("o_custkey"),
-    coCols = Seq("o_orderkey", "c_custkey"),
-    colCond = col("o_orderkey") === col("l_orderkey"),
-    aggKeys = Seq("c_custkey"))
+      .select(col("l_orderkey"), IncrementalQ3.revenue, col(ZSet.W)),
+    coCols = Seq("o_orderkey", "c_custkey"))
+  private[streaming] val q10Grains = Seq(Seq("c_custkey"))
 
   /** Q5's streamed shape: customers carry their nation key, one year of
     * orders, lineitems carry their supplier key; grain =
@@ -47,7 +54,7 @@ object IvmQueries {
     * determine, so the ASIA/supplier co-location predicate and the
     * nation names can all be applied by broadcast dims at emission.
     */
-  private def q5Spec = IncrementalIvm.IvmSpec(
+  private[streaming] val q5Spec = IncrementalQ3.IvmSpec(
     dC = p => Changelog.customers(p)
       .select(col("c_custkey"), col("c_nationkey"), col(ZSet.W)),
     dO = p => Changelog.orders(p)
@@ -55,11 +62,10 @@ object IvmQueries {
         col("o_orderdate") < to_date(lit("1997-01-01")))
       .select(col("o_orderkey"), col("o_custkey"), col(ZSet.W)),
     dL = p => Changelog.lineitems(p)
-      .select(col("l_orderkey"), col("l_suppkey"), rev, col(ZSet.W)),
-    coCond = col("c_custkey") === col("o_custkey"),
-    coCols = Seq("o_orderkey", "c_nationkey"),
-    colCond = col("o_orderkey") === col("l_orderkey"),
-    aggKeys = Seq("c_nationkey", "l_suppkey"))
+      .select(col("l_orderkey"), col("l_suppkey"), IncrementalQ3.revenue,
+        col(ZSet.W)),
+    coCols = Seq("o_orderkey", "c_nationkey"))
+  private[streaming] val q5Grains = Seq(Seq("c_nationkey", "l_suppkey"))
 
   // Micro-batch count — same phase geometry as StreamQueries' folds.
   private val K = 3
@@ -70,13 +76,14 @@ object IvmQueries {
     * `q10_returned` exactly.
     */
   def q10Incremental(spark: SparkSession, dir: String): DataFrame = {
-    val st = IncrementalIvm.runBatches(spark,
-      Changelog.generateCached(spark, dir, insertOnly = true), K, q10Spec)
+    val st = IncrementalQ3.runBatches(spark,
+      Changelog.generateCached(spark, dir, insertOnly = true), K, q10Grains,
+      q10Spec)
     emitQ10(spark, dir, st)
   }
 
   private def emitQ10(spark: SparkSession, dir: String,
-                      st: IncrementalIvm.State): DataFrame = {
+                      st: IncrementalQ3.State): DataFrame = {
     val cust = Tables.table(spark, dir, "customer")
       .select(col("c_custkey").cast("long").as("ck"), col("c_name"),
         col("c_nationkey"))
@@ -96,7 +103,7 @@ object IvmQueries {
     * changelog staged as ordered text files, read back through
     * Structured Streaming's file source (`Trigger.AvailableNow`,
     * `maxFilesPerTrigger` so the run is genuinely multi-micro-batch),
-    * folded by `foreachBatch` → [[IncrementalIvm.step]] — the same step
+    * folded by `foreachBatch` → [[IncrementalQ3.step]] — the same step
     * the batch simulation uses, byte-for-byte. Converges to the batch
     * Q10 answer; the structural pin requires the runtime actually split
     * the stream (≥ 3 micro-batches saw rows).
@@ -107,7 +114,7 @@ object IvmQueries {
     val stage = java.nio.file.Files.createTempDirectory("graft-ivmlive").toString
     try {
       Changelog.write(events, stage, nFiles = 6)
-      @volatile var st = IncrementalIvm.init(spark, q10Spec)
+      @volatile var st = IncrementalQ3.init(spark, q10Grains, q10Spec)
       @volatile var fedBatches = 0
       StreamTune.prepare(spark)
       val q = spark.readStream
@@ -116,7 +123,7 @@ object IvmQueries {
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           if (!batch.isEmpty) {
-            st = IncrementalIvm.step(st, batch, q10Spec)
+            st = IncrementalQ3.step(st, batch)
             fedBatches += 1
           }
         }
@@ -135,8 +142,15 @@ object IvmQueries {
     * `q5_local_supplier` exactly.
     */
   def q5Incremental(spark: SparkSession, dir: String): DataFrame = {
-    val st = IncrementalIvm.runBatches(spark,
-      Changelog.generateCached(spark, dir, insertOnly = true), K, q5Spec)
+    val st = IncrementalQ3.runBatches(spark,
+      Changelog.generateCached(spark, dir, insertOnly = true), K, q5Grains,
+      q5Spec)
+    emitQ5(spark, dir, st)
+  }
+
+  /** The (nation, supplier) aggregate re-aggregated per ASIA nation. */
+  private def emitQ5(spark: SparkSession, dir: String,
+                     st: IncrementalQ3.State): DataFrame =
     st.agg.join(broadcast(asiaSuppliers(spark, dir)),
         col("s_suppkey") === col("l_suppkey") &&
           col("s_nationkey") === col("c_nationkey"))
@@ -144,7 +158,6 @@ object IvmQueries {
       .agg(sum(col("revenue")).cast("double").as("revenue"),
         sum(col("cnt")).as("n_lines"))
       .orderBy(col("revenue").desc, col("n_name"))
-  }
 
   /** ASIA's suppliers with their nation names — the static dim leg of Q5,
     * dictionary-sized (suppliers of 5 nations), hence broadcast.
@@ -170,8 +183,7 @@ object IvmQueries {
   def q1Incremental(spark: SparkSession, dir: String): DataFrame = {
     val events = Changelog.generateCached(spark, dir, insertOnly = true)
     val tMax = events.agg(max(col("t"))).head().getLong(0)
-    val batched = events.withColumn("batch",
-      least(expr(s"CAST(((t - 1L) * ${K}L) DIV ${tMax}L AS INT)"), lit(K - 1)))
+    val batched = events.withColumn("batch", Changelog.batchOf(K, tMax))
     val cutoff = to_date(lit(graft.operators.Relational.Q3Date))
     val disc = lit(1) - d2(col("l_discount"))
     val measures = Seq[(String, org.apache.spark.sql.Column, String)](
@@ -224,20 +236,13 @@ object IvmQueries {
     * exact-cancellation contract from Q3 to the whole parametric family.
     */
   def q5IncrementalCycle(spark: SparkSession, dir: String): DataFrame = {
-    // consolidateState: with retractions in flight the ± pairs must cancel
-    // OUT of the state per batch, or every join pays for the dead rows
-    val st = IncrementalIvm.runBatches(spark,
-      Changelog.generateCached(spark, dir, insertOnly = false), K, q5Spec,
-      consolidateState = true)
+    val st = IncrementalQ3.runBatches(spark,
+      Changelog.generateCached(spark, dir, insertOnly = false), K, q5Grains,
+      q5Spec)
     // Structural pin: convergence must come from cancellation inside the
     // maintained state, not from the dim join filtering rows away.
     val leftover = st.agg.count()
     require(leftover == 0L, s"q5 cycle: maintained aggregate has $leftover surviving groups")
-    st.agg.join(broadcast(asiaSuppliers(spark, dir)),
-        col("s_suppkey") === col("l_suppkey") &&
-          col("s_nationkey") === col("c_nationkey"))
-      .groupBy(col("n_name"))
-      .agg(sum(col("revenue")).cast("double").as("revenue"),
-        sum(col("cnt")).as("n_lines"))
+    emitQ5(spark, dir, st)
   }
 }

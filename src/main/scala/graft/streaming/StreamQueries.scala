@@ -386,7 +386,7 @@ object StreamQueries {
         element_at(fields, 1).cast("long") % 10 === 3)
     val tMax = events.agg(max(col("t"))).head().getLong(0)
     val batched = withDef.filter(!col("deferred")).withColumn("batch",
-      least(expr(s"CAST(((t - 1L) * ${K}L) DIV ${tMax}L AS INT)"), lit(K - 1)))
+      Changelog.batchOf(K, tMax))
     val arrivals: Seq[DataFrame] =
       (0 until K).map(b => batched.filter(col("batch") === b).drop("batch")) :+
         withDef.filter(col("deferred"))
@@ -472,8 +472,7 @@ object StreamQueries {
     val withDef = events.withColumn("deferred", defer)
     val onTime = withDef.filter(!col("deferred"))
     val tMax = onTime.agg(max(col("t"))).head().getLong(0)
-    val batched = onTime.withColumn("batch",
-      least(expr(s"CAST(((t - 1L) * ${k}L) DIV ${tMax}L AS INT)"), lit(k - 1)))
+    val batched = onTime.withColumn("batch", Changelog.batchOf(k, tMax))
     val arrivals: Seq[DataFrame] =
       (0 until k).map(b => batched.filter(col("batch") === b).drop("batch")) :+
         withDef.filter(col("deferred"))
@@ -551,8 +550,7 @@ object StreamQueries {
   private[streaming] def extremaFold(spark: SparkSession, events: DataFrame,
                                      k: Int): DataFrame = {
     val tMax = events.agg(max(col("t"))).head().getLong(0)
-    val batched = events.withColumn("batch",
-      least(expr(s"CAST(((t - 1L) * ${k}L) DIV ${tMax}L AS INT)"), lit(k - 1)))
+    val batched = events.withColumn("batch", Changelog.batchOf(k, tMax))
     val init = {
       import spark.implicits._
       Seq.empty[(String, Double, Long)]

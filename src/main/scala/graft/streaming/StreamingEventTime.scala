@@ -84,7 +84,7 @@ object StreamingEventTime {
           element_at(fields, 1).cast("long") % 10 === 3)
       val tMax = events.agg(max(col("t"))).head().getLong(0)
       val batched = withDef.filter(!col("deferred")).withColumn("batch",
-        least(expr(s"CAST(((t - 1L) * ${K}L) DIV ${tMax}L AS INT)"), lit(K - 1)))
+        Changelog.batchOf(K, tMax))
       val arrivals: Seq[DataFrame] =
         (0 until K).map(b => batched.filter(col("batch") === b)) :+
           withDef.filter(col("deferred"))

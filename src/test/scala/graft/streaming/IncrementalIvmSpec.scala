@@ -3,10 +3,11 @@ package graft.streaming
 import graft.SparkSpec
 import graft.operators.Relational
 
-/** The query-parametric fold (IncrementalIvm): each converged incremental
-  * answer must equal its batch query EXACTLY, and the ± cycle must cancel
-  * to exactly empty — at sf0.001, against the in-process batch plans (the
-  * driver re-checks both against DuckDB at sf0.01).
+/** Q5/Q10 as specs of the one fold ([[IncrementalQ3.step]]): each
+  * converged incremental answer must equal its batch query EXACTLY, and
+  * the ± cycle must cancel to exactly empty — at sf0.001, against the
+  * in-process batch plans (the driver re-checks both against DuckDB at
+  * sf0.01). Both also ride the fold's spill path.
   */
 class IncrementalIvmSpec extends SparkSpec {
 
@@ -59,12 +60,12 @@ class IncrementalIvmSpec extends SparkSpec {
     // (customer, revenue, cnt) it reports is reproducible from the raw
     // tables restricted to the orders whose keys appear in the state.
     val events = Changelog.generateCached(spark, sfDir, insertOnly = true)
-    val spec = IvmQueriesTestHook.q10SpecForTest
     val tMax = events.agg(org.apache.spark.sql.functions.max(
       org.apache.spark.sql.functions.col("t"))).head().getLong(0)
-    val b0 = events.filter(s"CAST(((t - 1) * 3) DIV $tMax AS INT) = 0")
-      .select("line")
-    val st = IncrementalIvm.step(IncrementalIvm.init(spark, spec), b0, spec)
+    val b0 = events.filter(Changelog.batchOf(3, tMax) === 0).select("line")
+    val st = IncrementalQ3.step(
+      IncrementalQ3.init(spark, IvmQueries.q10Grains, IvmQueries.q10Spec), b0,
+      spillDir = None)
     // state invariants: all weights are positive (insert-only), agg cnt > 0
     assert(st.c.filter(s"${ZSet.W} <= 0").isEmpty)
     assert(st.agg.filter("cnt <= 0").isEmpty)
@@ -73,29 +74,42 @@ class IncrementalIvmSpec extends SparkSpec {
       st.co("o_orderkey") === st.o("o_orderkey"), "left_anti")
     assert(orphans.isEmpty)
   }
-}
 
-/** Test-only access to the private specs (kept private in prod code — the
-  * driver surface is the two query functions).
-  */
-object IvmQueriesTestHook {
-  def q10SpecForTest: IncrementalIvm.IvmSpec = {
-    import org.apache.spark.sql.functions._
-    IncrementalIvm.IvmSpec(
-      dC = p => Changelog.customers(p).select(col("c_custkey"), col(ZSet.W)),
-      dO = p => Changelog.orders(p)
-        .filter(col("o_orderdate") >= to_date(lit("1996-01-01")) &&
-          col("o_orderdate") < to_date(lit("1996-04-01")))
-        .select(col("o_orderkey"), col("o_custkey"), col(ZSet.W)),
-      dL = p => Changelog.lineitems(p)
-        .filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey"),
-          (col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1) - col("l_discount").cast("decimal(18,2)")))
-            .cast("decimal(38,4)").as("revenue"), col(ZSet.W)),
-      coCond = col("c_custkey") === col("o_custkey"),
-      coCols = Seq("o_orderkey", "c_custkey"),
-      colCond = col("o_orderkey") === col("l_orderkey"),
-      aggKeys = Seq("c_custkey"))
+  private def spillVersions(root: String): Seq[String] =
+    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty[java.io.File])
+      .toSeq.map(_.getName).filter(_.matches("v\\d+"))
+
+  private def tempRoot(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  test("Q5 ± cycle through the spilled fold cancels to an empty aggregate and cleans up") {
+    assert(java.lang.Boolean.getBoolean("graft.strict"), "the spec relies on strict mode")
+    val events = Changelog.generateCached(spark, sfDir, insertOnly = false)
+    val root = tempRoot("graft-q5-spill")
+    // 8 batches: under a spill dir the fold compacts (and so spills) every
+    // 4th batch, so the cycle ends on a spilled state
+    val st = IncrementalQ3.runBatches(spark, events, 8, IvmQueries.q5Grains,
+      IvmQueries.q5Spec, spillDir = Some(root))
+    assert(st.spillHistory.nonEmpty, "the Q5 fold never spilled")
+    assert(spillVersions(root).nonEmpty)
+    assert(st.agg.isEmpty, "the ± cycle left groups in the maintained aggregate")
+    IncrementalQ3.cleanupSpillRoot(spark, root)
+    assert(spillVersions(root).isEmpty, s"spill versions left: ${spillVersions(root)}")
+  }
+
+  test("Q10 insert-only through the spilled fold equals the in-memory fold") {
+    val events = Changelog.generateCached(spark, sfDir, insertOnly = true)
+    def aggRows(spillDir: Option[String]): Seq[Seq[Any]] = {
+      val st = IncrementalQ3.runBatches(spark, events, 6, IvmQueries.q10Grains,
+        IvmQueries.q10Spec, spillDir = spillDir)
+      assert(st.spillHistory.nonEmpty == spillDir.nonEmpty)
+      rows(st.agg.orderBy("c_custkey"))
+    }
+    val root = tempRoot("graft-q10-spill")
+    val spilled = try aggRows(Some(root))
+    finally IncrementalQ3.cleanupSpillRoot(spark, root)
+    val inMemory = aggRows(None)
+    assert(inMemory.nonEmpty)
+    assert(spilled == inMemory)
   }
 }

@@ -59,21 +59,26 @@ class ZSetAppendSpec extends SparkSpec {
   }
 
   test("non-compacting batches keep every state one LogicalRDD leaf, and a steady step compiles nothing") {
-    val st3 = batches.take(3).foldLeft(IncrementalQ3.init(spark))(step)
-    assert(st3.dirty == 0 && st3.aggDepth == 3,
-      "the three insert-only batches were expected not to compact")
-    st3.names.zip(st3.all).foreach { case (name, df) =>
-      val plan = df.queryExecution.analyzed
-      assert(plan.isInstanceOf[LogicalRDD],
-        s"state $name is not a single pinned leaf after 3 appends:\n$plan")
+    val queries = Seq(
+      "Q3" -> IncrementalQ3.init(spark),
+      "Q10" -> IncrementalQ3.init(spark, IvmQueries.q10Grains, IvmQueries.q10Spec))
+    queries.foreach { case (query, init) =>
+      val st3 = batches.take(3).foldLeft(init)(step)
+      assert(st3.dirty == 0 && st3.aggDepth == 3,
+        s"$query: the three insert-only batches were expected not to compact")
+      st3.names.zip(st3.all).foreach { case (name, df) =>
+        val plan = df.queryExecution.analyzed
+        assert(plan.isInstanceOf[LogicalRDD],
+          s"$query: state $name is not a single pinned leaf after 3 appends:\n$plan")
+      }
+      // The 4th batch would cap the agg chain (aggDepth reaches CompactEvery);
+      // rewinding the counter keeps it a plain append, the shape of batches 2–3.
+      val before = compiles()
+      val st4 = step(st3.copy(aggDepth = st3.aggDepth - 1), batches(3))
+      val added = compiles() - before
+      assert(added == 0, s"$query: a steady non-compacting step compiled $added generated classes")
+      assert(st4.all.forall(_.queryExecution.analyzed.isInstanceOf[LogicalRDD]))
     }
-    // The 4th batch would cap the agg chain (aggDepth reaches CompactEvery);
-    // rewinding the counter keeps it a plain append, the shape of batches 2–3.
-    val before = compiles()
-    val st4 = step(st3.copy(aggDepth = st3.aggDepth - 1), batches(3))
-    val added = compiles() - before
-    assert(added == 0, s"a steady non-compacting step compiled $added generated classes")
-    assert(st4.all.forall(_.queryExecution.analyzed.isInstanceOf[LogicalRDD]))
   }
 
   test("with broadcast-delta off, append folds to the same aggregates as unionByName") {

@@ -7,6 +7,10 @@ For each query directory under <verifyOutDir>, reads the Spark-written
 parquet, runs the matching SQL from oracle_sql.json in DuckDB (with each
 fixture parquet registered as a view named after the table), and compares
 values (columns sorted by name, rows sorted by all columns).
+
+graft.Verify writes oracle entries only for the queries it ran, so an
+entry with no output directory is a query that failed to produce one: it
+is reported as missing and counted as bad.
 """
 import json
 import sys
@@ -42,6 +46,10 @@ def main() -> int:
     import glob
     import os
     qdirs = sorted(d for d in glob.glob(f"{out_dir}/*") if os.path.isdir(d))
+    missing = sorted(set(oracle) - {os.path.basename(d) for d in qdirs})
+    for name in missing:
+        print(f"  ✗ {name}: missing (no output dir)")
+    n_bad += len(missing)
     for qd in qdirs:
         name = os.path.basename(qd)
         got = pd.concat([pd.read_parquet(f)
@@ -75,7 +83,7 @@ def main() -> int:
         except AssertionError as ex:
             print(f"  ✗ {name}: VALUE MISMATCH\n{str(ex)[:800]}")
             n_bad += 1
-    print(f"== {n_ok} ok, {n_bad} bad ==")
+    print(f"== {n_ok} ok, {n_bad} bad, {len(missing)} missing ==")
     return 1 if n_bad else 0
 
 
