@@ -190,24 +190,25 @@ object SparkEntry {
     // the BOUNDED-DELAY watermark over the same replayable transport with
     // the same mid-production kill: the frontier trails by δ = nL/20, and
     // frontier + both lateness totals persist through the kill on the
-    // accounting file's id watermark — allowed-lateness bookkeeping
-    // across recovery, which is exactly where it breaks
+    // fold ledger's id watermark — allowed-lateness bookkeeping across
+    // recovery, which is exactly where it breaks
     "stream_q3_event_time_delayed_replay" ->
       (streaming.EventTimeReplay.q3EventTimeDelayedReplay _),
     // and over the PARTITIONED transport (one ordered log per relation —
     // the CDC topic layout; vector offsets, apportioned admission),
     // lateness per-partition-prefix: the only deterministic semantics a
     // partitioned broker admits, so the dropped set gates on the LAST
-    // ON-TIME LINEITEM's rank, not the single-log watermark
+    // ON-TIME LINEITEM's rank, not the single-log watermark. Same
+    // EventTimeReplay path as the single log, which is partition 0
     "stream_q3_event_time_partitioned" ->
-      (streaming.EventTimePartitioned.q3EventTimePartitioned _),
+      (streaming.EventTimeReplay.q3EventTimePartitioned _),
     // BOUNDED-DELAY × PARTITIONED (the last transport the δ-admission
     // semantics had not crossed): each partition's cutoff trails ITS OWN
     // prefix frontier by δ = nL/20 — the Kafka shape, allowed lateness
     // judged against the partition an event rides — with the per-partition
     // (wm, dropped, admitted) vector surviving the mid-production kill
     "stream_q3_event_time_delayed_partitioned" ->
-      (streaming.EventTimePartitioned.q3EventTimeDelayedPartitioned _),
+      (streaming.EventTimeReplay.q3EventTimeDelayedPartitioned _),
     // LATENESS UNDER RETRACTION: the full ± cycle with late DELETES —
     // late insert dropped + tombstoned, late delete of an applied insert
     // still retracts, late delete of a tombstoned insert dropped; a row

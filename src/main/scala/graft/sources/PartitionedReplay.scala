@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - schema is Kafka's: `(partition INT, offset LONG, value STRING)` —
   *    per-partition order is the ONLY order the transport promises, which
   *    is why event-time semantics over it must be per-partition-prefix
-  *    ([[graft.streaming.EventTimePartitioned]]).
+  *    ([[graft.streaming.EventTimeReplay]]).
   */
 class PartitionedReplayProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-replay-partitioned"

@@ -37,7 +37,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * readers — so a killed-and-restarted query resumes from its committed
   * offset and re-reads exactly the events an in-flight batch had, which is
   * what makes end-to-end exactly-once composable on top (the snapshot-skip
-  * protocol, [[graft.streaming.ReplayIngest]]). Admission control
+  * protocol, [[graft.streaming.FoldDriver]]). Admission control
   * (`ReadLimit.maxRows`) paces the stream into real micro-batches instead
   * of one giant catch-up batch.
   */

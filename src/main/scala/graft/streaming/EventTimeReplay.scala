@@ -1,43 +1,39 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sources.{ReplayProvider, ReplayServer}
+import graft.streaming.FoldDriver.{Admit, Admitted, Broker, Fold, StopAt}
 
 /** EVENT-TIME Q3 OVER THE REPLAYABLE TRANSPORT — the three pillars the
   * reference lacks (SURVEY §2.8: no event time, no recovery, no replayable
-  * ingest) composed into ONE pipeline: a GROWING replay broker
-  * ([[graft.sources.ReplayServer.serveGrowing]]) feeds the offset-tracking
-  * DSv2 source, lateness is decided by a WATERMARK, the state is
-  * snapshotted exactly-once per batch, and the query is KILLED mid-stream
-  * and resumed from checkpoint + snapshot — landing the identical oracle
-  * as the batch-simulated and file-staged event-time paths.
+  * ingest) composed into ONE pipeline: a GROWING replay broker feeds the
+  * offset-tracking DSv2 source, lateness is decided by a WATERMARK, the
+  * state is snapshotted exactly-once per batch, and the query is KILLED
+  * mid-stream and resumed from checkpoint + snapshot ([[FoldDriver.run]]).
   *
-  * The watermark here is the PREFIX watermark of the ordered transport: an
-  * event is late iff some event at a SMALLER OFFSET carried a greater
-  * event time. [[StreamingEventTime]]'s file-staged path quantizes the
-  * watermark to micro-batch boundaries (Structured Streaming's native
-  * discipline), which is only deterministic because its arrival files ARE
-  * the batches; a broker-fed query's batch boundaries are admission
-  * accidents (published-watermark races slice different runs differently),
-  * so batch-quantized lateness would be NONDETERMINISTIC — un-oracle-able.
-  * The prefix watermark is boundary-independent: it is a pure function of
-  * the stream itself (Flink-style continuous watermarks over Kafka's
-  * per-partition order have exactly this shape), so the SAME DuckDB oracle
-  * gates all three event-time paths bit-for-bit.
+  * The watermark is the PER-PARTITION PREFIX watermark of the ordered
+  * transport: an event is late iff an earlier event IN ITS OWN PARTITION
+  * carried a greater event time. A broker-fed query's batch boundaries are
+  * admission accidents, so batch-quantized lateness
+  * ([[StreamingEventTime]]'s discipline, deterministic only because its
+  * arrival files ARE the batches) would be un-oracle-able; the prefix
+  * watermark is a pure function of the partition logs — Flink-style
+  * continuous watermarks over Kafka's per-partition order (the VLDB 2021
+  * watermarks paper). A GLOBAL watermark over several partitions would
+  * depend on how the consumer interleaves them at runtime, so it is never
+  * merged. A single log is the one-partition case (partition 0), so one
+  * late split serves both transports:
   *
-  * The split is computed DISTRIBUTED, no single-partition scan: offsets
-  * are bucketed into contiguous blocks, per-block max event times (a tiny
-  * aggregate, ≤ a few hundred rows) give each block's carry-in prefix max
-  * on the driver, and a `partitionBy(block) orderBy(offset)` running max
-  * finishes the job inside each block in parallel —
-  * `late = t < max(carryIn, runningMaxWithinBlock)`.
+  *  - single log: on-time events by event time, then the withheld late
+  *    ones, one totally ordered stream — the same oracle as the batch-
+  *    simulated and file-staged event-time paths;
+  *  - partitioned: one ordered log per relation (the CDC topic layout),
+  *    vector offsets — the withheld lineitems land at the END of the
+  *    lineitem log, so one is late iff its rank precedes the last ON-TIME
+  *    lineitem's rank (the other tables' event times live in other
+  *    partitions and must not gate this one).
   */
 object EventTimeReplay {
 
@@ -48,76 +44,57 @@ object EventTimeReplay {
     */
   private val G = 4096L
 
-  /** `(lastAppliedBatchId, runningMaxEventTime, droppedLate,
-    * admittedLate)` — the accounting state, persisted atomically per
-    * batch on its own id watermark (same discipline as
-    * [[StreamingEventTime]]). `admitted` counts stragglers that fell
-    * INSIDE the allowed-lateness window of the bounded-delay variant
-    * (always 0 under the prefix watermark, whose window is empty).
-    */
-  private final case class Meta(lastId: Long, wm: Long, dropped: Long,
-                                admitted: Long)
-
-  private def loadMeta(path: String): Meta =
-    if (!Files.exists(Paths.get(path))) Meta(-1L, Long.MinValue, 0L, 0L)
-    else {
-      val Array(id, wm, d, a) = new String(Files.readAllBytes(Paths.get(path)),
-        StandardCharsets.UTF_8).trim.split("\\|")
-      Meta(id.toLong, wm.toLong, d.toLong, a.toLong)
-    }
-
-  private def saveMeta(path: String, m: Meta): Unit = {
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp, s"${m.lastId}|${m.wm}|${m.dropped}|${m.admitted}"
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Flag each event of a batch under the prefix watermark with an
-    * allowed-lateness window of `delay`:
+  /** Flag each event of a batch under the per-partition prefix watermark
+    * with an allowed-lateness window of `delay`:
     *
-    *  - frontier(e) = max(carryInWm, max{t(e') : offset(e') < offset(e)})
+    *  - frontier(e) = max(carryIn(p), max{t(e') : e' in partition p,
+    *    offset(e') < offset(e)})
     *  - `late(e)`          ⇔ t(e) < frontier(e) − delay   (DROPPED)
     *  - `late_admitted(e)` ⇔ frontier − delay ≤ t(e) < frontier
     *    (a straggler inside the window: FOLDS, but is accounted)
     *
-    * `delay = 0` is the plain prefix watermark (empty window — no event
-    * is ever `late_admitted`).
+    * `delay = 0` is the plain prefix watermark (empty window — no event is
+    * ever `late_admitted`); a partition absent from `carryIn` has seen
+    * nothing yet.
     *
-    * Input columns: `offset LONG, t LONG` (plus anything else, preserved).
-    * Distributed shape: one small aggregate (≤ rows/`blockSize` groups,
-    * collected — bounded by batch size over block size), then a window
-    * scoped to a single contiguous block. Exposed for the spec, which pins
-    * boundary-independence on hand-built out-of-order fixtures.
+    * Input columns: `partition INT, offset LONG, t LONG` (plus anything
+    * else, preserved). Distributed shape: blocks are (partition,
+    * offset-range) cells; one small aggregate (≤ rows/`blockSize` cells,
+    * collected) gives each cell's carry-in via a per-partition driver scan,
+    * and a window scoped to one cell finishes the job. Exposed for the
+    * specs, which pin boundary-independence on hand-built out-of-order
+    * fixtures.
     */
-  private[streaming] def prefixLateFlag(batch: DataFrame, carryInWm: Long,
+  private[streaming] def prefixLateFlag(batch: DataFrame,
+                                        carryIn: Map[Int, Long],
                                         blockSize: Long = G,
                                         delay: Long = 0L): DataFrame = {
     require(delay >= 0L, s"allowed lateness must be >= 0, got $delay")
     val withBlock = batch.withColumn("_blk", floor(col("offset") / blockSize))
-    // per-block max t → carry-in prefix max per block, computed on the
-    // driver over ≤ batchRows/blockSize rows (a bounded collect)
-    val blockMax = withBlock.groupBy(col("_blk")).agg(max(col("t")).as("_mx"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    var running = carryInWm
-    val carry = blockMax.map { case (b, mx) =>
-      val c = running; running = math.max(running, mx); (b, c)
+    val cells = withBlock.groupBy(col("partition"), col("_blk"))
+      .agg(max(col("t")).as("_mx")).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+    val carry = cells.groupBy(_._1).toSeq.flatMap { case (p, cs) =>
+      var running = carryIn.getOrElse(p, Long.MinValue)
+      cs.sortBy(_._2).map { case (_, b, mx) =>
+        val c = running; running = math.max(running, mx); (p, b, c)
+      }
     }
     val spark = batch.sparkSession
     import spark.implicits._
-    val carryDf = carry.toSeq.toDF("_blk", "_carry")
-    val w = Window.partitionBy(col("_blk")).orderBy(col("offset"))
+    val carryDf = carry.toDF("partition", "_blk", "_carry")
+    val w = Window.partitionBy(col("partition"), col("_blk"))
+      .orderBy(col("offset"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    // frontier = MinValue means "no event precedes this one": nothing can
-    // be late against it. The drop cutoff is guarded with CASE WHEN, not
-    // `&&`: ANSI mode + whole-stage codegen's common-subexpression
-    // elimination can hoist `frontier − delay` past a conjunct guard and
-    // throw ARITHMETIC_OVERFLOW on the MinValue sentinel; CaseWhen
-    // branches stay conditional under CSE.
+    // frontier = MinValue means "no event precedes this one in its
+    // partition": nothing can be late against it. The drop cutoff is
+    // guarded with CASE WHEN, not `&&`: ANSI mode + whole-stage codegen's
+    // common-subexpression elimination can hoist `frontier − delay` past a
+    // conjunct guard and throw ARITHMETIC_OVERFLOW on the MinValue
+    // sentinel; CaseWhen branches stay conditional under CSE.
     val frontier = greatest(col("_carry"),
       coalesce(col("_pm"), lit(Long.MinValue)))
-    withBlock.join(broadcast(carryDf), "_blk")
+    withBlock.join(broadcast(carryDf), Seq("partition", "_blk"))
       .withColumn("_pm", max(col("t")).over(w))
       .withColumn("_frontier", frontier)
       .withColumn("_cut",
@@ -129,266 +106,123 @@ object EventTimeReplay {
       .drop("_blk", "_carry", "_pm", "_frontier", "_cut")
   }
 
-  /** The arrival-ordered event stream: on-time events by event time, then
-    * the deliberately-withheld late ones — [[StreamQueries.q3EventTime]]'s
-    * exact deterministic lateness injection (`LI` with
-    * `l_orderkey % 10 == 3`), re-expressed as ONE totally-ordered stream a
-    * broker serves by offset. Lines carry their event time
-    * (`<t>\t<line>`), the way a real transport stamps records.
+  /** The fold's late split: on-time and admitted-late lines fold; the
+    * ledger takes events, dropped and admitted counts and the per-partition
+    * watermarks, all from one aggregate. The carry-in is the ledger's
+    * watermarks through the last ACCOUNTED batch, unchanged on a
+    * re-delivery — so the replayed batch recomputes the identical flags.
     */
-  private def arrivalLines(spark: SparkSession, dir: String): DataFrame = {
+  private def lateSplit(delay: Long): Admit = (batch, ledger) => {
+    val parts = split(col("value"), "\t", 2)
+    val stamped = batch.select(col("partition"), col("offset"),
+      parts.getItem(0).cast("long").as("t"), parts.getItem(1).as("line"))
+    // LAZY checkpoint: the first consumer (the fold's parse pin, or the
+    // stats aggregate on a fold-skipped re-delivery) computes and pins it
+    // in its own job; every later consumer hits the cached blocks
+    val flagged = prefixLateFlag(stamped, FoldDriver.watermarks(ledger),
+      delay = delay).localCheckpoint(eager = false)
+    Admitted(flagged.filter(!col("late")).select("line"),
+      flagged.groupBy(col("partition")).agg(
+        count(lit(1)).as("events"),
+        sum(when(col("late"), 1L).otherwise(0L)).as("dropped"),
+        sum(when(col("late_admitted"), 1L).otherwise(0L)).as("admitted"),
+        max(col("t")).as("wm")),
+      () => flagged.unpersist())
+  }
+
+  /** The arrival-ordered event logs, each line `<t>\t<line>` (event time
+    * carried with the event, the way a real transport stamps it): on-time
+    * events by event time, then the deliberately withheld late ones —
+    * [[StreamQueries.q3EventTime]]'s deterministic lateness injection
+    * (`LI` with `l_orderkey % 10 == 3`). One log, or one per relation.
+    */
+  private def arrivals(spark: SparkSession, dir: String,
+                       perRelation: Boolean): Seq[DataFrame] = {
     val events = Changelog.generateCached(spark, dir, insertOnly = true)
     val fields = split(substring(col("line"), 5, Int.MaxValue), "\\|")
-    events
-      .withColumn("deferred",
-        substring(col("line"), 2, 2) === "LI" &&
-          element_at(fields, 1).cast("long") % 10 === 3)
+    val tag = substring(col("line"), 2, 2)
+    val tagged = events.withColumn("deferred",
+      tag === "LI" && element_at(fields, 1).cast("long") % 10 === 3)
+    def log(rows: DataFrame) = rows
       .orderBy(col("deferred").asc, col("t"), col("sub"), col("idx"))
       .select(concat_ws("\t", col("t").cast("string"), col("line")).as("line"))
+    if (perRelation) Seq("CU", "OR", "LI").map(r => log(tagged.filter(tag === r)))
+    else Seq(log(tagged))
   }
 
-  // progress file (lastCountedBatchId, cumulativeEvents) — kill trigger and
-  // drain monitor, exactly-once on its own id watermark like ReplayIngest's
-  private def loadProgress(path: String): (Long, Long) =
-    if (!Files.exists(Paths.get(path))) (-1L, 0L)
-    else {
-      val Array(id, cum) = new String(Files.readAllBytes(Paths.get(path)),
-        StandardCharsets.UTF_8).trim.split("\\|")
-      (id.toLong, cum.toLong)
-    }
-
-  private def saveProgress(path: String, id: Long, cum: Long): Unit = {
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp, s"$id|$cum".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** `stream_q3_event_time_replay` — the driver query. Phase A folds ~a
-    * third and is KILLED while the broker is still producing (pinned);
+  /** `stream_q3_event_time_replay` — the single-log driver query. Phase A
+    * folds a third and is KILLED while the broker is still producing;
     * phase B resumes from checkpoint + snapshot and drains. On-time events
     * feed the Q3 IVM fold; late ones are counted, never folded. Oracle:
     * IDENTICAL to `stream_q3_event_time` / `stream_q3_event_time_live`.
     */
   def q3EventTimeReplay(spark: SparkSession, dir: String): DataFrame =
-    run(spark, dir, delay = 0L)
+    run(spark, dir, perRelation = false, delay = 0L)
 
   /** `stream_q3_event_time_delayed_replay` — the BOUNDED-DELAY watermark
-    * over the real transport (r13 verdict item 4: the δ-admission
-    * semantics existed only in the batch-simulated fold,
-    * [[StreamQueries.q3EventTimeDelayed]], and had never crossed a
-    * checkpoint/kill boundary). The watermark trails the broker's prefix
-    * frontier by δ = nL/20: a straggler within δ is ADMITTED and folds,
-    * only events more than δ behind are dropped — and the running
-    * frontier, the dropped total, and the admitted total all persist
-    * through the mid-production KILL on the accounting file's own id
+    * over the real transport: the watermark trails the prefix frontier by
+    * δ = nL/20, so a straggler within δ is ADMITTED and folds, only events
+    * more than δ behind are dropped — and the running frontier and both
+    * totals persist through the mid-production KILL on the ledger's own id
     * watermark, so the resumed query re-derives the identical admission
-    * decisions for the in-flight batch (the flags are a pure function of
-    * (offset, stream, δ) — recovery-safe by determinism, the same
-    * argument as the prefix path). Oracle: IDENTICAL to
-    * `stream_q3_event_time_delayed` — the window arithmetic must not care
-    * whether the fold survived a restart.
+    * decisions (the flags are a pure function of (offset, stream, δ)).
+    * Oracle: IDENTICAL to `stream_q3_event_time_delayed`.
     */
-  def q3EventTimeDelayedReplay(spark: SparkSession, dir: String): DataFrame = {
-    val nL = graft.sources.Tables.table(spark, dir, "lineitem").count()
-    run(spark, dir, delay = nL / 20)
-  }
+  def q3EventTimeDelayedReplay(spark: SparkSession, dir: String): DataFrame =
+    run(spark, dir, perRelation = false, delay = nL(spark, dir) / 20)
 
-  private def run(spark: SparkSession, dir: String, delay: Long): DataFrame = {
-    val ordered = arrivalLines(spark, dir)
-    // backpressure flow control, same reasoning as ReplayIngest.q3ReplayResume:
-    // the fold is slow, so only consumption-paced production makes the
-    // mid-production kill a structural guarantee, not a host-speed race;
-    // the 6-chunk window leaves room for minBatchSize-held admission
-    val handle = graft.Phase("etreplay.stage") {
-      ReplayServer.serveGrowing(ordered,
-        chunks = 24, intervalMs = 10L, maxAheadChunks = 6)
-    }
-    val work = Files.createTempDirectory("graft-etreplay").toString
-    val snapDir = s"$work/snap"
-    val spillRoot = s"$work/spill"
-    val metaFile = s"$work/meta"
-    val progressFile = s"$work/progress"
-    try {
-      val expected = handle.expected
-      require(expected > 0, "empty changelog — nothing to replay")
-      val batchSize = math.max(1L, expected / 6)
-      def startQuery(): StreamingQuery = {
-        val resumed = Snapshots.loadLatest(spark, snapDir)
-        var state = resumed.fold(IncrementalQ3.init(spark))(_._1)
-        var expectedBatch = resumed.fold(0L)(_._2 + 1)
-        StreamTune.prepare(spark)
-        spark.readStream
-          .format(classOf[ReplayProvider].getName)
-          .option("host", "127.0.0.1").option("port", handle.port.toString)
-          .option("batchSize", batchSize.toString)
-          // hold admission for a REAL batch: per-chunk admission would
-          // pay a full fold + snapshot per producer step
-          .option("minBatchSize", batchSize.toString)
-          .option("splits", "0") // 0 = adaptive per-batch fan-out (r15, guide §2)
-          .option("includeOffset", "true")
-          .load()
-          .writeStream
-          .queryName(s"graft_et_replay_${handle.port}")
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(Trigger.ProcessingTime("50 milliseconds"))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val meta = loadMeta(metaFile)
-            val parts = split(col("value"), "\t", 2)
-            // pin the parsed batch: the DSv2 frame re-executes the
-            // transport fetch per action, and the late split scans it
-            // twice (block-max probe + the flagged checkpoint)
-            val stamped = batch.select(col("offset"),
-              parts.getItem(0).cast("long").as("t"),
-              parts.getItem(1).as("line"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val phT0 = System.nanoTime()
-            // the late split at THIS batch's carry-in: meta.wm is the
-            // running max through the last ACCOUNTED batch (id-1 here on
-            // first delivery; unchanged on re-delivery, so the replayed
-            // batch recomputes the identical flags — determinism is what
-            // makes the two id watermarks composable).
-            // LAZY checkpoint (r15, guide §1.2): the eager form paid a
-            // dedicated materialization job per batch; lazily the first
-            // consumer (the fold's parse pin, or the stats aggregate on a
-            // fold-skipped re-delivery) computes-and-pins it in its own
-            // job, every later consumer hits the cached blocks. `stamped`
-            // stays persisted until then — it feeds the flag computation.
-            val flagged = graft.Phase(s"etreplay.b$id.flag") {
-              prefixLateFlag(stamped, meta.wm, delay = delay)
-                .localCheckpoint(eager = false)
-            }
-            try {
-              if (id >= expectedBatch) {
-                require(id == expectedBatch,
-                  s"batch $id delivered but IVM state is at $expectedBatch — " +
-                    "a gap would corrupt the aggregate")
-                // ADAPTIVE spill (r13 verdict item 1 — unconditional
-                // spill paid the bounded-memory envelope as pure overhead
-                // at a scale where state still fit: 63 s in-memory vs
-                // 144 s spilled at 10×): the on-time split feeds the fold
-                // with a STATE-SIZE threshold — in-memory below it,
-                // MERGEd into the bucketed tables above it, decided by
-                // the compaction-time measurement, so the 10× run stays
-                // on the heap and a 100× run engages the spill path
-                // automatically. Snapshots stay delta-sized once spilled
-                // (saveBatchAuto).
-                state = graft.Phase(s"etreplay.b$id.step") {
-                  IncrementalQ3.step(state,
-                    flagged.filter(!col("late")).select("line"),
-                    spillDir = Some(spillRoot),
-                    spillAtRows = IncrementalQ3.adaptiveSpillThreshold)
-                }
-                // state flip BEFORE the offset commit (re-delivery → skip)
-                graft.Phase(s"etreplay.b$id.snap") {
-                  Snapshots.saveBatchAuto(state, snapDir, id)
-                }
-                expectedBatch = id + 1
-              } // else: already folded into the loaded snapshot — skipped
-              // one job for all four per-batch statistics (dropped count,
-              // admitted-late count, running-max event time, total rows)
-              val statsRow = graft.Phase(s"etreplay.b$id.stats") {
-                flagged.agg(
-                  sum(when(col("late"), 1L).otherwise(0L)).as("late"),
-                  sum(when(col("late_admitted"), 1L).otherwise(0L)).as("adm"),
-                  max(col("t")).as("mx"), count(lit(1)).as("n")).head()
-              }
-              if (id > meta.lastId) {
-                val late = if (statsRow.isNullAt(0)) 0L else statsRow.getLong(0)
-                val adm = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
-                val wm2 = if (statsRow.isNullAt(2)) meta.wm
-                          else math.max(meta.wm, statsRow.getLong(2))
-                saveMeta(metaFile,
-                  Meta(id, wm2, meta.dropped + late, meta.admitted + adm))
-              }
-              // drain/kill monitor on its OWN id watermark
-              val (lastCounted, cum) = loadProgress(progressFile)
-              if (id > lastCounted)
-                saveProgress(progressFile, id, cum + statsRow.getLong(3))
-              if (graft.Phase.enabled) System.err.println(
-                f"[phase] etreplay.b$id.total: ${(System.nanoTime() - phT0) / 1e9}%.2fs")
-            } finally {
-              stamped.unpersist(blocking = false)
-              flagged.unpersist()
-            }
-          }
-          .start()
-      }
-      def seen(): Long = loadProgress(progressFile)._2
-      def await(target: Long, q: StreamingQuery, what: String): Unit = {
-        val deadline = System.nanoTime() +
-          (180L + target / 20000L) * 1000000000L
-        while (seen() < target && q.isActive &&
-               System.nanoTime() < deadline) Thread.sleep(25)
-        require(seen() >= target,
-          s"$what: saw ${seen()} of $target events before timeout " +
-            s"(query active: ${q.isActive})")
-      }
-      // phase A: fold ~a third, then KILL mid-stream, mid-PRODUCTION
-      val qa = graft.Phase("etreplay.startA") { startQuery() }
-      try {
-        graft.Phase("etreplay.phaseA") { await(expected / 3, qa, "phase A") }
-        val stagedAtKill = ReplayServer.count("127.0.0.1", handle.port)
-        require(stagedAtKill < expected,
-          "the producer finished before the kill — the arrival-driven " +
-            s"path went unexercised ($stagedAtKill of $expected staged)")
-      } finally qa.stop()
-      val afterKill = seen()
-      require(afterKill < expected,
-        "the kill must land mid-stream or the resume proves nothing " +
-          s"(saw $afterKill of $expected before restart)")
-      // phase B: restart from checkpoint + snapshot, drain to the end
-      val qb = graft.Phase("etreplay.startB") { startQuery() }
-      try graft.Phase("etreplay.phaseB") {
-        await(expected, qb, "phase B (post-resume)")
-      } finally qb.stop()
-      require(seen() == expected,
-        s"exactly-once violated at the transport: ${seen()} != $expected")
-      val meta = loadMeta(metaFile)
-      require(meta.dropped > 0, "event-time Q3 (replay): no late events " +
-        "were dropped — the deterministic lateness injection failed, the " +
-        "query is testing nothing")
+  /** `stream_q3_event_time_partitioned` — three growing partition logs,
+    * vector offsets, per-partition prefix watermarks, the kill landing
+    * mid-production, resume from checkpoint + snapshot.
+    */
+  def q3EventTimePartitioned(spark: SparkSession, dir: String): DataFrame =
+    run(spark, dir, perRelation = true, delay = 0L)
+
+  /** `stream_q3_event_time_delayed_partitioned` — the BOUNDED-DELAY
+    * watermark over the PARTITIONED transport: each partition's drop
+    * cutoff trails ITS OWN prefix frontier by δ = nL/20 — allowed lateness
+    * judged against the partition an event actually rides, never a merged
+    * clock. Oracle closed form: each withheld lineitem's frontier is m =
+    * the last ON-TIME lineitem's rank — dropped iff rk < m − δ, admitted
+    * iff m − δ ≤ rk < m.
+    */
+  def q3EventTimeDelayedPartitioned(spark: SparkSession, dir: String): DataFrame =
+    run(spark, dir, perRelation = true, delay = nL(spark, dir) / 20)
+
+  private def nL(spark: SparkSession, dir: String): Long =
+    graft.sources.Tables.table(spark, dir, "lineitem").count()
+
+  /** Both transports: 6 fold batches with ADAPTIVE spill (in-memory below
+    * the state-size threshold, bucketed-table MERGE above it), the kill at
+    * a third. The single log is the 24-chunk, 6-chunk-window broker; each
+    * partition log has 16 chunks and a 3-chunk window — each window is
+    * 3/16 OF ITS OWN LOG, so once the small customer/orders logs drain the
+    * remaining lineitem window can sit below the fold's batch, and the
+    * tail drains through the reader's delay flush.
+    */
+  private def run(spark: SparkSession, dir: String, perRelation: Boolean,
+                  delay: Long): DataFrame = {
+    val logs = arrivals(spark, dir, perRelation)
+    val broker =
+      if (perRelation) Broker(logs, chunks = 16, maxAhead = 3)
+      else Broker(logs, chunks = 24, maxAhead = 6, offsets = true)
+    FoldDriver.run(spark, "etreplay", broker,
+      fold = Some(Fold(batches = 6,
+        spillAtRows = _ => IncrementalQ3.adaptiveSpillThreshold,
+        admit = lateSplit(delay))),
+      kill = StopAt(_ / 3)) { fin =>
+      val dropped = fin.progress.getOrElse("dropped", 0L)
+      val admitted = fin.progress.getOrElse("admitted", 0L)
+      require(dropped > 0, "event-time Q3 (replay): no late events were " +
+        "dropped — the deterministic lateness injection failed, the query " +
+        "is testing nothing")
       if (delay > 0L)
-        require(meta.admitted > 0,
-          "bounded-delay event-time Q3 (replay): no straggler fell inside " +
-            "the lateness window — the δ-admission semantics went untested")
-      val st = Snapshots.loadLatest(spark, snapDir)
-        .getOrElse(sys.error("no snapshot after drain"))._1
-      // TWO-SIDED policy pin: spilled ⇔ the state warranted it. If the
-      // fold stayed in-memory, the final CONSOLIDATED state (an upper
-      // bound on every compaction-time measurement — insert-only state
-      // grows monotonically) must be under the threshold, i.e. not
-      // spilling was the policy's correct call, not a silent miss; if it
-      // spilled, the engagement latch is the crossing proof. The
-      // mid-run-crossing composition itself is gated by
-      // `stream_q3_spill_adaptive`'s data-derived threshold.
-      if (st.spillHistory.isEmpty) {
-        require(!st.spillEngaged,
-          "event-time Q3 (replay): threshold crossed but no spill version " +
-            "was written — the engagement latch is broken")
-        val consolidated = graft.Phase("etreplay.finalPin") {
-          Seq(st.c, st.o, st.l, st.co).map(f => ZSet.consolidate(f).count()).sum +
-            st.aggs.map(_._2.count()).sum
-        }
-        require(consolidated < IncrementalQ3.adaptiveSpillThreshold,
-          s"event-time Q3 (replay): state grew to $consolidated rows past " +
-            s"the ${IncrementalQ3.adaptiveSpillThreshold}-row threshold " +
-            "without engaging the spill — the adaptive policy is broken")
-      }
-      val top0 = IncrementalQ3.topN(st)
-        .select(col("l_orderkey"),
-          col("o_orderdate").cast("string").as("o_orderdate"),
-          col("o_orderpriority"), col("revenue"))
-        .withColumn("dropped_late", lit(meta.dropped))
-      val top = if (delay > 0L)
-        top0.withColumn("admitted_late", lit(meta.admitted)) else top0
-      val rows = top.collect().toIndexedSeq // materialize BEFORE cleanup
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, top.schema)
-    } finally {
-      handle.close()
-      IncrementalQ3.cleanupSpillRoot(spark, spillRoot)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
+        require(admitted > 0, "bounded-delay event-time Q3 (replay): no " +
+          "straggler fell inside the lateness window — the δ-admission " +
+          "semantics went untested")
+      FoldDriver.q3Top(fin.state,
+        Seq("dropped_late" -> dropped) ++
+          (if (delay > 0L) Seq("admitted_late" -> admitted) else Nil): _*)
     }
   }
 }

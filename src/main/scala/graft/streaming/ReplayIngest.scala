@@ -1,1162 +1,245 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.{ReplayProvider, ReplayServer}
+import graft.streaming.FoldDriver.{Broker, CrashAt, Fold, NoKill, StopAt}
 
-/** EXACTLY-ONCE over the unbounded REPLAYABLE transport (r10 verdict item
-  * 2): the changelog served by [[graft.sources.ReplayServer]] is consumed
-  * through the offset-tracking [[graft.sources.ReplayProvider]] source, the
-  * query is KILLED mid-stream and restarted from its checkpoint, and the
-  * accumulated per-(relation, action) totals must STILL equal the
-  * file-staged `changelog_counts` oracle — any lost batch under-counts,
-  * any double-applied batch over-counts, so the sum is the exactly-once
-  * proof.
+/** EXACTLY-ONCE OVER THE UNBOUNDED REPLAYABLE TRANSPORT: the changelog
+  * served by a GROWING [[graft.sources.ReplayServer]] (the stream's end
+  * does not exist when the query starts; backpressure flow control keeps
+  * the producer a bounded window ahead of the slowest consumer group) is
+  * consumed through the offset-tracking DSv2 sources, the query is KILLED
+  * mid-stream and restarted from its checkpoint, and the answer must still
+  * be the oracle's — any lost batch under-counts, any double-applied batch
+  * over-counts.
   *
-  * The protocol is the same snapshot-skip discipline as [[StreamingQ3]]'s
-  * IVM resume: the totals state is persisted (atomic tmp+rename) WITH the
-  * last folded batch id BEFORE Spark commits the batch's offsets, and a
-  * re-delivered batch (crash between the state flip and the offset-log
-  * commit — or, here, a deliberate mid-stream kill) is SKIPPED by its id.
-  * Offsets come from the source's checkpoint (event sequence numbers the
-  * replay server can re-serve), so the restarted query re-reads exactly
-  * the in-flight range — the reference has no recovery story at all
-  * (SURVEY §2.8); this is the full production composition: replayable
-  * offsets × idempotent state flip.
+  * Each composition below is a description on top of [[FoldDriver.run]],
+  * which owns the protocol: snapshot before the offset commit, re-delivered
+  * ids skipped, accounting on its own id watermark, and the structural
+  * pins (mid-production kill, exact drain, spill policy) that make the
+  * answer an exactly-once proof.
+  *
+  * Sizing: flow control bounds what is staged at the kill by
+  * `killTarget + batch (await overshoot) + batch (in-flight fetch) +
+  * window (producer run-ahead)`, which every broker below keeps < 1 of the
+  * stream on ANY host — mid-production by arithmetic, not timing. The
+  * window stays ≥ the fold's batch so admission can always accumulate a
+  * full batch without waiting on the delay flush.
   */
 object ReplayIngest {
 
-  /** `(lastFoldedBatchId, totals)` persisted atomically per batch. */
-  private final case class TotalsState(lastId: Long, totals: Map[(String, String), Long])
+  private def ordered(events: DataFrame): DataFrame =
+    events.orderBy(col("t"), col("sub"), col("idx")).select(col("line"))
 
-  private def load(path: String): TotalsState =
-    if (!Files.exists(Paths.get(path))) TotalsState(-1L, Map.empty)
-    else {
-      val lines = new String(Files.readAllBytes(Paths.get(path)),
-        StandardCharsets.UTF_8).split("\n").toSeq.filter(_.nonEmpty)
-      TotalsState(lines.head.toLong,
-        lines.tail.map { l =>
-          val Array(rel, act, n) = l.split("\\|")
-          (rel, act) -> n.toLong
-        }.toMap)
-    }
-
-  private def save(path: String, st: TotalsState): Unit = {
-    val body = (st.lastId.toString +: st.totals.toSeq.sortBy(_._1)
-      .map { case ((r, a), n) => s"$r|$a|$n" }).mkString("\n")
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** `stream_replay_exactly_once` — the driver query. Phase A consumes
-    * ~a third of the stream in paced micro-batches and is killed; phase B
-    * restarts from the checkpoint and drains to the end. Totals are
-    * folded exactly once per batch id across both phases.
+  /** `stream_replay_exactly_once` — the per-(relation, action) counts
+    * grain alone, 9 batches: phase A consumes a third and is killed while
+    * the producer is still staging (32 chunks, 4-chunk window); phase B
+    * restarts from the checkpoint and drains. The totals must equal the
+    * file-staged `changelog_counts` oracle.
     */
-  def replayExactlyOnce(spark: SparkSession, dir: String): DataFrame = {
-    val ordered = Changelog.generate(spark, dir)
-      .orderBy(col("t"), col("sub"), col("idx")).select(col("line"))
-    // ARRIVAL-DRIVEN since r12: the stream's end does not exist when the
-    // query starts — the producer stages chunk by chunk while the query
-    // consumes, so admission decisions poll a GROWING count and the
-    // phase-A kill lands while the tail is still being produced (pinned
-    // below). Backpressure flow control (producer never more than 4
-    // chunks past the consumer's read watermark) makes the
-    // mid-production kill a structural guarantee rather than a
-    // host-speed race, with no fixed time pacing to wait out.
-    val handle = ReplayServer.serveGrowing(ordered,
-      chunks = 32, intervalMs = 10L, maxAheadChunks = 4)
-    val work = Files.createTempDirectory("graft-replay-q").toString
-    val stateFile = s"$work/totals"
-    try {
-      val expected = handle.expected
-      require(expected > 0, "empty changelog — nothing to replay")
-      // ≥ 9 paced batches, so the phase-A kill lands mid-stream with
-      // several committed batches behind it and several ranges unread
-      val batchSize = math.max(1L, expected / 9)
-      StreamTune.prepare(spark)
-      def startQuery() = spark.readStream
-        .format(classOf[ReplayProvider].getName)
-        .option("host", "127.0.0.1").option("port", handle.port.toString)
-        .option("batchSize", batchSize.toString)
-        .option("minBatchSize", batchSize.toString)
-        .option("splits", "0") // 0 = adaptive per-batch fan-out (r15, guide §2)
-        .load()
-        .writeStream
-        .queryName(s"graft_replay_ingest_${handle.port}")
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.ProcessingTime("50 milliseconds"))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val st = load(stateFile)
-          if (id > st.lastId) { // re-delivered ids are SKIPPED (idempotence)
-            val rows = Changelog.parse(batch)
-              .select(
-                when(col("tag") === "CU", "customer")
-                  .when(col("tag") === "OR", "orders")
-                  .otherwise("lineitem").as("relation"),
-                when(col(ZSet.W) === 1, "Insert").otherwise("Delete").as("action"))
-              .groupBy("relation", "action").agg(count(lit(1)).as("n"))
-              .collect() // ≤ 6 rows — the per-batch summary, not the data
-            val merged = rows.foldLeft(st.totals) { (m, r) =>
-              val k = (r.getString(0), r.getString(1))
-              m.updated(k, m.getOrElse(k, 0L) + r.getLong(2))
-            }
-            // state flip BEFORE Spark's offset commit: a crash after this
-            // point re-delivers `id`, which the guard above then skips
-            save(stateFile, TotalsState(id, merged))
-          }
-        }
-        .start()
-      def totalSeen(): Long = load(stateFile).totals.values.sum
-      def awaitTotal(target: Long, q: org.apache.spark.sql.streaming.StreamingQuery,
-                     what: String): Unit = {
-        // scaled with the drain like SocketIngest's deadline (ADVICE r11):
-        // the replay transport drains faster than the socket one (parallel
-        // range fetches), but a 10× SF-N sweep on a slow host must still
-        // fit — 180 s base + 1 s per 20K events
-        val deadline = System.nanoTime() +
-          (180L + target / 20000L) * 1000000000L
-        while (totalSeen() < target && q.isActive &&
-               System.nanoTime() < deadline) Thread.sleep(25)
-        require(totalSeen() >= target,
-          s"$what: saw ${totalSeen()} of $target events before timeout " +
-            s"(query active: ${q.isActive})")
-      }
-      // phase A: ingest ~a third, then KILL the query mid-stream
-      val qa = startQuery()
-      try {
-        awaitTotal(expected / 3, qa, "phase A")
-        // capture the producer's watermark BEFORE the stop (stop itself
-        // takes time): the kill must land while the tail is still being
-        // produced, or the growing-stream behavior went unexercised
-        val stagedAtKill = ReplayServer.count("127.0.0.1", handle.port)
-        require(stagedAtKill < expected,
-          "the producer finished before the kill — the arrival-driven " +
-            s"path went unexercised ($stagedAtKill of $expected staged)")
-      } finally qa.stop()
-      val afterKill = totalSeen()
-      require(afterKill < expected,
-        "the kill must land mid-stream or the resume proves nothing " +
-          s"(saw $afterKill of $expected before restart)")
-      // phase B: restart from the checkpoint, drain to the end
-      val qb = startQuery()
-      try awaitTotal(expected, qb, "phase B (post-resume)") finally qb.stop()
-      val fin = load(stateFile)
-      require(fin.totals.values.sum == expected,
-        s"exactly-once violated: ${fin.totals.values.sum} != $expected")
-      import spark.implicits._
-      fin.totals.toSeq
-        .map { case ((rel, act), n) => (rel, act, n) }
-        .toDF("relation", "action", "n")
-        .orderBy("relation", "action")
-    } finally {
-      handle.close()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
+  def replayExactlyOnce(spark: SparkSession, dir: String): DataFrame =
+    FoldDriver.run(spark, "replay_ingest",
+      Broker(Seq(ordered(Changelog.generate(spark, dir))), chunks = 32, maxAhead = 4),
+      fold = None, counts = true, kill = StopAt(_ / 3)) { fin =>
+      FoldDriver.countsFrame(spark, fin.counts)
     }
-  }
-
-  // --- the full production composition: replay → IVM fold → kill → resume
-
-  /** Atomic per-query progress file `(lastCountedBatchId,
-    * cumulativeEvents, cumulativeDeletes)` — the kill trigger and the
-    * drain monitor for [[q3ReplayResume]]. Counted with the same
-    * exactly-once discipline as the fold (skip by batch id), but on its
-    * OWN id watermark: a crash between the state snapshot flip and this
-    * counter's write re-delivers a batch the FOLD skips while the COUNTER
-    * still takes it — each side exactly once. The delete count is what
-    * pins the full-cycle kill to the TEARDOWN phase structurally.
-    */
-  private def loadProgress(path: String): (Long, Long, Long) =
-    if (!Files.exists(Paths.get(path))) (-1L, 0L, 0L)
-    else {
-      val Array(id, cum, dels) = new String(Files.readAllBytes(Paths.get(path)),
-        StandardCharsets.UTF_8).trim.split("\\|")
-      (id.toLong, cum.toLong, dels.toLong)
-    }
-
-  private def saveProgress(path: String, id: Long, cum: Long, dels: Long): Unit = {
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp, s"$id|$cum|$dels".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
 
   /** `stream_q3_replay_resume` — EXACTLY-ONCE Q3 IVM OVER THE REPLAY
-    * TRANSPORT, the full production pipeline run as ONE composition (r11
-    * verdict item 1; every piece existed, they had never run together):
-    *
-    *  - transport: [[graft.sources.ReplayProvider]], the offset-tracking
-    *    DSv2 source over the replay server (checkpointed offsets = event
-    *    sequence numbers the server re-serves on demand) — and since r12
-    *    the broker GROWS while the fold runs
-    *    ([[graft.sources.ReplayServer.serveGrowing]] with backpressure
-    *    flow control), so the stream's end does not exist at start and
-    *    the kill provably lands while the tail is still being produced;
-    *  - fold: [[IncrementalQ3.step]] per micro-batch, WITH the bucketed-
-    *    table state spill engaged (the bounded-memory path — compaction
-    *    MERGEs into spill tables mid-stream, exactly like
-    *    `stream_q3_spilled`);
-    *  - recovery: [[StreamingQ3]]'s snapshot-skip discipline — the state
-    *    is durably snapshotted with its batch id BEFORE Spark commits the
-    *    batch's offsets ([[Snapshots.saveBatch]]), and a re-delivered
-    *    batch is skipped by id;
-    *  - the KILL: phase A is stopped mid-stream (several batches folded,
-    *    several unread, possibly one in flight); phase B restarts from
-    *    checkpoint + snapshot and drains to the end.
+    * TRANSPORT, the full production pipeline as ONE composition: growing
+    * broker → DSv2 micro-batches → [[IncrementalQ3.step]] with the
+    * bucketed-table spill engaged (compaction MERGEs into spill tables
+    * mid-stream) → snapshot before the offset commit → kill at a third →
+    * resume from checkpoint + snapshot → drain.
     *
     * The insert-only changelog makes the converged answer the batch Q3
-    * top-20 — bit-equal to the DuckDB oracle (`stream_q3_converged`'s
-    * SQL): a lost batch loses revenue, a double-applied one doubles it,
-    * so the oracle match IS the exactly-once proof over the full fold,
-    * not just the counts grain ([[replayExactlyOnce]]).
+    * top-20 — bit-equal to the DuckDB oracle: a lost batch loses revenue,
+    * a double-applied one doubles it, so the oracle match IS the
+    * exactly-once proof over the full fold. Sizing: 6 batches, 6-chunk
+    * window → 1/3 + 1/6 + 1/6 + 1/4 = 0.917.
     */
   def q3ReplayResume(spark: SparkSession, dir: String): DataFrame =
     q3ReplayRun(spark, dir, fullCycle = false)
 
-  /** `stream_q3_replay_resume_cycle` — RETRACTION THROUGH RECOVERY, the
-    * r12 verdict's top item: the same replay transport × spilled IVM fold
-    * × delta snapshots composition as [[q3ReplayResume]], but over the
-    * FULL insert+delete changelog (capacity-windowed at nL/4 so deletes
-    * interleave from early on, the `stream_q3_spilled` shape), with the
-    * KILL PINNED TO THE TEARDOWN: phase A is stopped only after the
-    * progress counter has seen deletes folded (structural `require`, not
-    * timing) and while deletes remain unfolded — so the resume crosses a
-    * snapshot/offset boundary with retraction state in flight on BOTH
-    * sides. Every prior resume proof was insert-only; sign-handling bugs
-    * across a snapshot boundary are precisely where IVM resume breaks.
-    *
-    * The converged answer is EXACTLY EMPTY (every insert is eventually
-    * retracted; exact-decimal ± pairs cancel to 0, not ≈0) — with the
-    * transport's exactly-once count pinned separately, a lost DELETE
-    * batch leaves positive residue, a lost INSERT batch negative residue,
-    * a double-applied one either sign: the empty oracle plus the count
-    * equality IS the retraction-through-recovery proof.
+  /** `stream_q3_replay_resume_cycle` — RETRACTION THROUGH RECOVERY: the
+    * same composition over the capacity-windowed FULL ± changelog
+    * ([[Changelog.windowed]]), with the kill PINNED TO THE TEARDOWN —
+    * deletes folded before the kill AND deletes left after it (structural,
+    * from the ledger), so the resume crosses a snapshot/offset boundary
+    * with retraction state in flight on both sides. The spill root is
+    * FORMAT-pinned to the mergelog (manifest MERGE + refcounted GC + delta
+    * snapshots end to end). The converged answer is EXACTLY EMPTY: a lost
+    * DELETE batch leaves positive residue, a lost INSERT batch negative,
+    * a double-applied one either sign. Sizing: kill at 4/9, 8 batches,
+    * 4-chunk window → 4/9 + 1/8 + 1/8 + 1/6 = 0.86.
     */
   def q3ReplayResumeCycle(spark: SparkSession, dir: String): DataFrame =
     q3ReplayRun(spark, dir, fullCycle = true)
 
-  /** `stream_q3_two_consumers` — TWO CONSUMER GROUPS, ONE BROKER (r12
-    * verdict item 4): the Q3 IVM fold and the per-(relation,action)
-    * counts grain run as two CONCURRENT streaming queries over a single
-    * growing [[ReplayServer]], each with its own checkpointed offsets and
-    * its own cadence (different batch sizes), with the broker's
-    * backpressure flow control keyed to the SLOWEST group's read
-    * watermark. The multi-grain fold already proved multi-query IVM off
-    * one ΔJ; this is the transport-side dual — consumer groups, the last
-    * broker behavior the DSv2 seam hid.
-    *
-    * The min-keying is pinned STRUCTURALLY, not by timing: once the slow
-    * fold has consumed a third of the stream, the staged count must still
-    * be short of the end. The fast counts consumer stays at most one
-    * admission behind the published watermark throughout, so if flow
-    * control keyed to the fastest (or max) group, production would have
-    * raced to the end long before the fold reached a third; keyed to the
-    * min it is bounded by foldWatermark + maxAheadChunks·chunk < end on
-    * ANY host. Both queries then drain and must land their own oracles:
-    * the fold the batch Q3 top-20, the counts grain the exact event
-    * total, carried as a constant column.
+  private def q3ReplayRun(spark: SparkSession, dir: String,
+                          fullCycle: Boolean): DataFrame = {
+    val events =
+      if (fullCycle) Changelog.windowed(spark, dir)
+      else Changelog.generate(spark, dir, insertOnly = true)
+    FoldDriver.run(spark, "replay_q3",
+      Broker(Seq(ordered(events)), chunks = 24, maxAhead = if (fullCycle) 4 else 6),
+      fold = Some(Fold(batches = if (fullCycle) 8 else 6, spillAtRows = _ => 0L,
+        format = if (fullCycle) Some("mergelog") else None)),
+      kill = StopAt(if (fullCycle) 4 * _ / 9 else _ / 3),
+      cycle = fullCycle)(fin => FoldDriver.q3Top(fin.state))
+  }
+
+  /** `stream_q3_two_consumers` — TWO CONSUMER GROUPS, ONE BROKER: the Q3
+    * IVM fold and the counts grain run as two CONCURRENT queries over one
+    * growing broker, each with its own checkpointed offsets and cadence,
+    * with flow control keyed to the SLOWEST group's read watermark —
+    * pinned STRUCTURALLY (the producer's window bound against the minimum
+    * watermark when the slow fold reaches a third; max-keyed pacing would
+    * have raced production to the end). Both drain and land their own
+    * oracles: the fold the batch Q3 top-20, the counts grain the exact
+    * event total, carried as a constant column.
     */
   def q3TwoConsumers(spark: SparkSession, dir: String): DataFrame =
     twoConsumersRun(spark, dir, fullCycle = false, killResume = false)
 
   /** `stream_q3_two_consumers_resume` — CONSUMER-GROUP KILL/RESUME WITH
-    * SESSION EVICTION (r14 item 2): the same two-group broker, but the
-    * FOLD group is KILLED mid-stream while the counts group keeps
-    * draining. Without liveness this deadlocks by design — the broker
-    * paces on the slowest registered group and a dead group's watermark
-    * never moves; with `sessionTimeoutMs` the dead group is EVICTED after
-    * its heartbeats stop, production provably ADVANCES past the dead
-    * group's flow-control window while it is down (structural pin: the
-    * await target exceeds what min-keyed pacing on the frozen watermark
-    * could ever stage), and the resumed fold re-admits on reconnect,
-    * catches up from its checkpoint + snapshot, and still lands the batch
-    * Q3 oracle. Heartbeats are a consumer-side daemon
-    * ([[graft.sources.ReplayServer.heartbeat]]) — Kafka's model, which is
-    * what distinguishes "alive but mid-batch" from "dead".
+    * SESSION EVICTION: the FOLD group is KILLED mid-stream while the counts
+    * group keeps draining. Without liveness this deadlocks by design (the
+    * broker paces on the slowest registered group, and a dead group's
+    * watermark never moves); with a session timeout the dead group is
+    * EVICTED once its heartbeats stop ([[graft.sources.ReplayServer.heartbeat]],
+    * Kafka's model — "alive but mid-batch" vs "dead"), production provably
+    * ADVANCES past its window while it is down, and the resumed fold
+    * re-admits, catches up from checkpoint + snapshot, and still lands the
+    * batch Q3 oracle.
     */
   def q3TwoConsumersResume(spark: SparkSession, dir: String): DataFrame =
     twoConsumersRun(spark, dir, fullCycle = false, killResume = true)
 
-  /** `stream_q3_two_consumers_cycle` — CONSUMER GROUPS × RETRACTION (r14
-    * item 3, the last untested transport×semantics cell): both grains run
-    * over ONE growing broker serving the capacity-windowed FULL ± cycle.
-    * The fold's converged aggregate must cancel to EXACTLY EMPTY
-    * (required in-query — exact-decimal ± pairs, not ≈0), and the
-    * returned per-(relation, action) totals gate on the closed-form
-    * DuckDB counts oracle: every relation's Insert and Delete totals both
-    * equal its table cardinality, so a lost or double-applied batch on
-    * EITHER side of either group's offsets is a loud mismatch.
+  /** `stream_q3_two_consumers_cycle` — CONSUMER GROUPS × RETRACTION: both
+    * grains over ONE broker serving the capacity-windowed FULL ± cycle.
+    * The fold's converged aggregate must cancel to EXACTLY EMPTY (pinned
+    * in-query), and the returned per-(relation, action) totals gate on the
+    * closed-form counts oracle: every relation's Insert and Delete totals
+    * both equal its table cardinality.
     */
   def q3TwoConsumersCycle(spark: SparkSession, dir: String): DataFrame =
     twoConsumersRun(spark, dir, fullCycle = true, killResume = false)
 
   /** `stream_q3_two_consumers_cycle_resume` — the FULL MATRIX CELL:
-    * consumer groups × retraction × kill/resume × eviction in one
-    * composition. The fold group is killed MID-TEARDOWN (structural
-    * delete pins from its exactly-once progress counter: deletes folded
-    * before the kill AND deletes left to fold), the broker evicts it so
-    * the counts group keeps draining the ± stream, and the resumed group
-    * re-admits, replays its in-flight range, and still converges to
-    * EXACTLY EMPTY — retraction state crossing a snapshot/offset boundary
-    * while a second group's offsets advance independently. Counts oracle
-    * + exact-empty pin, same as the kill-free cycle.
+    * consumer groups × retraction × kill/resume × eviction. The fold group
+    * is killed MID-TEARDOWN (the delete pins), evicted so the counts group
+    * keeps draining the ± stream, resumed, and still converges to EXACTLY
+    * EMPTY — retraction state crossing a snapshot/offset boundary while a
+    * second group's offsets advance independently. Sizing: kill at 4/9,
+    * 8 fold batches, 4-chunk window → 4/9 + 1/8 + 1/8 + 5/24 = 0.90.
     */
   def q3TwoConsumersCycleResume(spark: SparkSession, dir: String): DataFrame =
     twoConsumersRun(spark, dir, fullCycle = true, killResume = true)
 
   /** `stream_q3_two_consumers_partitioned` — CONSUMER GROUPS × THE
-    * PARTITIONED TRANSPORT, the transport×groups cell the single-log
-    * variants leave open. A Kafka consumer group's session is tracked PER
-    * PARTITION (each broker owning a partition sees its own heartbeats and
-    * fetches); this query runs the Q3 IVM fold and the counts grain as two
-    * groups over the three-partition CDC topic layout (one ordered log per
-    * relation, [[graft.sources.PartitionedReplayProvider]] with vector
-    * offsets), so flow control, session liveness, and eviction all operate
-    * per partition:
-    *
-    *  - each partition's producer paces on the slowest LIVE group's
-    *    watermark AT THAT PARTITION (min-keyed, as the single-log broker —
-    *    but three independent control loops);
-    *  - the fold group is KILLED mid-stream (query + its three per-
-    *    partition heartbeats), and after the session timeout EVERY
-    *    partition must evict it: the liveness pin requires production to
-    *    advance past the dead group's flow-control window on EACH
-    *    partition independently, while the counts group keeps draining;
-    *  - the resumed fold re-admits on all three partitions (watermarks
-    *    retained), catches up from its checkpointed VECTOR offset + state
-    *    snapshot, and must land the batch Q3 top-20 — the z-set fold is
-    *    arrival-order-invariant across relations, so the apportioned
-    *    cross-partition interleave (an admission accident) cannot move
-    *    the converged answer.
+    * PARTITIONED TRANSPORT: the two groups over the three-partition CDC
+    * topic layout (one ordered log per relation, vector offsets), so flow
+    * control, session liveness and eviction all operate PER PARTITION —
+    * three independent control loops. The fold group is killed at a
+    * quarter (query + its three per-partition heartbeats), EVERY partition
+    * must evict it independently while the counts group drains, and the
+    * resumed fold re-admits on all three and lands the batch Q3 top-20 —
+    * the z-set fold is arrival-order-invariant across relations, so the
+    * apportioned interleave cannot move the answer. Sizing: 6 fold batches,
+    * 16 chunks, 3-chunk windows → 1/4 + 1/6 + 1/6 + 3/16 ≈ 0.77.
     */
   def q3TwoConsumersPartitioned(spark: SparkSession, dir: String): DataFrame = {
     val events = Changelog.generateCached(spark, dir, insertOnly = true)
-    def log(tag: String) = events
-      .filter(substring(col("line"), 2, 2) === tag)
-      .orderBy(col("t"), col("sub"), col("idx")).select(col("line"))
-    val logs = Seq(log("CU"), log("OR"), log("LI"))
-    // per-partition flow control: 16 chunks, 3-chunk window each. The kill
-    // lands at 1/4 consumed with 6 global fold batches; worst-case staged
-    // ≈ 1/4 + 1/6 (await overshoot) + 1/6 (in-flight) + 3/16 (windows)
-    // ≈ 0.77 · expected — mid-production by arithmetic, not timing.
-    val handles = logs.map(l => ReplayServer.serveGrowing(l,
-      chunks = 16, intervalMs = 10L, maxAheadChunks = 3,
-      groups = Seq("fold", "counts"), sessionTimeoutMs = 3000L))
-    val work = Files.createTempDirectory("graft-replay-2cp").toString
-    val snapDir = s"$work/snap"
-    val spillRoot = s"$work/spill"
-    val progressFile = s"$work/progress"
-    val totalsFile = s"$work/totals"
-    try {
-      val expected = handles.map(_.expected).sum
-      require(expected > 0, "empty changelog — nothing to replay")
-      val chunks = handles.map(h => math.max(1L, h.expected / 16))
-      val foldBatch = math.max(1L, expected / 6)
-      val countsBatch = math.max(1L, expected / 9)
-      StreamTune.prepare(spark)
-      def reader(group: String, batchSize: Long) = spark.readStream
-        .format(classOf[graft.sources.PartitionedReplayProvider].getName)
-        .option("host", "127.0.0.1")
-        .option("ports", handles.map(_.port).mkString(","))
-        .option("batchSize", batchSize.toString)
-        .option("minBatchSize", batchSize.toString)
-        // tail-drain contract (EventTimePartitioned's): once the small
-        // customer/orders partitions drain, the remaining lineitem window
-        // (~3/16 of its log) can sit below the global minBatchSize —
-        // bound the hold explicitly
-        .option("maxTriggerDelayMs", "500")
-        .option("group", group)
-        .load()
-      def startFold(): org.apache.spark.sql.streaming.StreamingQuery = {
-        val resumed = Snapshots.loadLatest(spark, snapDir)
-        var state = resumed.fold(IncrementalQ3.init(spark))(_._1)
-        var expectedBatch = resumed.fold(0L)(_._2 + 1)
-        reader("fold", foldBatch).writeStream
-          .queryName(s"graft_2cp_fold_${handles.head.port}")
-          .option("checkpointLocation", s"$work/ckpt_fold")
-          .trigger(Trigger.ProcessingTime("50 milliseconds"))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val pinned = batch
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              if (id >= expectedBatch) {
-                require(id == expectedBatch,
-                  s"batch $id delivered but IVM state is at $expectedBatch")
-                // adaptive spill, the session policy — see twoConsumersRun
-                state = IncrementalQ3.step(state,
-                  pinned.select(col("value")),
-                  spillDir = Some(spillRoot),
-                  spillAtRows = IncrementalQ3.adaptiveSpillThreshold)
-                Snapshots.saveBatchAuto(state, snapDir, id)
-                expectedBatch = id + 1
-              }
-              val (lastCounted, cum, _) = loadProgress(progressFile)
-              if (id > lastCounted)
-                saveProgress(progressFile, id, cum + pinned.count(), 0L)
-            } finally pinned.unpersist(blocking = false)
-          }
-          .start()
-      }
-      var qFold = startFold()
-      // per-partition sessions: the fold group heartbeats EACH partition's
-      // broker (Kafka's per-broker group coordinator shape); all three
-      // stop with the kill, so every partition sees the same silence
-      var foldPulses: Seq[AutoCloseable] = handles.map(h =>
-        ReplayServer.heartbeat("127.0.0.1", h.port, "fold"))
-      val qCounts = reader("counts", countsBatch).writeStream
-        .queryName(s"graft_2cp_counts_${handles.head.port}")
-        .option("checkpointLocation", s"$work/ckpt_counts")
-        .trigger(Trigger.ProcessingTime("50 milliseconds"))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val st = load(totalsFile)
-          if (id > st.lastId) {
-            val rows = Changelog.parse(batch)
-              .select(
-                when(col("tag") === "CU", "customer")
-                  .when(col("tag") === "OR", "orders")
-                  .otherwise("lineitem").as("relation"),
-                when(col(ZSet.W) === 1, "Insert").otherwise("Delete").as("action"))
-              .groupBy("relation", "action").agg(count(lit(1)).as("n"))
-              .collect()
-            val merged = rows.foldLeft(st.totals) { (m, r) =>
-              val k = (r.getString(0), r.getString(1))
-              m.updated(k, m.getOrElse(k, 0L) + r.getLong(2))
-            }
-            save(totalsFile, TotalsState(id, merged))
-          }
-        }
-        .start()
-      def foldSeen(): Long = loadProgress(progressFile)._2
-      def countsSeen(): Long = load(totalsFile).totals.values.sum
-      def stagedOf(i: Int): Long =
-        ReplayServer.count("127.0.0.1", handles(i).port)
-      try {
-        val deadline = System.nanoTime() +
-          (300L + 2 * expected / 20000L) * 1000000000L
-        // phase A: fold ~a quarter, then KILL the fold group — query and
-        // all three per-partition heartbeats
-        while (foldSeen() < expected / 4 && qFold.isActive &&
-               System.nanoTime() < deadline) Thread.sleep(25)
-        require(foldSeen() >= expected / 4,
-          s"fold consumer stalled pre-kill: ${foldSeen()} of $expected")
-        val foldServedAtKill = handles.indices.map(i =>
-          ReplayServer.servedOf("127.0.0.1", handles(i).port, "fold"))
-        val stagedAtKill = handles.indices.map(stagedOf).sum
-        require(stagedAtKill < expected,
-          "the producers finished before the kill — the dead-group stall " +
-            s"never threatened ($stagedAtKill of $expected staged)")
-        qFold.stop()
-        foldPulses.foreach(_.close()); foldPulses = Nil
-        // THE PER-PARTITION LIVENESS PIN: while the fold group is down,
-        // EVERY partition's producer must advance past the dead group's
-        // flow-control window at that partition — impossible while its
-        // frozen watermark still paces, so reaching all three targets
-        // proves all three evictions (one un-evicted partition would
-        // stall its own producer forever and fail this loudly)
-        val advanceTargets = handles.indices.map(i =>
-          math.min(handles(i).expected,
-            foldServedAtKill(i) + 5 * chunks(i) + 1))
-        while (handles.indices.exists(i => stagedOf(i) < advanceTargets(i)) &&
-               System.nanoTime() < deadline) Thread.sleep(25)
-        handles.indices.foreach { i =>
-          val staged = stagedOf(i)
-          require(staged >= advanceTargets(i),
-            s"partition $i did not advance while the dead group was " +
-              s"down — per-partition eviction failed (staged=$staged, " +
-              s"target=${advanceTargets(i)}, " +
-              s"foldServedAtKill=${foldServedAtKill(i)})")
-        }
-        // resume: re-admitted on all three partitions, vector offsets +
-        // snapshot catch-up
-        qFold = startFold()
-        foldPulses = handles.map(h =>
-          ReplayServer.heartbeat("127.0.0.1", h.port, "fold"))
-        while ((foldSeen() < expected || countsSeen() < expected) &&
-               qFold.isActive && qCounts.isActive &&
-               System.nanoTime() < deadline) Thread.sleep(25)
-        require(foldSeen() == expected && countsSeen() == expected,
-          s"drain incomplete: fold=${foldSeen()} counts=${countsSeen()} " +
-            s"of $expected")
-      } finally {
-        qFold.stop(); qCounts.stop()
-        foldPulses.foreach(_.close())
-      }
-      val fin = Snapshots.loadLatest(spark, snapDir)
-        .getOrElse(sys.error("no snapshot after drain"))._1
-      // two-sided adaptive-policy pin, as everywhere the policy runs
-      if (fin.spillHistory.isEmpty) {
-        require(!fin.spillEngaged,
-          "partitioned two-consumer fold: threshold crossed but no spill " +
-            "version was written — the engagement latch is broken")
-        val consolidated =
-          Seq(fin.c, fin.o, fin.l, fin.co)
-            .map(f => ZSet.consolidate(f).count()).sum +
-            fin.aggs.map(_._2.count()).sum
-        require(consolidated < IncrementalQ3.adaptiveSpillThreshold,
-          s"partitioned two-consumer fold: state grew to $consolidated " +
-            s"rows past the ${IncrementalQ3.adaptiveSpillThreshold}-row " +
-            "threshold without engaging the spill — the policy is broken")
-      }
-      val top = IncrementalQ3.topN(fin)
-        .select(col("l_orderkey"),
-          col("o_orderdate").cast("string").as("o_orderdate"),
-          col("o_orderpriority"), col("revenue"))
-        .withColumn("ingest_events", lit(countsSeen()))
-      val rows = top.collect().toIndexedSeq
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, top.schema)
-    } finally {
-      handles.foreach(_.close())
-      IncrementalQ3.cleanupSpillRoot(spark, spillRoot)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+    val logs = Seq("CU", "OR", "LI")
+      .map(tag => ordered(events.filter(substring(col("line"), 2, 2) === tag)))
+    consumerGroups(spark, Broker(logs, chunks = 16, maxAhead = 3,
+      sessionTimeoutMs = 3000L), cycle = false, kill = StopAt(_ / 4))
   }
 
   private def twoConsumersRun(spark: SparkSession, dir: String,
                               fullCycle: Boolean,
                               killResume: Boolean): DataFrame = {
     val events =
-      if (fullCycle) {
-        // the same capacity-windowed staging as q3ReplayRun(fullCycle) —
-        // deletes interleave from nL/4 on, shared across the session
-        val staged = graft.sources.Staging.ensure(
-          graft.sources.Staging.dirFor(spark, "q3spill", dir)) { out =>
-          val nL = graft.sources.Tables.table(spark, dir, "lineitem").count()
-          Changelog.generate(spark, dir, capacity = Some(math.max(1L, nL / 4)))
-            .write.mode("overwrite").parquet(out)
-        }
-        spark.read.parquet(staged)
-      } else Changelog.generate(spark, dir, insertOnly = true)
-    val ordered = events
-      .orderBy(col("t"), col("sub"), col("idx")).select(col("line"))
+      if (fullCycle) Changelog.windowed(spark, dir)
+      else Changelog.generate(spark, dir, insertOnly = true)
     // eviction only where the contract needs it: the kill/resume variants
-    // prove liveness; the kill-free variants keep registered groups
-    // pacing forever (a paused-but-alive consumer must NOT be dropped
-    // there — that is exactly the min-keyed guarantee they pin). The
-    // cycle×kill window is tightened to keep the mid-production bound
-    // under 1 (kill at 4/9, 8 fold batches, 4-chunk window:
-    // 4/9 + 1/8 + 1/8 + 5/24 = 0.90 worst case — q3ReplayRun's sizing
-    // argument).
-    val maxAhead = if (fullCycle && killResume) 4 else 6
-    val handle = ReplayServer.serveGrowing(ordered,
-      chunks = 24, intervalMs = 10L, maxAheadChunks = maxAhead,
-      groups = Seq("fold", "counts"),
-      sessionTimeoutMs = if (killResume) 3000L else 0L)
-    val work = Files.createTempDirectory("graft-replay-2c").toString
-    val snapDir = s"$work/snap"
-    val spillRoot = s"$work/spill"
-    val progressFile = s"$work/progress"
-    val totalsFile = s"$work/totals"
-    try {
-      val expected = handle.expected
-      require(expected > 0, "empty changelog — nothing to replay")
-      val chunk = math.max(1L, expected / 24)
-      val foldBatch = math.max(1L, expected / (if (fullCycle) 8 else 6))
-      val countsBatch = math.max(1L, expected / 9)
-      StreamTune.prepare(spark)
-      def reader(group: String, batchSize: Long) = spark.readStream
-        .format(classOf[ReplayProvider].getName)
-        .option("host", "127.0.0.1").option("port", handle.port.toString)
-        .option("batchSize", batchSize.toString)
-        .option("minBatchSize", batchSize.toString)
-        .option("splits", "0") // 0 = adaptive per-batch fan-out (r15, guide §2)
-        .option("group", group)
-        .load()
-      // consumer group "fold": the Q3 IVM fold with snapshot-skip
-      // exactly-once (restartable: state loads from the latest snapshot,
-      // re-delivered ids are skipped — the kill/resume variant stops and
-      // relaunches this query mid-stream)
-      def startFold(): org.apache.spark.sql.streaming.StreamingQuery = {
-        val resumed = Snapshots.loadLatest(spark, snapDir)
-        var state = resumed.fold(IncrementalQ3.init(spark))(_._1)
-        var expectedBatch = resumed.fold(0L)(_._2 + 1)
-        reader("fold", foldBatch).writeStream
-          .queryName(s"graft_2c_fold_${handle.port}")
-          .option("checkpointLocation", s"$work/ckpt_fold")
-          .trigger(Trigger.ProcessingTime("50 milliseconds"))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val pinned = batch
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              if (id >= expectedBatch) {
-                require(id == expectedBatch,
-                  s"batch $id delivered but IVM state is at $expectedBatch")
-                // ADAPTIVE spill, the session policy: in-memory below the
-                // state-size threshold (bench scales), bucketed-table
-                // MERGE above it — every transport-fed fold carries the
-                // bounded-memory path
-                state = IncrementalQ3.step(state, pinned,
-                  spillDir = Some(spillRoot),
-                  spillAtRows = IncrementalQ3.adaptiveSpillThreshold)
-                Snapshots.saveBatchAuto(state, snapDir, id)
-                expectedBatch = id + 1
-              }
-              // drain/kill monitor on its own id watermark; the delete
-              // count is what pins the cycle×kill to the TEARDOWN phase
-              val (lastCounted, cum, dels) = loadProgress(progressFile)
-              if (id > lastCounted) {
-                val s = pinned.agg(count(lit(1)).as("n"),
-                  sum(when(substring(col("value"), 1, 1) === "-", 1L)
-                    .otherwise(0L)).as("d")).head()
-                saveProgress(progressFile, id, cum + s.getLong(0),
-                  dels + (if (s.isNullAt(1)) 0L else s.getLong(1)))
-              }
-            } finally pinned.unpersist(blocking = false)
-          }
-          .start()
-      }
-      var qFold = startFold()
-      // the fold's session heartbeat (kill/resume only — the timeout-free
-      // variants have nothing to evict): stopped WITH the query, so the
-      // broker sees the kill as silence, not a clean goodbye
-      var foldPulse: Option[AutoCloseable] =
-        if (killResume) Some(ReplayServer.heartbeat(
-          "127.0.0.1", handle.port, "fold")) else None
-      // consumer group "counts": the per-(relation, action) totals grain,
-      // same exactly-once fold as [[replayExactlyOnce]], its own offsets
-      val qCounts = reader("counts", countsBatch).writeStream
-        .queryName(s"graft_2c_counts_${handle.port}")
-        .option("checkpointLocation", s"$work/ckpt_counts")
-        .trigger(Trigger.ProcessingTime("50 milliseconds"))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val st = load(totalsFile)
-          if (id > st.lastId) {
-            val rows = Changelog.parse(batch)
-              .select(
-                when(col("tag") === "CU", "customer")
-                  .when(col("tag") === "OR", "orders")
-                  .otherwise("lineitem").as("relation"),
-                when(col(ZSet.W) === 1, "Insert").otherwise("Delete").as("action"))
-              .groupBy("relation", "action").agg(count(lit(1)).as("n"))
-              .collect()
-            val merged = rows.foldLeft(st.totals) { (m, r) =>
-              val k = (r.getString(0), r.getString(1))
-              m.updated(k, m.getOrElse(k, 0L) + r.getLong(2))
-            }
-            save(totalsFile, TotalsState(id, merged))
-          }
-        }
-        .start()
-      def foldSeen(): Long = loadProgress(progressFile)._2
-      def countsSeen(): Long = load(totalsFile).totals.values.sum
-      try {
-        val deadline = System.nanoTime() +
-          (300L + 2 * expected / 20000L) * 1000000000L
-        if (killResume) {
-          // phase A: fold ~a quarter (insert-only) or ~4/9 (full cycle —
-          // deep enough into the teardown that deletes are folded on both
-          // sides of the kill), then KILL the fold group (query +
-          // heartbeat) while the counts group keeps draining
-          val killTarget = if (fullCycle) 4 * expected / 9 else expected / 4
-          while (foldSeen() < killTarget && qFold.isActive &&
-                 System.nanoTime() < deadline) Thread.sleep(25)
-          require(foldSeen() >= killTarget,
-            s"fold consumer stalled pre-kill: ${foldSeen()} of $expected")
-          val foldServedAtKill =
-            ReplayServer.servedOf("127.0.0.1", handle.port, "fold")
-          val stagedAtKill = ReplayServer.count("127.0.0.1", handle.port)
-          require(stagedAtKill < expected,
-            "the producer finished before the kill — the dead-group " +
-              s"stall never threatened ($stagedAtKill of $expected staged)")
-          qFold.stop()
-          foldPulse.foreach(_.close()); foldPulse = None
-          if (fullCycle) {
-            // the TEARDOWN pins (structural, from the exactly-once
-            // counter): retraction folded into the killed state AND
-            // retraction left for the resumed fold — same contract as
-            // q3ReplayResumeCycle, now with a second group's offsets
-            // advancing independently through the kill
-            val totalDeletes = expected / 2
-            val deletesAtKill = loadProgress(progressFile)._3
-            require(deletesAtKill > 0,
-              "cycle×kill landed before any delete was folded — " +
-                "retraction never crossed the snapshot boundary")
-            require(deletesAtKill < totalDeletes,
-              s"cycle×kill landed after the teardown finished " +
-                s"($deletesAtKill of $totalDeletes deletes)")
-          }
-          // THE LIVENESS PIN: while the fold group is down, production
-          // must advance PAST its flow-control window — staged beyond
-          // foldServedAtKill + (maxAhead+1)·chunk is impossible while the
-          // dead watermark still paces (the producer invariant), so
-          // reaching the target proves the eviction. Without eviction
-          // this await times out loudly: one dead consumer halts the
-          // fleet, which is exactly the failure mode being closed.
-          val advanceTarget =
-            math.min(expected, foldServedAtKill + (maxAhead + 2) * chunk + 1)
-          while (ReplayServer.count("127.0.0.1", handle.port) < advanceTarget &&
-                 System.nanoTime() < deadline) Thread.sleep(25)
-          val stagedWhileDown = ReplayServer.count("127.0.0.1", handle.port)
-          require(stagedWhileDown >= advanceTarget,
-            "production did not advance while the dead group was down — " +
-              s"session eviction failed (staged=$stagedWhileDown, " +
-              s"target=$advanceTarget, foldServedAtKill=$foldServedAtKill)")
-          // resume the fold group: re-admitted on reconnect, catches up
-          // from its checkpointed offsets + state snapshot
-          qFold = startFold()
-          foldPulse = Some(ReplayServer.heartbeat(
-            "127.0.0.1", handle.port, "fold"))
-        } else {
-          // the min-keyed flow-control pin: when the SLOW consumer reaches
-          // a third, production must not have finished — max-keyed pacing
-          // (the fast counts group reads at the published edge throughout)
-          // would have raced production to the end well before this point
-          while (foldSeen() < expected / 3 && qFold.isActive &&
-                 System.nanoTime() < deadline) Thread.sleep(25)
-          require(foldSeen() >= expected / 3,
-            s"fold consumer stalled: ${foldSeen()} of $expected")
-          // Assert the flow-control invariant DIRECTLY (ADVICE r13 — the
-          // old stagedAtProbe < expected form was timing-dependent:
-          // between the poll exit above and the probe the fold keeps
-          // consuming, and on a slow host the producer could legitimately
-          // finish staging). The producer's contract: right after any
-          // publish, published ≤ minServed + maxAheadChunks·chunk + chunk
-          // — reading staged FIRST and the group watermarks AFTER can
-          // only shrink the observed gap (watermarks are monotone), so
-          // the bound holds on ANY host at ANY probe instant. +chunk
-          // slack absorbs the final chunk's integer-division remainder.
-          // Max-keyed pacing would put the gap near expected·2/3 here —
-          // orders of magnitude past it.
-          val stagedAtProbe = ReplayServer.count("127.0.0.1", handle.port)
-          val minServed = math.min(
-            ReplayServer.servedOf("127.0.0.1", handle.port, "fold"),
-            ReplayServer.servedOf("127.0.0.1", handle.port, "counts"))
-          require(stagedAtProbe - minServed <= (maxAhead + 2) * chunk,
-            "production outran the slow consumer group — flow control is " +
-              s"not keyed to the minimum watermark (staged=$stagedAtProbe, " +
-              s"minServed=$minServed, window=${(maxAhead + 2) * chunk})")
-        }
-        // both groups drain to the end, independently
-        while ((foldSeen() < expected || countsSeen() < expected) &&
-               qFold.isActive && qCounts.isActive &&
-               System.nanoTime() < deadline) Thread.sleep(25)
-        require(foldSeen() == expected && countsSeen() == expected,
-          s"drain incomplete: fold=${foldSeen()} counts=${countsSeen()} " +
-            s"of $expected")
-      } finally {
-        qFold.stop(); qCounts.stop()
-        foldPulse.foreach(_.close())
-      }
-      val fin = Snapshots.loadLatest(spark, snapDir)
-        .getOrElse(sys.error("no snapshot after drain"))._1
-      // TWO-SIDED policy pin ([[graft.streaming.EventTimeReplay]]'s):
-      // spilled ⇔ the state warranted it
-      if (fin.spillHistory.isEmpty) {
-        require(!fin.spillEngaged,
-          "two-consumer fold: threshold crossed but no spill version was " +
-            "written — the engagement latch is broken")
-        val consolidated =
-          Seq(fin.c, fin.o, fin.l, fin.co)
-            .map(f => ZSet.consolidate(f).count()).sum +
-            fin.aggs.map(_._2.count()).sum
-        require(consolidated < IncrementalQ3.adaptiveSpillThreshold,
-          s"two-consumer fold: state grew to $consolidated rows past the " +
-            s"${IncrementalQ3.adaptiveSpillThreshold}-row threshold " +
-            "without engaging the spill — the adaptive policy is broken")
-      }
-      if (fullCycle) {
-        // exact-cancellation pin: every insert was retracted THROUGH the
-        // two-group transport — the consolidated aggregate must be
-        // exactly empty (decimal ± pairs cancel to 0, not ≈0)
-        val live = fin.agg.count()
-        require(live == 0,
-          s"two-consumer ± cycle left $live live groups — retraction " +
-            "lost or double-applied somewhere across the group offsets")
-        // the gated answer is the counts grain: per-(relation, action)
-        // totals, each equal to its table cardinality in the oracle
-        val totals = load(totalsFile).totals
-        import spark.implicits._
-        totals.toSeq
-          .map { case ((rel, act), n) => (rel, act, n) }
-          .toDF("relation", "action", "n")
-          .orderBy("relation", "action")
-      } else {
-        val top = IncrementalQ3.topN(fin)
-          .select(col("l_orderkey"),
-            col("o_orderdate").cast("string").as("o_orderdate"),
-            col("o_orderpriority"), col("revenue"))
-          .withColumn("ingest_events", lit(countsSeen()))
-        val rows = top.collect().toIndexedSeq
-        import scala.jdk.CollectionConverters._
-        spark.createDataFrame(rows.asJava, top.schema)
-      }
-    } finally {
-      handle.close()
-      IncrementalQ3.cleanupSpillRoot(spark, spillRoot)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
+    // prove liveness; the kill-free ones keep registered groups pacing
+    // forever (a paused-but-alive consumer must NOT be dropped there —
+    // that is exactly the min-keyed guarantee they pin)
+    consumerGroups(spark,
+      Broker(Seq(ordered(events)), chunks = 24,
+        maxAhead = if (fullCycle && killResume) 4 else 6,
+        sessionTimeoutMs = if (killResume) 3000L else 0L),
+      cycle = fullCycle,
+      kill = if (!killResume) NoKill
+             else StopAt(if (fullCycle) 4 * _ / 9 else _ / 4))
   }
+
+  /** The fold group (ADAPTIVE spill, the session policy: in-memory below
+    * the state-size threshold, bucketed-table MERGE above it) and the
+    * counts group over one broker. The ± cycle's gated answer is the
+    * counts grain; the insert-only one is the fold's top-20 with the
+    * counts group's event total.
+    */
+  private def consumerGroups(spark: SparkSession, broker: Broker,
+                             cycle: Boolean, kill: FoldDriver.Kill): DataFrame =
+    FoldDriver.run(spark, "2c", broker,
+      fold = Some(Fold(batches = if (cycle) 8 else 6,
+        spillAtRows = _ => IncrementalQ3.adaptiveSpillThreshold)),
+      counts = true, kill = kill, cycle = cycle) { fin =>
+      if (cycle) FoldDriver.countsFrame(spark, fin.counts)
+      else FoldDriver.q3Top(fin.state, "ingest_events" -> fin.counts.values.sum)
+    }
 
   /** `stream_q3_spill_adaptive_resume` — the ADAPTIVE SPILL POLICY ACROSS
     * A CRASH/RESUME BOUNDARY. [[StreamQueries.q3SpillAdaptive]] proves the
-    * mid-run threshold crossing in an unkilled batch fold;
-    * [[EventTimeReplay]] threads the policy through a kill but its
-    * driver-scale state never crosses (the two-sided pin). This query
-    * pins the remaining cell: the fold is CRASHED — a fault injected at
-    * the top of the foreachBatch, not a graceful stop — exactly ON the
-    * measurement batch (the first compaction, id 3 of 8 under the
-    * CompactEvery=4 cadence), so the state-size measurement, the
-    * threshold crossing, the engagement latch, and the bucketed-table
-    * MERGE all happen in the RESUMED process, against a recovered
-    * in-memory snapshot:
+    * mid-run threshold crossing in an unkilled fold; this query CRASHES the
+    * fold — a fault injected at the top of the foreachBatch, not a graceful
+    * stop — exactly ON the measurement batch (the first compaction, id 3
+    * of 8 under the CompactEvery=4 cadence), so the state-size
+    * measurement, the threshold crossing, the engagement latch and the
+    * bucketed-table MERGE all happen in the RESUMED process, against a
+    * recovered in-memory snapshot:
     *
     *  - the crash lands BEFORE batch 3's offsets commit, so the resume
-    *    re-delivers it — the measurement batch itself crosses the
-    *    snapshot boundary;
+    *    re-delivers it — the measurement batch itself crosses the snapshot
+    *    boundary;
     *  - the pre-crash snapshot is structurally REQUIRED to be batch 2,
-    *    un-engaged and un-spilled (deterministic by construction: the
-    *    fault fires before any batch-3 work) — so any engagement is
-    *    provably post-resume;
-    *  - the threshold is DATA-DERIVED (τ = n/8 consolidated rows, the
-    *    [[StreamQueries.q3SpillAdaptive]] sizing: below the converged
-    *    state's ~0.55·n at any SF, above the first compaction's share),
-    *    so the resumed fold's batch-3 compaction measures in-memory,
-    *    crosses, latches, and the batch-7 compaction MERGEs to the
-    *    bucketed tables;
-    *  - the converged answer must still be the batch Q3 top-20 — the
-    *    strong oracle, indifferent to the crash, the resume, and where
-    *    the state lived.
+    *    un-engaged and un-spilled, so any engagement is provably
+    *    post-resume;
+    *  - the threshold is DATA-DERIVED (τ = n/8 consolidated rows: below the
+    *    converged state's ~0.55·n at any SF, above the first compaction's
+    *    share), so the resumed batch-3 compaction measures in-memory,
+    *    crosses, latches, and the batch-7 compaction MERGEs;
+    *  - the converged answer must still be the batch Q3 top-20.
     *
-    * Why a real exception instead of `query.stop()`: a graceful stop
-    * drains the in-flight batch and commits its offsets; only a genuine
-    * mid-batch failure leaves batch 3 uncommitted, which is what pins the
-    * kill to the measurement batch with no timing assumptions at all.
+    * Sizing: the crash lands at 3/8 consumed, 6-chunk window → 3/8 + 1/8 +
+    * 7/24 = 0.79.
     */
   def q3SpillAdaptiveResume(spark: SparkSession, dir: String): DataFrame = {
-    val ordered = Changelog.generateCached(spark, dir, insertOnly = true)
-      .orderBy(col("t"), col("sub"), col("idx")).select(col("line"))
-    // same flow-control sizing as the insert-only q3ReplayRun: the crash
-    // lands at 3/8 consumed, worst-case staged 3/8 + 1/8 (in-flight) +
-    // 7/24 (window + final-chunk slack) = 0.79 < 1 — mid-production by
-    // arithmetic, not timing
-    val handle = ReplayServer.serveGrowing(ordered,
-      chunks = 24, intervalMs = 10L, maxAheadChunks = 6)
-    val work = Files.createTempDirectory("graft-replay-adapt").toString
-    val snapDir = s"$work/snap"
-    val spillRoot = s"$work/spill"
-    val progressFile = s"$work/progress"
-    val crashMarker = "graft-injected-crash-at-measurement-batch"
-    try {
-      val expected = handle.expected
-      require(expected > 0, "empty changelog — nothing to replay")
-      val batchSize = math.max(1L, expected / 8)
-      val tau = math.max(1L, expected / 8)
-      // engagement observation, phase B only (the latch flips inside the
-      // resumed process, so an in-process var sees it race-free)
-      @volatile var engagedAtBatch = -1L
-      @volatile var sawInMemCompaction = false
-      def startQuery(failAtBatch: Option[Long]) = {
-        val resumed = Snapshots.loadLatest(spark, snapDir)
-        var state = resumed.fold(IncrementalQ3.init(spark))(_._1)
-        var expectedBatch = resumed.fold(0L)(_._2 + 1)
-        StreamTune.prepare(spark)
-        spark.readStream
-          .format(classOf[ReplayProvider].getName)
-          .option("host", "127.0.0.1").option("port", handle.port.toString)
-          .option("batchSize", batchSize.toString)
-          .option("minBatchSize", batchSize.toString)
-          .option("splits", "0") // 0 = adaptive per-batch fan-out (r15, guide §2)
-          .load()
-          .writeStream
-          .queryName(s"graft_replay_adapt_${handle.port}")
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(Trigger.ProcessingTime("50 milliseconds"))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // the FAULT: fires before any batch work — no snapshot, no
-            // progress write, no offset commit for this id
-            failAtBatch.foreach { f =>
-              if (id >= f) throw new RuntimeException(crashMarker)
-            }
-            val pinned = batch
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              if (id >= expectedBatch) {
-                require(id == expectedBatch,
-                  s"batch $id delivered but IVM state is at $expectedBatch — " +
-                    "a gap would corrupt the aggregate")
-                state = IncrementalQ3.step(state, pinned,
-                  spillDir = Some(spillRoot), spillAtRows = tau)
-                if (state.dirty == 0 && state.spillHistory.isEmpty)
-                  sawInMemCompaction = true
-                if (state.spillEngaged && engagedAtBatch < 0)
-                  engagedAtBatch = id
-                Snapshots.saveBatchAuto(state, snapDir, id)
-                expectedBatch = id + 1
-              }
-              val (lastCounted, cum, _) = loadProgress(progressFile)
-              if (id > lastCounted)
-                saveProgress(progressFile, id, cum + pinned.count(), 0L)
-            } finally pinned.unpersist(blocking = false)
-          }
-          .start()
-      }
-      def seen(): Long = loadProgress(progressFile)._2
-      // phase A: fold batches 0–2 in-memory, then CRASH on the
-      // measurement batch (the fault is the termination — await it)
-      val qa = startQuery(failAtBatch = Some(3L))
-      val deadlineMs = (180L + expected / 20000L) * 1000L
-      val terminated =
-        try { qa.awaitTermination(deadlineMs); true }
-        catch {
-          case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-            // the failure must be OUR fault injection, not a latent bug
-            var c: Throwable = e
-            var found = false
-            while (c != null && !found) {
-              found = Option(c.getMessage).exists(_.contains(crashMarker))
-              c = c.getCause
-            }
-            require(found, s"phase A died of an unexpected error: $e")
-            true
-        } finally if (qa.isActive) qa.stop()
-      require(terminated, "phase A did not terminate within the deadline")
-      val stagedAtCrash = ReplayServer.count("127.0.0.1", handle.port)
-      require(stagedAtCrash < expected,
-        "the producer finished before the crash — the arrival-driven " +
-          s"path went unexercised ($stagedAtCrash of $expected staged)")
-      // the pre-crash snapshot: EXACTLY batch 2 (ids 0–2 committed, the
-      // fault preempted batch 3), in-memory and un-engaged — so the
-      // measurement, the crossing, and the spill are all post-resume
-      val (preState, preId) = Snapshots.loadLatest(spark, snapDir)
-        .getOrElse(sys.error("no snapshot survived the crash"))
-      require(preId == 2L,
-        s"crash landed at snapshot b$preId, not the pre-measurement b2 — " +
-          "the fault injection missed its batch")
-      require(preState.spillHistory.isEmpty && !preState.spillEngaged,
-        "the pre-crash state already engaged the spill — nothing about " +
-          "the adaptive policy crosses the resume boundary")
-      // phase B: resume from checkpoint + snapshot; batch 3 re-delivers
-      // (its offsets never committed), measures, crosses, latches; the
-      // batch-7 compaction MERGEs into the bucketed tables
-      val qb = startQuery(failAtBatch = None)
-      try {
-        val deadline = System.nanoTime() + deadlineMs * 1000000L
-        while (seen() < expected && qb.isActive &&
-               System.nanoTime() < deadline) Thread.sleep(25)
-        require(seen() >= expected,
-          s"phase B: saw ${seen()} of $expected events before timeout " +
-            s"(query active: ${qb.isActive})")
-      } finally qb.stop()
-      require(seen() == expected,
-        s"exactly-once violated at the transport: ${seen()} != $expected")
+    val events = Changelog.generateCached(spark, dir, insertOnly = true)
+    // the latch flips inside the fold's own thread, so volatile vars see it
+    @volatile var engagedAtBatch = -1L
+    @volatile var sawInMemCompaction = false
+    FoldDriver.run(spark, "replay_adapt",
+      Broker(Seq(ordered(events)), chunks = 24, maxAhead = 6),
+      fold = Some(Fold(batches = 8, spillAtRows = n => math.max(1L, n / 8),
+        onApplied = (st, id) => {
+          if (st.dirty == 0 && st.spillHistory.isEmpty) sawInMemCompaction = true
+          if (st.spillEngaged && engagedAtBatch < 0) engagedAtBatch = id
+        })),
+      kill = CrashAt(3L)) { fin =>
       require(sawInMemCompaction,
         "adaptive resume: no in-memory compaction ran post-resume — the " +
           "measurement batch did not re-deliver as an in-memory fold")
       require(engagedAtBatch >= 3L,
         s"adaptive resume: engagement at batch $engagedAtBatch — the " +
           "latch flipped outside the resumed process")
-      val fin = Snapshots.loadLatest(spark, snapDir)
-        .getOrElse(sys.error("no snapshot after drain"))._1
-      require(fin.spillEngaged,
-        s"adaptive resume: the threshold ($tau rows of $expected events) " +
-          "was never crossed post-resume — the policy went unexercised")
-      require(fin.spillHistory.nonEmpty,
-        "adaptive resume: engaged but never MERGEd — the engagement " +
-          "latch is broken across the snapshot boundary")
-      val top = IncrementalQ3.topN(fin)
-        .select(col("l_orderkey"),
-          col("o_orderdate").cast("string").as("o_orderdate"),
-          col("o_orderpriority"), col("revenue"))
-      val rows = top.collect().toIndexedSeq // materialize BEFORE dropping tables
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, top.schema)
-    } finally {
-      handle.close()
-      IncrementalQ3.cleanupSpillRoot(spark, spillRoot)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
-    }
-  }
-
-  private def q3ReplayRun(spark: SparkSession, dir: String,
-                          fullCycle: Boolean): DataFrame = {
-    val events =
-      if (fullCycle) {
-        // the SAME capacity-windowed changelog as stream_q3_spilled,
-        // disk-staged once per (session, fixture) and shared with it —
-        // re-generating 2×(nL+nO+nC) ranked+serialized lines inside every
-        // run would dominate the transport's wall time
-        val staged = graft.sources.Staging.ensure(
-          graft.sources.Staging.dirFor(spark, "q3spill", dir)) { out =>
-          val nL = graft.sources.Tables.table(spark, dir, "lineitem").count()
-          Changelog.generate(spark, dir, capacity = Some(math.max(1L, nL / 4)))
-            .write.mode("overwrite").parquet(out)
-        }
-        spark.read.parquet(staged)
-      } else Changelog.generate(spark, dir, insertOnly = true)
-    val ordered = events
-      .orderBy(col("t"), col("sub"), col("idx")).select(col("line"))
-    // ARRIVAL-DRIVEN broker, like [[replayExactlyOnce]] — but the Q3 fold
-    // consumes far slower than the counts grain, so time pacing alone
-    // would make "kill lands mid-production" a host-speed race. Flow
-    // control (`maxAheadChunks`) pins it structurally: at the kill the
-    // staged count is bounded by
-    //   killTarget + batch (await overshoot) + batch (in-flight fetch)
-    //   + window (producer run-ahead)
-    // which the sizing below keeps < expected on ANY host, worst case —
-    // while phase B's catch-up re-opens the tap and drains to the true
-    // end. Insert-only: kill at 1/3, 6 batches, 6-chunk window →
-    // 1/3 + 1/6 + 1/6 + 1/4 = 0.917. Full cycle: the kill must land
-    // mid-TEARDOWN, i.e. deeper in — 4/9, 8 batches, 4-chunk window →
-    // 4/9 + 1/8 + 1/8 + 1/6 = 0.86 (the r13 first cut killed at 2/3
-    // with the insert-only sizing, whose worst case is 1.08·expected:
-    // the mid-production pin could fire on a slow host — arithmetic,
-    // not timing, so fixed in the sizing). The window stays ≥ the
-    // fold's minBatchSize so admission can always accumulate a full
-    // batch without waiting on the delay flush.
-    val handle = ReplayServer.serveGrowing(ordered,
-      chunks = 24, intervalMs = 10L,
-      maxAheadChunks = if (fullCycle) 4 else 6)
-    val work = Files.createTempDirectory("graft-replay-q3").toString
-    val snapDir = s"$work/snap"
-    val spillRoot = s"$work/spill"
-    val progressFile = s"$work/progress"
-    // the full-±-cycle composition is FORMAT-PINNED to the mergelog (r13
-    // verdict item 6): a second oracle-gated composition on the promoted
-    // default, immune to any future session-default change — retraction
-    // through recovery rides the manifest MERGE + refcounted GC + delta
-    // snapshots end-to-end
-    if (fullCycle) SpillFormat.pin(spillRoot, "mergelog")
-    try {
-      val expected = handle.expected
-      require(expected > 0, "empty changelog — nothing to replay")
-      // paced batches (6 insert-only, 8 full-cycle): the kill lands
-      // mid-stream AND the spill path compacts before the end
-      // (CompactEvery = 4 — the 8-batch cycle compacts twice)
-      val batchSize = math.max(1L, expected / (if (fullCycle) 8 else 6))
-      def startQuery() = {
-        // the StreamingQ3.start resume protocol, replay-sourced: load the
-        // latest consistent snapshot, skip re-delivered batch ids
-        val resumed = Snapshots.loadLatest(spark, snapDir)
-        var state = resumed.fold(IncrementalQ3.init(spark))(_._1)
-        var expectedBatch = resumed.fold(0L)(_._2 + 1)
-        StreamTune.prepare(spark)
-        spark.readStream
-          .format(classOf[ReplayProvider].getName)
-          .option("host", "127.0.0.1").option("port", handle.port.toString)
-          .option("batchSize", batchSize.toString)
-          // hold admission for a REAL batch: per-chunk admission would
-          // pay a full fold + snapshot per producer step
-          .option("minBatchSize", batchSize.toString)
-          .option("splits", "0") // 0 = adaptive per-batch fan-out (r15, guide §2)
-          .load()
-          .writeStream
-          .queryName(s"graft_replay_q3_${handle.port}")
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(Trigger.ProcessingTime("50 milliseconds"))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val tDbg = System.nanoTime()
-            // pin the batch: the DSv2 frame re-executes the transport
-            // fetch per action, and both the fold's parse and the
-            // progress count below scan it — one fetch, not two
-            val pinned = batch
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              if (id >= expectedBatch) {
-                require(id == expectedBatch,
-                  s"batch $id delivered but IVM state is at $expectedBatch — " +
-                    "a gap would corrupt the aggregate")
-                state = IncrementalQ3.step(state, pinned,
-                  spillDir = Some(spillRoot))
-                // snapshot flip BEFORE the offset commit: a crash after this
-                // point re-delivers `id`, which the guard above then skips
-                Snapshots.saveBatchAuto(state, snapDir, id)
-                expectedBatch = id + 1
-              } // else: already folded into the loaded snapshot — skipped
-              // drain/kill monitor, exactly-once on its own id watermark
-              // (the replay source re-delivers the identical range, so the
-              // re-count equals the original). ONE job for both statistics
-              val (lastCounted, cum, dels) = loadProgress(progressFile)
-              if (id > lastCounted) {
-                val s = pinned.agg(count(lit(1)).as("n"),
-                  sum(when(substring(col("value"), 1, 1) === "-", 1L)
-                    .otherwise(0L)).as("d")).head()
-                saveProgress(progressFile, id, cum + s.getLong(0),
-                  dels + (if (s.isNullAt(1)) 0L else s.getLong(1)))
-              }
-            } finally pinned.unpersist(blocking = false)
-            if (java.lang.Boolean.getBoolean("graft.replay.debug"))
-              System.err.println(f"[replay-q3] batch $id: " +
-                f"${(System.nanoTime() - tDbg) / 1e9}%.2f s")
-          }
-          .start()
-      }
-      def seen(): Long = loadProgress(progressFile)._2
-      def deletesSeen(): Long = loadProgress(progressFile)._3
-      def await(target: Long, q: org.apache.spark.sql.streaming.StreamingQuery,
-                what: String): Unit = {
-        val deadline = System.nanoTime() +
-          (180L + target / 20000L) * 1000000000L
-        while (seen() < target && q.isActive &&
-               System.nanoTime() < deadline) Thread.sleep(25)
-        require(seen() >= target,
-          s"$what: saw ${seen()} of $target events before timeout " +
-            s"(query active: ${q.isActive})")
-      }
-      // phase A: fold ~a third (insert-only) or ~4/9 (full cycle — deep
-      // enough into the teardown that deletes are folded on both sides
-      // of the kill, shallow enough that the mid-production bound above
-      // holds worst-case), then KILL mid-stream
-      val killTarget = if (fullCycle) 4 * expected / 9 else expected / 3
-      // every row's insert is eventually retracted, one delete per insert
-      val totalDeletes = if (fullCycle) expected / 2 else 0L
-      val qa = startQuery()
-      try {
-        await(killTarget, qa, "phase A")
-        // captured BEFORE the stop (stop itself takes time): the kill must
-        // land while the tail is still being produced, or the growing-
-        // stream composition went unexercised
-        val stagedAtKill = ReplayServer.count("127.0.0.1", handle.port)
-        require(stagedAtKill < expected,
-          "the producer finished before the kill — the arrival-driven " +
-            s"path went unexercised ($stagedAtKill of $expected staged)")
-      } finally qa.stop()
-      val afterKill = seen()
-      require(afterKill < expected,
-        "the kill must land mid-stream or the resume proves nothing " +
-          s"(saw $afterKill of $expected before restart)")
-      if (fullCycle) {
-        // the DELETE-phase pin (structural, from the exactly-once counter,
-        // not timing): retraction must already be folded into the killed
-        // state AND retraction must remain for the resumed fold
-        val deletesAtKill = deletesSeen()
-        require(deletesAtKill > 0,
-          "full-cycle kill landed before any delete was folded — " +
-            "retraction never crossed the snapshot boundary")
-        require(deletesAtKill < totalDeletes,
-          s"full-cycle kill landed after the teardown finished " +
-            s"($deletesAtKill of $totalDeletes deletes) — nothing left " +
-            "to retract after the resume")
-      }
-      // phase B: restart from checkpoint + snapshot, drain to the end
-      val qb = startQuery()
-      try await(expected, qb, "phase B (post-resume)") finally qb.stop()
-      require(seen() == expected,
-        s"exactly-once violated at the transport: ${seen()} != $expected")
-      if (fullCycle) require(deletesSeen() == totalDeletes,
-        s"exactly-once violated on the delete half: ${deletesSeen()} != $totalDeletes")
-      val fin = Snapshots.loadLatest(spark, snapDir)
-        .getOrElse(sys.error("no snapshot after drain")) ._1
-      require(fin.spillHistory.nonEmpty,
-        "stream_q3_replay_resume: the fold never spilled — the bounded-" +
-          "memory path went unexercised")
-      val top = IncrementalQ3.topN(fin)
-        .select(col("l_orderkey"),
-          col("o_orderdate").cast("string").as("o_orderdate"),
-          col("o_orderpriority"), col("revenue"))
-      val rows = top.collect().toIndexedSeq // materialize BEFORE dropping tables
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, top.schema)
-    } finally {
-      handle.close()
-      IncrementalQ3.cleanupSpillRoot(spark, spillRoot)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
+      require(fin.state.spillEngaged,
+        "adaptive resume: the τ = n/8 threshold was never crossed " +
+          "post-resume — the policy went unexercised")
+      FoldDriver.q3Top(fin.state)
     }
   }
 }

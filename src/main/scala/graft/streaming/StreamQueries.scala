@@ -212,21 +212,8 @@ object StreamQueries {
       // the spill root is THREADED as a parameter (ADVICE r10): mutating
       // the process-global graft.ivm.spill.dir here would silently flip
       // any concurrently-running fold in the same JVM into spill mode
-      val fin = {
-        // the capacity-windowed changelog is DISK-staged once per
-        // (session, fixture) — generateCached's memo would be wiped by the
-        // bench's per-query resetSession (its checkpoint blocks are
-        // unrecoverable after a bulk unpersist), while a parquet staging
-        // survives it, so re-measures pay the fold, not the generation
-        val staged = graft.sources.Staging.ensure(
-          graft.sources.Staging.dirFor(spark, "q3spill", dir)) { out =>
-          val nL = graft.sources.Tables.table(spark, dir, "lineitem").count()
-          Changelog.generate(spark, dir, capacity = Some(math.max(1L, nL / 4)))
-            .write.mode("overwrite").parquet(out)
-        }
-        val ev = spark.read.parquet(staged)
-        IncrementalQ3.runBatches(spark, ev, 6, spillDir = Some(root))
-      }
+      val fin = IncrementalQ3.runBatches(spark, Changelog.windowed(spark, dir), 6,
+        spillDir = Some(root))
       require(fin.spillHistory.nonEmpty,
         "stream_q3_spilled: the fold never compacted — the spill path went unexercised")
       val conv = topAsStrings(fin)

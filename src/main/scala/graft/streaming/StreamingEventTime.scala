@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,13 +16,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * maintained watermark inside `foreachBatch`, and the dropped count part
   * of the asserted output.
   *
-  * Recovery is first-class, same discipline as [[StreamingQ3]]: the IVM
-  * state is snapshotted with its batch id BEFORE the offset commit
-  * ([[Snapshots.saveBatch]]), and the watermark/dropped accounting is
-  * persisted on its OWN id watermark (atomic tmp+rename) — a crash between
-  * the two flips re-delivers a batch whose FOLD is skipped while the
+  * Recovery is [[FoldDriver.foldSink]]'s: the IVM state is snapshotted
+  * with its batch id BEFORE the offset commit, and the watermark/dropped
+  * accounting advances the ledger on its OWN id watermark — a crash
+  * between the two re-delivers a batch whose FOLD is skipped while the
   * ACCOUNTING still takes it, using exactly the watermark it was
-  * originally processed under (the meta file's, one batch behind). Killed
+  * originally processed under (the ledger's, one batch behind). Killed
   * mid-stream and resumed, the query lands the identical answer — pinned
   * by EventTimeLiveSpec.
   *
@@ -42,27 +40,20 @@ object StreamingEventTime {
     */
   private[streaming] val K = 3
 
-  /** Watermark/dropped accounting `(lastAppliedBatchId, wm, dropped)` —
-    * persisted atomically per batch, resumed on restart. `wm` is the max
-    * event time seen through the last applied batch (delay 0);
-    * Long.MinValue = nothing seen yet.
+  /** The late split at the watermark as of the PREVIOUS batch: the
+    * ledger's `wm.0`, the max event time accounted through it (absent =
+    * nothing seen yet). One aggregate job for both statistics, late count
+    * and max event time.
     */
-  private final case class Meta(lastId: Long, wm: Long, dropped: Long)
-
-  private def loadMeta(path: String): Meta =
-    if (!Files.exists(Paths.get(path))) Meta(-1L, Long.MinValue, 0L)
-    else {
-      val Array(id, wm, d) = new String(Files.readAllBytes(Paths.get(path)),
-        StandardCharsets.UTF_8).trim.split("\\|")
-      Meta(id.toLong, wm.toLong, d.toLong)
-    }
-
-  private def saveMeta(path: String, m: Meta): Unit = {
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp, s"${m.lastId}|${m.wm}|${m.dropped}"
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+  private val batchWatermark: FoldDriver.Admit = (batch, ledger) => {
+    val parts = split(col("value"), "\t", 2)
+    val stamped = batch.select(
+      parts.getItem(0).cast("long").as("t"),
+      parts.getItem(1).as("line"))
+    val late = ledger.get("wm.0").fold(lit(false))(col("t") < _)
+    FoldDriver.Admitted(stamped.filter(!late).select("line"),
+      stamped.agg(sum(when(late, 1L).otherwise(0L)).as("dropped"),
+        max(col("t")).as("wm")))
   }
 
   /** Stage the arrival-ordered event files once per (session, fixture):
@@ -105,17 +96,15 @@ object StreamingEventTime {
     }
 
   /** Start (or RESUME) the live query over staged arrivals. `work` holds
-    * the checkpoint, snapshots, and the watermark/dropped meta; restart
-    * with it unchanged to resume. `onApplied(batchId)` fires after each
-    * genuinely-folded batch (specs use it to time the kill).
+    * the checkpoint, snapshots, and the ledger; restart with it unchanged
+    * to resume. `onApplied(batchId)` fires after each genuinely-folded
+    * batch (specs use it to time the kill).
     */
   def start(spark: SparkSession, stagedDir: String, work: String,
             onApplied: Long => Unit = _ => ()): StreamingQuery = {
-    val snapDir = s"$work/snap"
-    val metaFile = s"$work/meta"
-    val resumed = Snapshots.loadLatest(spark, snapDir)
-    var state = resumed.fold(IncrementalQ3.init(spark))(_._1)
-    var expectedBatch = resumed.fold(0L)(_._2 + 1)
+    val sink = FoldDriver.foldSink(spark, "etlive", work,
+      IncrementalQ3.spillRoot, spillAtRows = 0L, batchWatermark,
+      (_, id) => onApplied(id))
     StreamTune.prepare(spark)
     spark.readStream
       .option("maxFilesPerTrigger", 1)
@@ -124,41 +113,7 @@ object StreamingEventTime {
       .queryName("graft_q3_event_time_live")
       .option("checkpointLocation", s"$work/ckpt")
       .trigger(Trigger.ProcessingTime("50 milliseconds"))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val meta = loadMeta(metaFile)
-        val parts = split(col("value"), "\t", 2)
-        val stamped = batch.select(
-          parts.getItem(0).cast("long").as("t"),
-          parts.getItem(1).as("line"))
-        if (id >= expectedBatch) {
-          require(id == expectedBatch,
-            s"batch $id delivered but IVM state is at $expectedBatch — " +
-              "a gap would corrupt the aggregate")
-          // the late split, at the watermark as of the PREVIOUS batch —
-          // meta.wm is exactly that (meta.lastId is id-1 here, or -1)
-          val onTime = if (meta.wm > Long.MinValue)
-            stamped.filter(col("t") >= meta.wm) else stamped
-          state = IncrementalQ3.step(state, onTime.select("line"))
-          // state flip BEFORE the offset commit (re-delivery skips by id)
-          Snapshots.saveBatchAuto(state, snapDir, id)
-          expectedBatch = id + 1
-          onApplied(id)
-        } // else: already folded into the loaded snapshot — fold skipped
-        if (id > meta.lastId) {
-          // accounting on its own id watermark: a re-delivered batch whose
-          // fold was skipped still advances wm and counts its late rows,
-          // under the same wm the original processing used. ONE aggregate
-          // job for both statistics (r15, guide §1 — late count and max
-          // event time were two separate scans of the batch)
-          val s = stamped.agg(
-            sum(when(col("t") < lit(meta.wm), 1L).otherwise(0L)).as("late"),
-            max(col("t")).as("mx")).head()
-          val late = if (meta.wm > Long.MinValue && !s.isNullAt(0))
-            s.getLong(0) else 0L
-          val wm2 = if (s.isNullAt(1)) meta.wm else math.max(meta.wm, s.getLong(1))
-          saveMeta(metaFile, Meta(id, wm2, meta.dropped + late))
-        }
-      }
+      .foreachBatch(sink)
       .start()
   }
 
@@ -167,26 +122,19 @@ object StreamingEventTime {
     */
   private[streaming] def drained(spark: SparkSession, work: String,
                                  lastId: Long): Boolean =
-    loadMeta(s"$work/meta").lastId >= lastId &&
+    FoldDriver.progress(work).read()._1 >= lastId &&
       Snapshots.loadLatest(spark, s"$work/snap").exists(_._2 >= lastId)
 
   /** The query's answer from a drained `work` dir: on-time Q3 top-20 with
     * the dropped-late count on every row.
     */
   private[streaming] def result(spark: SparkSession, work: String): DataFrame = {
-    val meta = loadMeta(s"$work/meta")
-    require(meta.dropped > 0, "event-time Q3 (live): no late events were " +
+    val dropped = FoldDriver.progress(work)("dropped")
+    require(dropped > 0, "event-time Q3 (live): no late events were " +
       "dropped — the deterministic lateness injection failed, the query " +
       "is testing nothing")
-    val st = Snapshots.loadLatest(spark, s"$work/snap").get._1
-    val top = IncrementalQ3.topN(st)
-      .select(col("l_orderkey"),
-        col("o_orderdate").cast("string").as("o_orderdate"),
-        col("o_orderpriority"), col("revenue"))
-      .withColumn("dropped_late", lit(meta.dropped))
-    val rows = top.collect().toIndexedSeq
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, top.schema)
+    FoldDriver.q3Top(Snapshots.loadLatest(spark, s"$work/snap").get._1,
+      "dropped_late" -> dropped)
   }
 
   /** `stream_q3_event_time_live` — the driver query: stage, run the live

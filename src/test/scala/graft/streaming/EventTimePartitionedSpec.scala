@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The partitioned-transport event-time path ([[EventTimePartitioned]]).
+/** The partitioned-transport event-time path
+  * ([[EventTimeReplay.q3EventTimePartitioned]]).
   *
   * Load-bearing claims: (1) the per-partition prefix split is a pure
   * function of the partition logs — identical under every batch slicing,
@@ -35,7 +36,7 @@ class EventTimePartitionedSpec extends SparkSpec {
       val (a, b) = all.splitAt(cut)
       def flags(rows: Seq[(Int, Long, Long)], carry: Map[Int, Long]) =
         if (rows.isEmpty) Seq.empty
-        else EventTimePartitioned.prefixLateFlagP(
+        else EventTimeReplay.prefixLateFlag(
           rows.toDF("partition", "offset", "t"), carry, block)
           .select("partition", "offset", "late").collect()
           .map(r => (r.getInt(0), r.getLong(1), r.getBoolean(2))).toSeq
@@ -74,7 +75,7 @@ class EventTimePartitionedSpec extends SparkSpec {
       val (a, b) = all.splitAt(cut)
       def flags(rows: Seq[(Int, Long, Long)], carry: Map[Int, Long]) =
         if (rows.isEmpty) Seq.empty
-        else EventTimePartitioned.prefixLateFlagP(
+        else EventTimeReplay.prefixLateFlag(
           rows.toDF("partition", "offset", "t"), carry, block, delay = delta)
           .select("partition", "offset", "late", "late_admitted").collect()
           .map(r => (r.getInt(0), r.getLong(1),
@@ -90,7 +91,7 @@ class EventTimePartitionedSpec extends SparkSpec {
 
   test("partitioned bounded-delay event-time Q3 equals the closed-form answer") {
     import graft.operators.Relational
-    val got = EventTimePartitioned.q3EventTimeDelayedPartitioned(spark, sfDir)
+    val got = EventTimeReplay.q3EventTimeDelayedPartitioned(spark, sfDir)
       .collect().map(_.toSeq).toSeq
     // closed form: m = last on-time lineitem rank, δ = nL/20; a withheld
     // lineitem drops iff rk < m − δ, is ADMITTED (folds) iff
@@ -138,7 +139,7 @@ class EventTimePartitionedSpec extends SparkSpec {
 
   test("partitioned replay-fed event-time Q3 equals the closed-form answer") {
     import graft.operators.Relational
-    val got = EventTimePartitioned.q3EventTimePartitioned(spark, sfDir)
+    val got = EventTimeReplay.q3EventTimePartitioned(spark, sfDir)
       .collect().map(_.toSeq).toSeq
     // the closed form, computed independently in Spark: rank lineitems by
     // the full-column order (the changelog trigger order), m = last

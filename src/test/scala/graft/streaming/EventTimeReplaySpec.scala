@@ -32,16 +32,16 @@ class EventTimeReplaySpec extends SparkSpec {
     for (block <- Seq(2L, 3L, 64L); cut <- 0 to ts.size) {
       // slice the stream at `cut` into two "batches": flags must agree
       // with the whole-stream truth on both sides, with the second batch
-      // seeded by the running max of the first (what Meta.wm carries)
+      // seeded by the running max of the first (what the ledger's wm.0 carries)
       val first = ts.take(cut).zipWithIndex
-        .map { case (t, i) => (i.toLong, t) }.toDF("offset", "t")
+        .map { case (t, i) => (0, i.toLong, t) }.toDF("partition", "offset", "t")
       val second = ts.drop(cut).zipWithIndex
-        .map { case (t, i) => ((cut + i).toLong, t) }.toDF("offset", "t")
+        .map { case (t, i) => (0, (cut + i).toLong, t) }.toDF("partition", "offset", "t")
       val wmAfterFirst = if (cut == 0) Long.MinValue else ts.take(cut).max
       val got =
-        EventTimeReplay.prefixLateFlag(first, Long.MinValue, block)
+        EventTimeReplay.prefixLateFlag(first, Map(0 -> Long.MinValue), block)
           .select("offset", "late").collect().map(r => r.getLong(0) -> r.getBoolean(1)) ++
-        EventTimeReplay.prefixLateFlag(second, wmAfterFirst, block)
+        EventTimeReplay.prefixLateFlag(second, Map(0 -> wmAfterFirst), block)
           .select("offset", "late").collect().map(r => r.getLong(0) -> r.getBoolean(1))
       assert(got.sortBy(_._1).map(_._2).toSeq == truth,
         s"late flags diverged at cut=$cut block=$block")
@@ -64,12 +64,12 @@ class EventTimeReplaySpec extends SparkSpec {
     }
     for (block <- Seq(2L, 64L); cut <- 0 to ts.size) {
       val first = ts.take(cut).zipWithIndex
-        .map { case (t, i) => (i.toLong, t) }.toDF("offset", "t")
+        .map { case (t, i) => (0, i.toLong, t) }.toDF("partition", "offset", "t")
       val second = ts.drop(cut).zipWithIndex
-        .map { case (t, i) => ((cut + i).toLong, t) }.toDF("offset", "t")
+        .map { case (t, i) => (0, (cut + i).toLong, t) }.toDF("partition", "offset", "t")
       val wmAfterFirst = if (cut == 0) Long.MinValue else ts.take(cut).max
       def flags(df: org.apache.spark.sql.DataFrame, wm: Long) =
-        EventTimeReplay.prefixLateFlag(df, wm, block, delay)
+        EventTimeReplay.prefixLateFlag(df, Map(0 -> wm), block, delay)
           .select("offset", "late", "late_admitted").collect()
           .map(r => (r.getLong(0), (r.getBoolean(1), r.getBoolean(2))))
       val got = (flags(first, Long.MinValue) ++ flags(second, wmAfterFirst))

@@ -12,6 +12,8 @@ import graft.operators.Relational
   * query; this spec pins the semantics on top: the converged fold answer
   * must be the exact batch Q3 top-20 — arrival-order-invariant across the
   * apportioned partition interleave AND the kill/evict/re-admit cycle.
+  * The single-log full matrix cell (retraction × kill × eviction) is
+  * pinned here too, on its counts answer.
   */
 class PartitionedConsumersSpec extends SparkSpec {
 
@@ -32,5 +34,23 @@ class PartitionedConsumersSpec extends SparkSpec {
     assert(events == expected,
       s"counts group saw $events of $expected events — its independent " +
         "offsets lost or double-applied a batch")
+  }
+
+  test("the full matrix cell: groups × retraction × kill × eviction, exact counts") {
+    // stream_q3_two_consumers_cycle_resume over the single log: the fold
+    // group killed mid-teardown and evicted, the counts group draining the
+    // ± stream through it, the fold resumed and converged exactly empty
+    // (pinned in-query). The gated answer is the counts grain: every
+    // relation's Insert and Delete totals both equal its cardinality
+    val got = ReplayIngest.q3TwoConsumersCycleResume(spark, sfDir)
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val expected = Seq("customer", "orders", "lineitem").flatMap { t =>
+      val n = graft.sources.Tables.table(spark, sfDir, t).count()
+      Seq((t, "Insert") -> n, (t, "Delete") -> n)
+    }.toMap
+    assert(got == expected,
+      "each relation's Insert and Delete totals must both equal its table " +
+        "cardinality — a batch lost or double-applied on either group's " +
+        "offsets moves a total")
   }
 }
