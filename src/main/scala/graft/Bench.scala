@@ -1,15 +1,20 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+
+  /** `SPARK_GRAFT_CPUS` (default 4), parsed fail-fast (ADVICE r6): a
+    * non-numeric value would both break master=local[...] and leak invalid
+    * JSON into the bench record. Shared by the query-timing mains.
+    */
+  private[graft] def envCpus(): Int = {
+    val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(
+      sys.error(s"SPARK_GRAFT_CPUS must be a positive int, got '$raw'"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parsed once, fail-fast (ADVICE r6): a non-numeric value would both
-    // break master=local[...] and leak invalid JSON into the bench record
-    val cpus: Int = {
-      val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      raw.trim.toIntOption.filter(_ > 0).getOrElse(
-        sys.error(s"SPARK_GRAFT_CPUS must be a positive int, got '$raw'"))
-    }
+    val cpus = envCpus()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

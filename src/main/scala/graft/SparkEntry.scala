@@ -139,17 +139,11 @@ object SparkEntry {
     "stream_q3_full_cycle" -> (streaming.StreamQueries.q3FullCycle _),
     "stream_q3_prefix_snapshot" -> (streaming.StreamQueries.q3PrefixSnapshot _),
     "stream_q3_spilled" -> (streaming.StreamQueries.q3SpilledCycle _),
-    // the SAME cycle FORMAT-pinned to bucketed parquet — the COMPATIBILITY
-    // format since the r14 default flip to the mergelog (10× evidence:
-    // 38.8 vs 45.9 s, listing-free). The seam's contract spec plus one
-    // end-to-end gate PER FORMAT is what proves the swap really is a swap
-    "stream_q3_spilled_parquet" ->
-      (streaming.StreamQueries.q3SpilledCycleParquet _),
-    // the mergelog-FORMAT-pinned gate (restored r15 — dropped by the r14
-    // default flip): per-format coverage must not ride the session
-    // default, so both formats keep NAME-pinned gates alongside it
-    "stream_q3_spilled_mergelog" ->
-      (streaming.StreamQueries.q3SpilledCycleMergelog _),
+    // kept under their spill-format names because the oracle gate tracks
+    // queries by name; with one spill store both run stream_q3_spilled's
+    // fold
+    "stream_q3_spilled_parquet" -> (streaming.StreamQueries.q3SpilledCycle _),
+    "stream_q3_spilled_mergelog" -> (streaming.StreamQueries.q3SpilledCycle _),
     // ADAPTIVE spill: the fold starts in-memory and engages the
     // bucketed-table path only when the compaction-time state measurement
     // crosses a data-derived threshold MID-RUN (structurally pinned: an
@@ -1113,7 +1107,7 @@ object SparkEntry {
         |WHERE 1 = 0""".stripMargin,
     // the spilled-state fold shares full_cycle's exact-cancellation
     // contract: every insert is eventually retracted, so the converged
-    // aggregate — reconstructed through bucketed-table state — is EMPTY
+    // aggregate — reconstructed through spilled state — is EMPTY
     "stream_q3_spilled" ->
       """SELECT CAST(NULL AS BIGINT) AS l_orderkey,
         |       CAST(NULL AS VARCHAR) AS o_orderdate,
@@ -1155,16 +1149,13 @@ object SparkEntry {
         |GROUP BY 1, 2, 3
         |ORDER BY revenue DESC, o_orderdate ASC, l_orderkey ASC
         |LIMIT 20""".stripMargin,
-    // identical contract through the compatibility format (bucketed
-    // parquet, pinned) — exact cancellation reconstructed through
-    // catalog-registered bucketed tables
+    // the same fold as stream_q3_spilled under its former format names
     "stream_q3_spilled_parquet" ->
       """SELECT CAST(NULL AS BIGINT) AS l_orderkey,
         |       CAST(NULL AS VARCHAR) AS o_orderdate,
         |       CAST(NULL AS VARCHAR) AS o_orderpriority,
         |       CAST(NULL AS DOUBLE) AS revenue
         |WHERE 1 = 0""".stripMargin,
-    // mergelog-pinned twin: same exact-cancellation contract
     "stream_q3_spilled_mergelog" ->
       """SELECT CAST(NULL AS BIGINT) AS l_orderkey,
         |       CAST(NULL AS VARCHAR) AS o_orderdate,

@@ -103,7 +103,7 @@ object SpillScale {
         s""""spill_versions":${fin.spillHistory.size},""" +
         s""""stage_s":${f"$tStage%.1f"},"fold_s":${f"$tFold%.1f"},""" +
         s""""batch_q3_s":${f"$tBatch%.1f"},"top20_match":true}""")
-    } finally IncrementalQ3.cleanupSpillRoot(spark, root)
+    } finally IncrementalQ3.cleanupSpillRoot(root)
     spark.stop()
   }
 }

@@ -248,6 +248,26 @@ object Changelog {
   def batchOf(k: Int, tMax: Long): Column =
     least(expr(s"CAST(((t - 1L) * ${k}L) DIV ${tMax}L AS INT)"), lit(k - 1))
 
+  /** The event-time family's deterministic lateness injection: the
+    * lineitem events with `l_orderkey % 10 == 3` are withheld from their
+    * event-time slot and arrive after every on-time event.
+    */
+  val withheld: Column = substring(col("line"), 2, 2) === "LI" &&
+    element_at(split(substring(col("line"), 5, Int.MaxValue), "\\|"), 1)
+      .cast("long") % 10 === 3
+
+  /** The insert-only changelog in ARRIVAL order under [[withheld]]: `k`
+    * on-time batches cut by event time ([[batchOf]] over the whole
+    * changelog's trigger span), then one late batch of the withheld events.
+    */
+  def lateArrivals(spark: SparkSession, dir: String, k: Int): Seq[DataFrame] = {
+    val events = generateCached(spark, dir, insertOnly = true)
+    val tMax = events.agg(max(col("t"))).head().getLong(0)
+    val onTime = events.filter(!withheld).withColumn("batch", batchOf(k, tMax))
+    (0 until k).map(b => onTime.filter(col("batch") === b).drop("batch")) :+
+      events.filter(withheld)
+  }
+
   // -------------------------------------------------------------------
   // Parser (no_websocket.java:281–320 re-expressed as declarative columns)
   // -------------------------------------------------------------------

@@ -133,16 +133,14 @@ object EventTimeReplay {
   /** The arrival-ordered event logs, each line `<t>\t<line>` (event time
     * carried with the event, the way a real transport stamps it): on-time
     * events by event time, then the deliberately withheld late ones —
-    * [[StreamQueries.q3EventTime]]'s deterministic lateness injection
-    * (`LI` with `l_orderkey % 10 == 3`). One log, or one per relation.
+    * [[Changelog.withheld]], the event-time family's deterministic
+    * lateness injection. One log, or one per relation.
     */
   private def arrivals(spark: SparkSession, dir: String,
                        perRelation: Boolean): Seq[DataFrame] = {
     val events = Changelog.generateCached(spark, dir, insertOnly = true)
-    val fields = split(substring(col("line"), 5, Int.MaxValue), "\\|")
     val tag = substring(col("line"), 2, 2)
-    val tagged = events.withColumn("deferred",
-      tag === "LI" && element_at(fields, 1).cast("long") % 10 === 3)
+    val tagged = events.withColumn("deferred", Changelog.withheld)
     def log(rows: DataFrame) = rows
       .orderBy(col("deferred").asc, col("t"), col("sub"), col("idx"))
       .select(concat_ws("\t", col("t").cast("string"), col("line")).as("line"))

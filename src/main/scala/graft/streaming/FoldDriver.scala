@@ -266,13 +266,12 @@ object FoldDriver {
 
   /** The fold consumer of a run: batches per stream (its batch size is
     * `expected / batches`), the spill threshold given the stream's event
-    * count (0 = spill unconditionally), the late split, an observer of
-    * each folded batch, and an optional spill-format pin.
+    * count (0 = spill unconditionally), the late split, and an observer
+    * of each folded batch. The spill store is [[MergeLogSpill]].
     */
   final case class Fold(batches: Int, spillAtRows: Long => Long,
                         admit: Admit = admitAll,
-                        onApplied: (IncrementalQ3.State, Long) => Unit = (_, _) => (),
-                        format: Option[String] = None)
+                        onApplied: (IncrementalQ3.State, Long) => Unit = (_, _) => ())
 
   /** A drained run, as its answer reads it. */
   final class Finished private[FoldDriver] (spark: SparkSession, work: String) {
@@ -337,7 +336,6 @@ object FoldDriver {
     try {
       val expected = t.expected
       require(expected > 0, "empty changelog — nothing to replay")
-      fold.flatMap(_.format).foreach(SpillFormat.pin(spillRoot, _))
       StreamTune.prepare(spark)
       def start(group: String, batches: Int,
                 sink: (DataFrame, Long) => Unit): StreamingQuery =
@@ -494,7 +492,7 @@ object FoldDriver {
       answer(fin)
     } finally {
       t.handles.foreach(_.close())
-      IncrementalQ3.cleanupSpillRoot(spark, spillRoot)
+      IncrementalQ3.cleanupSpillRoot(spillRoot)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
     }
   }

@@ -148,10 +148,9 @@ object IncrementalQ3 {
     * difference between 95K and ~150K events/s at fine batching (k=8,
     * 15.3M events).
     */
-  private val CompactEvery =
-    Integer.getInteger("graft.compact.every", 4).intValue()
+  private val CompactEvery = 4
 
-  // --- state spill to bucketed tables (the 100× memory story) -----------
+  // --- state spill to the merge-log store (the 100× memory story) ------
   //
   // By default the five states are localCheckpoint'd frames — executor
   // storage memory (with BlockManager disk overflow), fine at driver-test
@@ -159,38 +158,30 @@ object IncrementalQ3 {
   // run peaks above 100 M state rows. With a spill dir set (the
   // `spillDir` parameter of [[step]]/[[runBatches]], defaulting to
   // `-Dgraft.ivm.spill.dir`), every compaction instead MERGEs each state
-  // into a bucketed-by-join-key table (the `join_bucketed` zero-Exchange
-  // shape) through the [[SpillFormat]] seam:
+  // into per-bucket parquet files ([[MergeLogSpill]], bucketed by the
+  // state's join key):
   //  - memory holds only the deltas since the last compaction — the
   //    envelope is CompactEvery × batch size, not accumulated state
   //    (under spill, compaction fires every CompactEvery batches even on
   //    insert-only streams, so the envelope claim holds without deletes);
-  //  - the next batches' delta joins read the state scan pre-partitioned
-  //    on its join key, so only the batch-sized delta shuffles (the
-  //    three-term [[ZSet.deltaJoin]] keeps the scan directly under each
-  //    join for exactly this reason);
+  //  - the next batches' delta joins broadcast the batch-sized delta
+  //    against the state scan ([[ZSet.deltaJoin]]), so the state never
+  //    shuffles;
   //  - a compaction after the first rewrites ONLY the buckets the deltas
   //    since the last spill touched ([[SpillMeta]]); untouched buckets
-  //    carry forward as hard links — at 100 TB state with trigger-sized
-  //    deltas the write is O(delta keys), never O(state). Locally the
-  //    format is bucketed parquet ([[BucketedParquetSpill]]); at cluster
-  //    scale the same seam targets a transactional table format.
-  // Spill dirs are versioned (v1, v2, …): a new version is fully written
-  // before the state rebinds to it, and only then is everything older
-  // than the PREVIOUS version deleted — a consumer holding last batch's
-  // State keeps readable files (hard links keep carried-forward content
-  // alive across pruning), same discipline as Snapshots.saveBatch.
+  //    carry forward as manifest entries naming the previous version's
+  //    files — at 100 TB state with trigger-sized deltas the write is
+  //    O(delta keys), never O(state). At cluster scale the same store
+  //    shape is a transactional table format's MERGE.
+  // Spill versions are numbered (v1, v2, …): a new version is fully
+  // written before the state rebinds to it, and only then is everything
+  // older than the PREVIOUS version dropped — a consumer holding last
+  // batch's State keeps readable files (the store's reference-counted GC
+  // keeps carried-forward files alive), same discipline as
+  // Snapshots.saveBatch.
   private[streaming] def spillRoot: Option[String] =
     sys.props.get("graft.ivm.spill.dir").map(_.trim)
       .filter(d => d.nonEmpty && d != "off")
-
-  // storage-seam implementation, BOUND TO THE ROOT (its FORMAT marker,
-  // written at first use from the `graft.ivm.spill.format` session
-  // default): bucketed parquet + hard links by default, the manifest/GC
-  // MERGE shape as the transactional-format stand-in — both pinned by
-  // the shared SpillFormatContractSpec. Root-bound resolution means a
-  // resume (or a spec) can never read a root with the wrong layout.
-  private def spillFmt(root: String): SpillFormat = SpillFormat.forRoot(root)
 
   // Version allocation is PER ROOT and seeded from whatever v<N> dirs
   // already exist there — a resumed process (Snapshots restores
@@ -224,25 +215,11 @@ object IncrementalQ3 {
     case a => grains(a.stripPrefix("agg").toInt).head
   }
 
-  /** End-of-query cleanup: drop EVERY spill version under `root` (scanned
-    * from disk, not from a State — so it also reaps versions left by a
-    * fold that failed mid-stream) and the root itself.
+  /** End-of-query cleanup: delete the whole spill root — every version,
+    * including those left by a fold that failed mid-stream.
     */
-  private[graft] def cleanupSpillRoot(spark: SparkSession, root: String): Unit = {
-    versionsOnDisk(root).foreach(dropSpill(spark, root, _))
+  private[graft] def cleanupSpillRoot(root: String): Unit =
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-  }
-
-  private def dropSpill(spark: SparkSession, root: String, version: Long): Unit = {
-    // state dirs are scanned from disk, not assumed: a root written by a
-    // different grain list (or the pre-r11 single "agg" layout) is reaped
-    // all the same
-    val vDir = new java.io.File(s"$root/v$version")
-    val names = Option(vDir.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory).map(_.getName)
-    names.foreach(spillFmt(root).drop(spark, root, version, _))
-    org.apache.commons.io.FileUtils.deleteQuietly(vDir)
-  }
 
   private val revType = "decimal(38,4)"
 
@@ -325,7 +302,7 @@ object IncrementalQ3 {
 
   /** Apply one micro-batch of raw changelog lines to the state. The
     * query and its grains come from `st` (set at [[init]]); `spillDir`
-    * bounds the memory envelope via bucketed-table state spill (default:
+    * bounds the memory envelope via the state spill (default:
     * the `graft.ivm.spill.dir` system property — threaded as a parameter
     * so concurrent folds in one JVM never share a mutable global).
     *
@@ -333,7 +310,7 @@ object IncrementalQ3 {
     * verdict item 1): with a positive threshold the fold starts IN-MEMORY
     * — compacting on the spill cadence (every CompactEvery batches) so
     * consolidated state size is measured at each compaction for free —
-    * and ENGAGES the bucketed-table path only once the measured state
+    * and ENGAGES the spill path only once the measured state
     * crosses the threshold. Below it, the fold never pays table-write
     * I/O it doesn't need (the r13 `stream_q3_event_time_replay` lesson:
     * unconditional spill cost 2.03× baseline at a scale where the state
@@ -469,7 +446,7 @@ object IncrementalQ3 {
     //      above), before the dCO/dAgg constructions whose AQE broadcast
     //      stages would otherwise be the first — uncached — parse readers;
     val spark = lines.sparkSession
-    val bucketN = SpillFormat.buckets
+    val bucketN = MergeLogSpill.Buckets
     def bucketExpr(key: String) = pmod(hash(col(key)), lit(bucketN)).cast("int")
     //   2. the three relation deltas, in ONE action over the cached parse.
     //      Under spill that action IS the dirty-bucket probe — the same
@@ -553,21 +530,18 @@ object IncrementalQ3 {
     def spill(root: String, name: String, key: String,
               cons: DataFrame => DataFrame,
               state: DataFrame, delta: DataFrame): DataFrame = {
-      // WRITE path: first spill pins the root to the session default
-      // (atomic create — ADVICE r12); read/cleanup paths never pin
-      SpillFormat.ensurePinned(root)
       val dirty = dirtySince(name)
       st.spillMeta match {
         case Some(meta) if meta.root == root && dirty.size < bucketN =>
-          val prev = spillFmt(root).readBuckets(spark, root, meta.version, name,
+          val prev = MergeLogSpill.readBuckets(spark, root, meta.version, name,
             state.schema, dirty)
           val rows = cons(
             (prev +: pendingSince(name)).reduce(_ unionByName _)
               .unionByName(delta))
-          spillFmt(root).write(spark, root, version.get, name, key, rows,
+          MergeLogSpill.write(spark, root, version.get, name, key, rows,
             carry = Some((meta.version, dirty)))
         case _ =>
-          spillFmt(root).write(spark, root, version.get, name, key,
+          MergeLogSpill.write(spark, root, version.get, name, key,
             cons(ZSet.append(state, delta)), carry = None)
       }
     }
@@ -644,8 +618,9 @@ object IncrementalQ3 {
     if (graft.Phase.enabled) System.err.println(
       f"[phase] ivm.step.upkeepBuild: ${(System.nanoTime() - upkeepT0) / 1e9}%.2fs")
     // everything older than the previous spill is now unreachable (carried-
-    // forward files survive as hard links under the newer versions)
-    spillTo.foreach(root => history.drop(2).foreach(dropSpill(spark, root, _)))
+    // forward files survive: the newer manifests still reference them)
+    spillTo.foreach(root =>
+      history.drop(2).foreach(MergeLogSpill.drop(root, _, next.names)))
     // Materialize ONLY the frames this step newly checkpointed,
     // CONCURRENTLY (independent Spark jobs — wall time is the slowest,
     // not the sum). On a non-compacting batch c/o/l/co are plain unions
@@ -686,7 +661,7 @@ object IncrementalQ3 {
     // adaptive engagement: a pre-engagement compaction just measured the
     // consolidated state (toPin == next.all exactly then, so sizes.sum IS
     // total state rows). Crossing the threshold latches the flag — the
-    // NEXT compaction MERGEs into the bucketed tables (full write first,
+    // NEXT compaction MERGEs into the spill store (full write first,
     // then incremental), and every later batch rides the bounded-memory
     // path. The first post-engagement batches still union in-memory until
     // that compaction — the envelope is CompactEvery batches of deltas

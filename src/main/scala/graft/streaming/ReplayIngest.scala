@@ -66,9 +66,9 @@ object ReplayIngest {
     * ([[Changelog.windowed]]), with the kill PINNED TO THE TEARDOWN —
     * deletes folded before the kill AND deletes left after it (structural,
     * from the ledger), so the resume crosses a snapshot/offset boundary
-    * with retraction state in flight on both sides. The spill root is
-    * FORMAT-pinned to the mergelog (manifest MERGE + refcounted GC + delta
-    * snapshots end to end). The converged answer is EXACTLY EMPTY: a lost
+    * with retraction state in flight on both sides, through the spill
+    * store's manifest MERGE, refcounted GC and delta snapshots end to
+    * end. The converged answer is EXACTLY EMPTY: a lost
     * DELETE batch leaves positive residue, a lost INSERT batch negative,
     * a double-applied one either sign. Sizing: kill at 4/9, 8 batches,
     * 4-chunk window → 4/9 + 1/8 + 1/8 + 1/6 = 0.86.
@@ -83,8 +83,7 @@ object ReplayIngest {
       else Changelog.generate(spark, dir, insertOnly = true)
     FoldDriver.run(spark, "replay_q3",
       Broker(Seq(ordered(events)), chunks = 24, maxAhead = if (fullCycle) 4 else 6),
-      fold = Some(Fold(batches = if (fullCycle) 8 else 6, spillAtRows = _ => 0L,
-        format = if (fullCycle) Some("mergelog") else None)),
+      fold = Some(Fold(batches = if (fullCycle) 8 else 6, spillAtRows = _ => 0L)),
       kill = StopAt(if (fullCycle) 4 * _ / 9 else _ / 3),
       cycle = fullCycle)(fin => FoldDriver.q3Top(fin.state))
   }

@@ -308,10 +308,9 @@ object Snapshots {
       .filter(_.nonEmpty).map(_.split(",").toIndexedSeq.map(_.trim): Seq[String])
     // schema templates for the bucket reads, from an empty fold shell
     val shell = IncrementalQ3.init(spark, grains)
-    val fmt = SpillFormat.forRoot(root)
     def part(name: String, schema: org.apache.spark.sql.types.StructType) = {
-      val base = fmt.readBuckets(spark, root, version, name, schema,
-        (0 until fmt.buckets).toSet)
+      val base = MergeLogSpill.readBuckets(spark, root, version, name, schema,
+        (0 until MergeLogSpill.Buckets).toSet)
       val pend = (0 until counts.getOrElse(name, 0))
         .map(k => spark.read.parquet(s"$d/pending_${name}_$k"))
       // eager checkpoint: sever the spill-table dependence before the

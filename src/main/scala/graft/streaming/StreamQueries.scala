@@ -167,47 +167,18 @@ object StreamQueries {
 
   /** FULL ± CYCLE FOLDED THROUGH THE SPILLED STATE PATH — the same
     * exact-cancellation contract as [[q3FullCycle]], but with the z-set
-    * states MERGEd into bucketed tables at every compaction
-    * (`graft.ivm.spill.dir`, [[IncrementalQ3]]'s bounded-memory mode) so
-    * the driver's oracle gate exercises the 100×-scale storage path, not
-    * just the in-memory fold. The changelog is capacity-windowed (nL/4)
-    * so deletes interleave from early on and the fold compacts — hence
-    * spills — mid-stream; a fold that never spilled would silently test
-    * nothing, so that is a loud failure. Converged answer: exactly empty,
-    * reconstructed THROUGH two generations of bucketed-table state.
+    * states MERGEd into the spill store ([[MergeLogSpill]]) at every
+    * compaction ([[IncrementalQ3]]'s bounded-memory mode) so the driver's
+    * oracle gate exercises the 100×-scale storage path, not just the
+    * in-memory fold. The changelog is capacity-windowed (nL/4) so deletes
+    * interleave from early on and the fold compacts — hence spills —
+    * mid-stream; a fold that never spilled would silently test nothing,
+    * so that is a loud failure. Converged answer: exactly empty,
+    * reconstructed THROUGH two generations of spilled state.
     */
-  def q3SpilledCycle(spark: SparkSession, dir: String): DataFrame =
-    q3SpilledCycle(spark, dir, format = None)
-
-  /** The SAME full-±-cycle spilled fold, FORMAT-pinned to the bucketed-
-    * parquet implementation — since r14 the COMPATIBILITY format (the
-    * mergelog is the session default, promoted on the 10× evidence), so
-    * the pinned query flipped sides: the contract spec proves the
-    * [[SpillFormat]] seam's algebra for both formats, but only a
-    * driver-oracle-gated full cycle proves a format under real compaction
-    * cadence, version GC, and the exact-cancellation contract — and BOTH
-    * formats keep that gate (`stream_q3_spilled` runs the default).
-    * Identical oracle to `stream_q3_spilled`.
-    */
-  def q3SpilledCycleParquet(spark: SparkSession, dir: String): DataFrame =
-    q3SpilledCycle(spark, dir, format = Some("parquet"))
-
-  /** The mergelog-FORMAT-pinned twin: the session default could in
-    * principle flip again (`graft.ivm.spill.format` is a property), so
-    * the mergelog keeps a gate that is pinned to it BY NAME rather than
-    * riding the default — per-format end-to-end coverage stays stable
-    * across default changes. Identical oracle to `stream_q3_spilled`.
-    */
-  def q3SpilledCycleMergelog(spark: SparkSession, dir: String): DataFrame =
-    q3SpilledCycle(spark, dir, format = Some("mergelog"))
-
-  private def q3SpilledCycle(spark: SparkSession, dir: String,
-                             format: Option[String]): DataFrame = {
+  def q3SpilledCycle(spark: SparkSession, dir: String): DataFrame = {
     val root = java.nio.file.Files
       .createTempDirectory("graft-ivm-spill-q").toString
-    // bind the fresh root to the requested format BEFORE first spill —
-    // thereafter every write/read/GC resolves through the root's marker
-    format.foreach(SpillFormat.pin(root, _))
     try {
       // the spill root is THREADED as a parameter (ADVICE r10): mutating
       // the process-global graft.ivm.spill.dir here would silently flip
@@ -217,12 +188,10 @@ object StreamQueries {
       require(fin.spillHistory.nonEmpty,
         "stream_q3_spilled: the fold never compacted — the spill path went unexercised")
       val conv = topAsStrings(fin)
-      val rows = conv.collect().toIndexedSeq // materialize BEFORE dropping tables
+      val rows = conv.collect().toIndexedSeq // materialize BEFORE dropping the root
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(rows.asJava, conv.schema)
-    } finally
-      // scans the root, so a fold that failed mid-stream is reaped too
-      IncrementalQ3.cleanupSpillRoot(spark, root)
+    } finally IncrementalQ3.cleanupSpillRoot(root)
   }
 
   /** ADAPTIVE SPILL, crossed MID-RUN (r13 verdict item 1): the spill is a
@@ -233,7 +202,7 @@ object StreamQueries {
     * fold provably starts IN-MEMORY (the first compaction consolidates on
     * the heap — structurally pinned), crosses the threshold at a
     * compaction-time measurement mid-stream, latches engagement, and
-    * MERGEs the post-engagement compaction into the bucketed tables. The
+    * MERGEs the post-engagement compaction into the spill store. The
     * converged answer must still be the batch Q3 top-20 — the strong
     * oracle, unchanged by where the state lived. (Post-engagement batches
     * ride the IDENTICAL code path as an always-on spill fold — the latch
@@ -272,7 +241,7 @@ object StreamQueries {
       val rows = conv.collect().toIndexedSeq // materialize BEFORE cleanup
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(rows.asJava, conv.schema)
-    } finally IncrementalQ3.cleanupSpillRoot(spark, root)
+    } finally IncrementalQ3.cleanupSpillRoot(root)
   }
 
   /** MID-STREAM snapshot: the top-20 after batch 2-of-3 of the SAME fold
@@ -366,17 +335,7 @@ object StreamQueries {
     */
   private def q3EventTimeFold(spark: SparkSession, dir: String,
                               delay: Long): (DataFrame, Long, Long) = {
-    val events = Changelog.generateCached(spark, dir, insertOnly = true)
-    val fields = split(substring(col("line"), 5, Int.MaxValue), "\\|")
-    val withDef = events.withColumn("deferred",
-      substring(col("line"), 2, 2) === "LI" &&
-        element_at(fields, 1).cast("long") % 10 === 3)
-    val tMax = events.agg(max(col("t"))).head().getLong(0)
-    val batched = withDef.filter(!col("deferred")).withColumn("batch",
-      Changelog.batchOf(K, tMax))
-    val arrivals: Seq[DataFrame] =
-      (0 until K).map(b => batched.filter(col("batch") === b).drop("batch")) :+
-        withDef.filter(col("deferred"))
+    val arrivals = Changelog.lateArrivals(spark, dir, K)
     var wm = Long.MinValue // max event time arrived; cutoff is wm − delay
     var dropped = 0L
     var admitted = 0L

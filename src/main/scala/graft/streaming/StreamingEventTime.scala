@@ -58,28 +58,16 @@ object StreamingEventTime {
 
   /** Stage the arrival-ordered event files once per (session, fixture):
     * K on-time batches (by event time) then ONE deliberately-late file
-    * holding the withheld lineitem events (`l_orderkey % 10 == 3`) —
-    * exactly [[StreamQueries.q3EventTime]]'s deterministic lateness
-    * injection. Each file's lines are `<t>\t<line>` (event time carried
-    * with the event, the way a real transport stamps it); file
-    * modification times are forced strictly increasing so
-    * FileStreamSource delivers arrivals in order.
+    * holding the withheld lineitem events ([[Changelog.lateArrivals]], the
+    * same arrivals [[StreamQueries.q3EventTime]] folds). Each file's lines
+    * are `<t>\t<line>` (event time carried with the event, the way a real
+    * transport stamps it); file modification times are forced strictly
+    * increasing so FileStreamSource delivers arrivals in order.
     */
   private[streaming] def stageArrivals(spark: SparkSession, dir: String): String =
     graft.sources.Staging.ensure(
       graft.sources.Staging.dirFor(spark, "etlive", dir)) { out =>
-      val events = Changelog.generateCached(spark, dir, insertOnly = true)
-      val fields = split(substring(col("line"), 5, Int.MaxValue), "\\|")
-      val withDef = events.withColumn("deferred",
-        substring(col("line"), 2, 2) === "LI" &&
-          element_at(fields, 1).cast("long") % 10 === 3)
-      val tMax = events.agg(max(col("t"))).head().getLong(0)
-      val batched = withDef.filter(!col("deferred")).withColumn("batch",
-        Changelog.batchOf(K, tMax))
-      val arrivals: Seq[DataFrame] =
-        (0 until K).map(b => batched.filter(col("batch") === b)) :+
-          withDef.filter(col("deferred"))
-      arrivals.zipWithIndex.foreach { case (a, k) =>
+      Changelog.lateArrivals(spark, dir, K).zipWithIndex.foreach { case (a, k) =>
         val tmp = s"$out/.tmp_$k"
         a.select(concat_ws("\t", col("t").cast("string"), col("line")))
           .coalesce(1).write.mode("overwrite").text(tmp)

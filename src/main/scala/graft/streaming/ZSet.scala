@@ -129,8 +129,8 @@ object ZSet {
     * its batch-bounded delta side ([[asBuildSide]]), so the state side
     * never shuffles at all: not in-memory (where the unknown-stats
     * checkpoint scan used to sort-merge, reshuffling the accumulated
-    * state every batch) and not spilled (where the bucketed scan already
-    * avoided the exchange but still paid the merge sort).
+    * state every batch) and not spilled (a plain scan of the spill
+    * store's files).
     */
   def deltaJoin(aOld: DataFrame, dA: DataFrame,
                 bOld: DataFrame, dB: DataFrame, cond: Column): DataFrame =

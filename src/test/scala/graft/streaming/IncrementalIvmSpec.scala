@@ -93,7 +93,7 @@ class IncrementalIvmSpec extends SparkSpec {
     assert(st.spillHistory.nonEmpty, "the Q5 fold never spilled")
     assert(spillVersions(root).nonEmpty)
     assert(st.agg.isEmpty, "the ± cycle left groups in the maintained aggregate")
-    IncrementalQ3.cleanupSpillRoot(spark, root)
+    IncrementalQ3.cleanupSpillRoot(root)
     assert(spillVersions(root).isEmpty, s"spill versions left: ${spillVersions(root)}")
   }
 
@@ -107,7 +107,7 @@ class IncrementalIvmSpec extends SparkSpec {
     }
     val root = tempRoot("graft-q10-spill")
     val spilled = try aggRows(Some(root))
-    finally IncrementalQ3.cleanupSpillRoot(spark, root)
+    finally IncrementalQ3.cleanupSpillRoot(root)
     val inMemory = aggRows(None)
     assert(inMemory.nonEmpty)
     assert(spilled == inMemory)

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The bucketed-table state spill ([[IncrementalQ3]]'s 100× memory story):
+/** The state spill ([[IncrementalQ3]]'s 100× memory story, stored by
+  * [[MergeLogSpill]]):
   *  - SEMANTICS: a spilled fold is bit-identical to the in-memory fold at
   *    every batch boundary, including exact empty convergence;
-  *  - PHYSICS: after a compaction the spilled state is a bucketed scan,
-  *    so a delta join against it shuffles ONLY the delta side;
+  *  - PHYSICS: every manifest entry's file holds exactly its bucket's
+  *    rows, and a compaction rewrites only the buckets its deltas touched;
   *  - HYGIENE: at most the two newest spill versions stay on disk.
   *
   * The changelog is capacity-windowed so deletes interleave mid-stream
@@ -34,6 +35,19 @@ class IncrementalSpillSpec extends SparkSpec {
 
   private lazy val plainTops: Seq[Seq[Seq[Any]]] = tops()
 
+  /** `name`@`v`'s manifest: bucket → root-relative data file. */
+  private def entries(root: String, v: Long, name: String): Map[Int, String] =
+    MergeLogSpill.readManifest(root, v, name).toMap
+
+  /** Buckets whose data file version `v` of `name` WROTE into the pool
+    * (the writing task names each file after its bucket).
+    */
+  private def poolBuckets(root: String, name: String, v: Long): Set[Int] =
+    Option(new java.io.File(s"$root/pool/$name/v$v").listFiles())
+      .getOrElse(Array.empty).toSet[java.io.File]
+      .flatMap(f => "-b(\\d{5})\\.parquet$".r.findFirstMatchIn(f.getName))
+      .map(_.group(1).toInt)
+
   test("spilled fold ≡ in-memory fold at every batch; versions pruned to two") {
     val plain = plainTops
     val root = java.nio.file.Files
@@ -51,73 +65,6 @@ class IncrementalSpillSpec extends SparkSpec {
     assert(versions.length <= 2, s"stale spill versions not pruned: ${versions.toSeq}")
   }
 
-  test("the non-default format serves the same fold via the root binding") {
-    // the storage seam's OTHER implementation under the REAL workload
-    // (bucketed parquet — the compatibility format since the r14 default
-    // flip; the unpinned test above exercises the mergelog default):
-    // same fold, same per-batch answers, same two-version pruning — the
-    // root is PINNED (its FORMAT marker) before first use, no global
-    // property mutation (r11 verdict item 3 + observation 1: root-bound
-    // resolution replaced the process-wide format switch)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ivm-spill-ml").toString
-    SpillFormat.pin(root, "parquet")
-    System.setProperty("graft.ivm.spill.dir", root)
-    val spilled = try tops()
-    finally System.clearProperty("graft.ivm.spill.dir")
-    assert(spilled == plainTops,
-      "the spill format is a storage choice, never a semantic one")
-    val versions = Option(new java.io.File(root).listFiles()).getOrElse(Array())
-      .filter(_.getName.startsWith("v")).map(_.getName)
-    assert(versions.nonEmpty, "the mergelog fold never spilled")
-    assert(versions.length <= 2, s"stale versions not pruned: ${versions.toSeq}")
-  }
-
-  test("delta join against a spilled state shuffles only the delta side") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ivm-spill-plan").toString
-    // the zero-Exchange join shape is the BUCKETED-PARQUET format's
-    // physical property — pinned explicitly now that the session default
-    // is the mergelog (whose plain-parquet reads trade the bucketed scan
-    // for listing-free metadata; measured faster end-to-end at 10×)
-    SpillFormat.pin(root, "parquet")
-    System.setProperty("graft.ivm.spill.dir", root)
-    // Run the probe INSIDE the hook, at the first compaction with live
-    // rows: spillHistory just grew, so the state frame is a pure
-    // bucketed-table scan (later batches union fresh deltas on top, which
-    // rightly erases the bucketing) AND its version is guaranteed live —
-    // executing a stashed old State after the fold ends would race
-    // version pruning once the fixture produces 3+ compactions
-    // (ADVICE r10: latent FileNotFound flake).
-    var plan0: Option[String] = None
-    var seen = 0
-    try fold { (_, st) =>
-      if (st.spillHistory.length > seen) {
-        seen = st.spillHistory.length
-        if (plan0.isEmpty && !st.o.isEmpty) {
-          // a batch-sized delta equi-joined on the state's bucket key: the
-          // state side must inherit the bucketing — exactly one Exchange
-          // (the delta's), never a re-shuffle of the state
-          val delta = spark.range(50)
-            .select(col("id").as("d_custkey"), lit(1L).as(ZSet.W))
-          val j = ZSet.join(delta.hint("merge"), st.o,
-            col("d_custkey") === col("o_custkey"))
-          j.collect()
-          plan0 = Some(j.queryExecution.executedPlan.toString)
-        }
-      }
-    } finally System.clearProperty("graft.ivm.spill.dir")
-    val plan = plan0.getOrElse(
-      fail("no compaction with live rows — capacity too large?"))
-    assert(plan.contains("Bucketed: true"),
-      s"the state side must plan as a bucketed scan:\n$plan")
-    // every Exchange in the plan repartitions the DELTA (d_custkey); the
-    // state's rows never move — that is the whole point of the spill shape
-    val exchangeLines = plan.linesIterator.filter(_.contains("Exchange")).toSeq
-    assert(exchangeLines.nonEmpty && exchangeLines.forall(_.contains("d_custkey")),
-      s"only the delta side may shuffle:\n$plan")
-  }
-
   test("bucket probe contract: pmod(hash(k), n) IS the writer's bucket id") {
     // The dirty-bucket compaction classifies buckets with
     // pmod(hash(key), n); the writer places rows by HashPartitioning's
@@ -128,30 +75,28 @@ class IncrementalSpillSpec extends SparkSpec {
     val root = java.nio.file.Files
       .createTempDirectory("graft-bucket-contract").toString
     val df = spark.range(500).select(col("id").as("k"), lit(1L).as(ZSet.W))
-    val written = BucketedParquetSpill.write(
+    val written = MergeLogSpill.write(
       spark, root, 1L, "probe", "k", df, carry = None)
     assert(written.count() == 500)
-    val files = Option(new java.io.File(s"$root/v1/probe").listFiles())
-      .getOrElse(Array.empty)
-      .flatMap(f => BucketedParquetSpill.bucketOf(f.getName).map(f -> _))
-    assert(files.nonEmpty, "bucketed write produced no parseable data files")
-    val n = BucketedParquetSpill.buckets
-    files.foreach { case (f, declaredBucket) =>
-      val probed = spark.read.parquet(f.getPath)
+    val entries = MergeLogSpill.readManifest(root, 1L, "probe")
+    assert(entries.nonEmpty, "the write recorded no manifest entries")
+    val n = MergeLogSpill.Buckets
+    entries.foreach { case (declaredBucket, file) =>
+      val probed = spark.read.parquet(s"$root/$file")
         .select(pmod(hash(col("k")), lit(n)).cast("int")).distinct()
         .collect().map(_.getInt(0)).toSet
       assert(probed == Set(declaredBucket),
-        s"file ${f.getName}: writer bucket $declaredBucket but probe says $probed")
+        s"file $file: writer bucket $declaredBucket but probe says $probed")
     }
-    BucketedParquetSpill.drop(spark, root, 1L, "probe")
+    IncrementalQ3.cleanupSpillRoot(root)
   }
 
   test("dirty-bucket compaction: untouched buckets carry forward unrewritten") {
     // Key-churn fixture: a broad first compaction (full write), then four
     // batches touching a HANDFUL of lineitem keys — the second compaction
-    // must rewrite only those keys' buckets and hard-link every other
-    // bucket's files from the previous version (byte-identical by
-    // construction: same inode). This is the O(delta keys) write the 100×
+    // must rewrite only those keys' buckets and carry every other bucket
+    // forward: v2's manifest names v1's file for it, and v2 writes no data
+    // file for it. This is the O(delta keys) write the 100×
     // story needs; the sf-fixture folds can't show it because their
     // per-batch deltas touch every bucket.
     import spark.implicits._
@@ -166,48 +111,36 @@ class IncrementalSpillSpec extends SparkSpec {
     )
     val root = java.nio.file.Files
       .createTempDirectory("graft-ivm-dirty").toString
-    SpillFormat.pin(root, "parquet") // hard-link carry-forward is the
-                                     // parquet format's mechanism
     val fin = batches.foldLeft(IncrementalQ3.init(spark)) { (st, ls) =>
       IncrementalQ3.step(st, ls.toDF("line"), spillDir = Some(root))
     }
     assert(fin.spillHistory.length == 2,
       s"expected two compactions, got history ${fin.spillHistory}")
     val List(v2, v1) = fin.spillHistory
-    def filesOf(v: Long, name: String): Map[String, java.io.File] =
-      Option(new java.io.File(s"$root/v$v/$name").listFiles())
-        .getOrElse(Array.empty)
-        .flatMap(f => BucketedParquetSpill.bucketOf(f.getName).map(_ => f.getName -> f))
-        .toMap
-    def sameInode(a: java.io.File, b: java.io.File): Boolean =
-      java.nio.file.Files.isSameFile(a.toPath, b.toPath)
-    // states with NO deltas in batches 5–8 (c, o, co): every v1 file must
-    // reappear in v2 as the SAME file (hard link), none rewritten
+    // states with NO deltas in batches 5–8 (c, o, co): v2's manifest names
+    // every v1 file unchanged, and v2 wrote none of their data
     for (name <- Seq("c", "o", "co")) {
-      val (f1, f2) = (filesOf(v1, name), filesOf(v2, name))
-      assert(f1.nonEmpty, s"$name@v$v1 has no data files")
-      assert(f1.keySet.subsetOf(f2.keySet),
-        s"$name: v1 files ${f1.keySet} not all carried into v2 ${f2.keySet}")
-      f1.foreach { case (n, f) => assert(sameInode(f, f2(n)),
-        s"$name/$n was rewritten despite zero deltas") }
+      val (e1, e2) = (entries(root, v1, name), entries(root, v2, name))
+      assert(e1.nonEmpty, s"$name@v$v1 has no data files")
+      assert(e2 == e1, s"$name was rewritten despite zero deltas: v1 $e1, v2 $e2")
+      assert(poolBuckets(root, name, v2).isEmpty,
+        s"$name: v$v2 wrote data files despite zero deltas")
     }
     // the lineitem state: buckets of the churned keys (100, 200, 201)
     // rewritten, everything else carried forward
-    val n = BucketedParquetSpill.buckets
+    val n = MergeLogSpill.Buckets
     val touched = Seq(100L, 200L, 201L)
       .toDF("k").select(pmod(hash(col("k")), lit(n)).cast("int"))
       .collect().map(_.getInt(0)).toSet
-    val (l1, l2) = (filesOf(v1, "l"), filesOf(v2, "l"))
-    val carried = l1.filter { case (n2, f) =>
-      l2.contains(n2) && sameInode(f, l2(n2)) }
-    val untouchedV1 = l1.filterNot { case (_, f) =>
-      spark.read.parquet(f.getPath)
-        .select(pmod(hash(col("l_orderkey")), lit(n)).cast("int")).distinct()
-        .collect().map(_.getInt(0)).exists(touched) }
-    assert(untouchedV1.nonEmpty, "fixture bug: every l bucket was touched")
-    untouchedV1.foreach { case (n2, f) =>
-      assert(l2.contains(n2) && sameInode(f, l2(n2)),
-        s"l/$n2 holds no churned key but was rewritten") }
+    val (l1, l2) = (entries(root, v1, "l"), entries(root, v2, "l"))
+    val untouched = l1.keySet -- touched
+    assert(untouched.nonEmpty, "fixture bug: every l bucket was touched")
+    untouched.foreach { b =>
+      assert(l2.get(b).contains(l1(b)),
+        s"l bucket $b holds no churned key but was rewritten") }
+    assert(poolBuckets(root, "l", v2).subsetOf(touched),
+      s"l: v$v2 wrote data files for untouched buckets " +
+        s"${poolBuckets(root, "l", v2) -- touched}")
     // and the churn is SEMANTICALLY applied: the spilled fold equals the
     // same batches folded in memory, exactly
     val plainFin = batches.foldLeft(IncrementalQ3.init(spark)) { (st, ls) =>
@@ -216,7 +149,7 @@ class IncrementalSpillSpec extends SparkSpec {
     val a = fin.agg.orderBy("l_orderkey").collect().map(_.toSeq).toSeq
     val b = plainFin.agg.orderBy("l_orderkey").collect().map(_.toSeq).toSeq
     assert(a == b, "dirty-bucket compaction changed the maintained aggregate")
-    IncrementalQ3.cleanupSpillRoot(spark, root)
+    IncrementalQ3.cleanupSpillRoot(root)
   }
 
   test("per-grain probe: a fact-grain's untouched agg buckets carry forward") {
@@ -226,7 +159,7 @@ class IncrementalSpillSpec extends SparkSpec {
     // compaction). Base batch spreads 40 distinct order dates across the
     // buckets; the post-compaction churn touches ONE order (hence one
     // date), so the second compaction must rewrite only that date's agg
-    // bucket and hard-link every other one from the previous version.
+    // bucket and carry every other one forward from the previous version.
     import spark.implicits._
     def cu(ck: Long) = s"+CU|$ck|c$ck|0|100.0|BUILDING"
     def date(k: Long) = java.time.LocalDate.of(1995, 1, 1).plusDays(k).toString
@@ -240,7 +173,6 @@ class IncrementalSpillSpec extends SparkSpec {
     )
     val root = java.nio.file.Files
       .createTempDirectory("graft-ivm-grain-probe").toString
-    SpillFormat.pin(root, "parquet") // asserts hard-link carry-forward
     val grains = Seq(IncrementalQ3.DefaultAggKeys, Seq("o_orderdate"))
     val fin = batches.foldLeft(IncrementalQ3.init(spark, grains)) { (st, ls) =>
       IncrementalQ3.step(st, ls.toDF("line"), spillDir = Some(root))
@@ -248,28 +180,21 @@ class IncrementalSpillSpec extends SparkSpec {
     assert(fin.spillHistory.length == 2,
       s"expected two compactions, got history ${fin.spillHistory}")
     val List(v2, v1) = fin.spillHistory
-    def filesOf(v: Long, name: String): Map[String, java.io.File] =
-      Option(new java.io.File(s"$root/v$v/$name").listFiles())
-        .getOrElse(Array.empty)
-        .flatMap(f => BucketedParquetSpill.bucketOf(f.getName).map(_ => f.getName -> f))
-        .toMap
-    def sameInode(a: java.io.File, b: java.io.File): Boolean =
-      java.nio.file.Files.isSameFile(a.toPath, b.toPath)
-    val n = BucketedParquetSpill.buckets
+    val n = MergeLogSpill.Buckets
     val touched = Seq(date(2)).toDF("d")
       .select(pmod(hash(to_date(col("d"))), lit(n)).cast("int"))
       .collect().map(_.getInt(0)).toSet
-    val (a1, a2) = (filesOf(v1, "agg1"), filesOf(v2, "agg1"))
+    val (a1, a2) = (entries(root, v1, "agg1"), entries(root, v2, "agg1"))
     assert(a1.size > 4, s"fixture bug: fact grain landed in only ${a1.size} buckets")
-    val untouchedV1 = a1.filterNot { case (_, f) =>
-      spark.read.parquet(f.getPath)
-        .select(pmod(hash(col("o_orderdate")), lit(n)).cast("int")).distinct()
-        .collect().map(_.getInt(0)).exists(touched) }
-    assert(untouchedV1.nonEmpty, "fixture bug: every agg1 bucket was touched")
-    untouchedV1.foreach { case (n2, f) =>
-      assert(a2.contains(n2) && sameInode(f, a2(n2)),
-        s"agg1/$n2 holds no churned date but was rewritten — the fact " +
-          "grain degraded to an all-dirty (O(state)) compaction") }
+    val untouched = a1.keySet -- touched
+    assert(untouched.nonEmpty, "fixture bug: every agg1 bucket was touched")
+    untouched.foreach { b =>
+      assert(a2.get(b).contains(a1(b)),
+        s"agg1 bucket $b holds no churned date but was rewritten — the " +
+          "fact grain degraded to an all-dirty (O(state)) compaction") }
+    assert(poolBuckets(root, "agg1", v2).subsetOf(touched),
+      s"agg1: v$v2 wrote data files for untouched buckets " +
+        s"${poolBuckets(root, "agg1", v2) -- touched}")
     // and the maintained fact-grain aggregate is still exactly right:
     // equals the same batches folded in memory
     val plainFin = batches.foldLeft(IncrementalQ3.init(spark, grains)) { (st, ls) =>
@@ -278,7 +203,7 @@ class IncrementalSpillSpec extends SparkSpec {
     val a = fin.aggs(1)._2.orderBy("o_orderdate").collect().map(_.toSeq).toSeq
     val b = plainFin.aggs(1)._2.orderBy("o_orderdate").collect().map(_.toSeq).toSeq
     assert(a == b, "per-grain probe changed the maintained fact-grain aggregate")
-    IncrementalQ3.cleanupSpillRoot(spark, root)
+    IncrementalQ3.cleanupSpillRoot(root)
   }
 
   test("adaptive threshold: in-memory below it, engaged above it, same answers") {
@@ -327,12 +252,12 @@ class IncrementalSpillSpec extends SparkSpec {
     assert(loaded.spillEngaged,
       "the engagement latch must survive a snapshot — a resumed fold " +
         "falling back to the heap would re-pay the memory it can't afford")
-    IncrementalQ3.cleanupSpillRoot(spark, rootLo)
+    IncrementalQ3.cleanupSpillRoot(rootLo)
   }
 
   test("snapshot save/load composes with spill: resume ≡ uninterrupted") {
     // operability × memory-bound together: a fold running WITH spill is
-    // snapshotted mid-stream (its states are bucketed-table scans),
+    // snapshotted mid-stream (its states are spill-store scans),
     // reloaded, and folded on — still bit-equal and still exactly empty
     val tMax = events.agg(max(col("t"))).head().getLong(0)
     val batched = events.withColumn("batch",

@@ -46,17 +46,13 @@ class SnapshotsSpec extends SparkSpec {
       IncrementalQ3.step(_, _, spillDir = Some(spillA)))
     val truth = IncrementalQ3.topN(direct).collect().map(_.toSeq).toSeq
     assert(truth.nonEmpty)
-    // kill points: pre-spill, at-compaction, mid-window — and mid-window
-    // again over the MERGELOG root binding (the delta snapshot's resume
-    // resolves the root's FORMAT marker, so the pending-chain composition
-    // must hold under either layout)
-    for ((cut, fmt) <- Seq(2 -> "parquet", 4 -> "parquet",
-                           5 -> "parquet", 5 -> "mergelog")) {
+    // kill points: pre-spill, the batch before the first compaction,
+    // at-compaction, mid-window
+    for (cut <- Seq(2, 3, 4, 5)) {
       val spillB = java.nio.file.Files
-        .createTempDirectory(s"graft-dsnap-b$cut-$fmt").toString
-      SpillFormat.pin(spillB, fmt)
+        .createTempDirectory(s"graft-dsnap-b$cut").toString
       val snapDir = java.nio.file.Files
-        .createTempDirectory(s"graft-dsnap-s$cut-$fmt").toString
+        .createTempDirectory(s"graft-dsnap-s$cut").toString
       var st = IncrementalQ3.init(spark)
       bs.take(cut).zipWithIndex.foreach { case (b, i) =>
         st = IncrementalQ3.step(st, b, spillDir = Some(spillB))
@@ -74,10 +70,36 @@ class SnapshotsSpec extends SparkSpec {
         IncrementalQ3.step(_, _, spillDir = Some(spillB)))
       val got = IncrementalQ3.topN(fin).collect().map(_.toSeq).toSeq
       assert(got == truth,
-        s"delta-snapshot resume diverged at cut=$cut fmt=$fmt")
-      IncrementalQ3.cleanupSpillRoot(spark, spillB)
+        s"delta-snapshot resume diverged at cut=$cut")
+      IncrementalQ3.cleanupSpillRoot(spillB)
     }
-    IncrementalQ3.cleanupSpillRoot(spark, spillA)
+    IncrementalQ3.cleanupSpillRoot(spillA)
+  }
+
+  test("a spill root in an older build's parquet layout fails loudly on resume") {
+    // an older build could spill in a bucketed-parquet layout (state dirs
+    // of bucket files, no manifests) and named it in the root's FORMAT
+    // marker; resuming a delta snapshot over such a root must refuse it,
+    // not read the missing manifests back as an empty state
+    import java.nio.file.{Files, Paths}
+    val bs = batches(insertOnly = true, k = 6)
+    val spill = Files.createTempDirectory("graft-dsnap-old").toString
+    val snapDir = Files.createTempDirectory("graft-dsnap-old-s").toString
+    var st = IncrementalQ3.init(spark)
+    bs.take(4).zipWithIndex.foreach { case (b, i) =>
+      st = IncrementalQ3.step(st, b, spillDir = Some(spill))
+      Snapshots.saveBatchAuto(st, snapDir, i.toLong)
+    }
+    assert(Files.exists(Paths.get(s"$snapDir/b3/DELTA")),
+      "fixture bug: the snapshot must be in delta form to read the spill root")
+    IncrementalQ3.cleanupSpillRoot(spill)
+    st.names.foreach(n => spark.range(1).write
+      .parquet(s"$spill/v${st.spillHistory.head}/$n"))
+    Files.write(Paths.get(spill, "FORMAT"), "parquet".getBytes("UTF-8"))
+    val err = intercept[IllegalArgumentException](
+      Snapshots.loadLatest(spark, snapDir))
+    assert(err.getMessage.contains("'parquet' layout"), err.getMessage)
+    IncrementalQ3.cleanupSpillRoot(spill)
   }
 
   test("full-cycle resume still cancels to exactly empty") {

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The [[SpillFormat]] CONTRACT, run against BOTH implementations (r11
-  * verdict item 3 — "swap in Delta/Iceberg without touching the algebra"
-  * is only credible once a second implementation passes the same suite):
+/** The spill store's CONTRACT ([[MergeLogSpill]]) — what the z-set
+  * algebra relies on, stated so that a transactional table format
+  * (Delta/Iceberg MERGE) standing in for the store must pass it too:
   *
   *  - full write → the returned frame and an all-buckets read both equal
   *    the input;
@@ -18,8 +18,8 @@ import graft.SparkSpec
   *    rows, and an empty/fileless request yields an empty frame with the
   *    pinned schema;
   *  - version-drop survivability: dropping the PREVIOUS version must not
-  *    damage content the new version carried forward (hard links hold
-  *    inodes; manifests hold references) — the invariant the algebra's
+  *    damage content the new version carried forward (its manifest
+  *    still references it) — the invariant the algebra's
   *    two-version pruning relies on;
   *  - drop removes the version's own content.
   */
@@ -31,65 +31,61 @@ class SpillFormatContractSpec extends SparkSpec {
     (0L until 500L).map(k => (k, 1L)).toDF("k", ZSet.W)
 
   private def bucketOfKey(k: Long): Int =
-    Seq(k).toDF("k").select(pmod(hash(col("k")), lit(SpillFormat.buckets))
+    Seq(k).toDF("k").select(pmod(hash(col("k")), lit(MergeLogSpill.Buckets))
       .cast("int")).head().getInt(0)
 
   private def rowsOf(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  for ((label, fmt) <- Seq("parquet" -> BucketedParquetSpill,
-                           "mergelog" -> MergeLogSpill)) {
+  test("[mergelog] full write: returned frame and all-buckets read equal input") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-spillfmt-mergelog-full").toString
+    val w = MergeLogSpill.write(spark, root, 1L, "s", "k", state1, carry = None)
+    assert(rowsOf(w) == rowsOf(state1))
+    val all = MergeLogSpill.readBuckets(spark, root, 1L, "s", state1.schema,
+      (0 until MergeLogSpill.Buckets).toSet)
+    assert(rowsOf(all) == rowsOf(state1))
+    MergeLogSpill.drop(root, 1L, Seq("s"))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
 
-    test(s"[$label] full write: returned frame and all-buckets read equal input") {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft-spillfmt-$label-full").toString
-      val w = fmt.write(spark, root, 1L, "s", "k", state1, carry = None)
-      assert(rowsOf(w) == rowsOf(state1))
-      val all = fmt.readBuckets(spark, root, 1L, "s", state1.schema,
-        (0 until fmt.buckets).toSet)
-      assert(rowsOf(all) == rowsOf(state1))
-      fmt.drop(spark, root, 1L, "s")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    }
+  test("[mergelog] carry: dirty-only input serves the full merged state") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-spillfmt-mergelog-carry").toString
+    MergeLogSpill.write(spark, root, 1L, "s", "k", state1, carry = None)
+    // the churn: key 3 upweighted, key 7 deleted → their buckets dirty
+    val dirty = Set(bucketOfKey(3L), bucketOfKey(7L))
+    val expected = rowsOf(state1) - ((3L, 1L)) - ((7L, 1L)) + ((3L, 2L))
+    val dirtyContent = expected.toSeq.toDF("k", ZSet.W)
+      .filter(pmod(hash(col("k")), lit(MergeLogSpill.Buckets)).cast("int")
+        .isin(dirty.toSeq: _*))
+    val w2 = MergeLogSpill.write(spark, root, 2L, "s", "k", dirtyContent,
+      carry = Some((1L, dirty)))
+    assert(rowsOf(w2) == expected,
+      "carry write must serve dirty content + carried clean buckets")
+    // dirty-read returns exactly the requested buckets' rows
+    val dr = rowsOf(MergeLogSpill.readBuckets(spark, root, 2L, "s", state1.schema, dirty))
+    assert(dr == rowsOf(dirtyContent))
+    // version-drop survivability: v1 goes, v2 must stay fully readable
+    MergeLogSpill.drop(root, 1L, Seq("s"))
+    val after = MergeLogSpill.readBuckets(spark, root, 2L, "s", state1.schema,
+      (0 until MergeLogSpill.Buckets).toSet)
+    assert(rowsOf(after) == expected,
+      "dropping the previous version damaged carried-forward content")
+    // and dropping v2 removes its content
+    MergeLogSpill.drop(root, 2L, Seq("s"))
+    val gone = MergeLogSpill.readBuckets(spark, root, 2L, "s", state1.schema,
+      (0 until MergeLogSpill.Buckets).toSet)
+    assert(gone.isEmpty, "dropped version still served rows")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
 
-    test(s"[$label] carry: dirty-only input serves the full merged state") {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft-spillfmt-$label-carry").toString
-      fmt.write(spark, root, 1L, "s", "k", state1, carry = None)
-      // the churn: key 3 upweighted, key 7 deleted → their buckets dirty
-      val dirty = Set(bucketOfKey(3L), bucketOfKey(7L))
-      val expected = rowsOf(state1) - ((3L, 1L)) - ((7L, 1L)) + ((3L, 2L))
-      val dirtyContent = expected.toSeq.toDF("k", ZSet.W)
-        .filter(pmod(hash(col("k")), lit(fmt.buckets)).cast("int")
-          .isin(dirty.toSeq: _*))
-      val w2 = fmt.write(spark, root, 2L, "s", "k", dirtyContent,
-        carry = Some((1L, dirty)))
-      assert(rowsOf(w2) == expected,
-        "carry write must serve dirty content + carried clean buckets")
-      // dirty-read returns exactly the requested buckets' rows
-      val dr = rowsOf(fmt.readBuckets(spark, root, 2L, "s", state1.schema, dirty))
-      assert(dr == rowsOf(dirtyContent))
-      // version-drop survivability: v1 goes, v2 must stay fully readable
-      fmt.drop(spark, root, 1L, "s")
-      val after = fmt.readBuckets(spark, root, 2L, "s", state1.schema,
-        (0 until fmt.buckets).toSet)
-      assert(rowsOf(after) == expected,
-        "dropping the previous version damaged carried-forward content")
-      // and dropping v2 removes its content
-      fmt.drop(spark, root, 2L, "s")
-      val gone = fmt.readBuckets(spark, root, 2L, "s", state1.schema,
-        (0 until fmt.buckets).toSet)
-      assert(gone.isEmpty, "dropped version still served rows")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    }
-
-    test(s"[$label] fileless read yields an empty frame with the pinned schema") {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft-spillfmt-$label-empty").toString
-      val e = fmt.readBuckets(spark, root, 9L, "s", state1.schema, Set(0, 1))
-      assert(e.schema == state1.schema && e.isEmpty)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    }
+  test("[mergelog] fileless read yields an empty frame with the pinned schema") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-spillfmt-mergelog-empty").toString
+    val e = MergeLogSpill.readBuckets(spark, root, 9L, "s", state1.schema, Set(0, 1))
+    assert(e.schema == state1.schema && e.isEmpty)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("[mergelog] carry is metadata-only: fresh data files exist only for dirty buckets") {
@@ -98,18 +94,14 @@ class SpillFormatContractSpec extends SparkSpec {
     MergeLogSpill.write(spark, root, 1L, "s", "k", state1, carry = None)
     val dirty = Set(bucketOfKey(3L))
     val dirtyContent = state1
-      .filter(pmod(hash(col("k")), lit(SpillFormat.buckets)).cast("int")
+      .filter(pmod(hash(col("k")), lit(MergeLogSpill.Buckets)).cast("int")
         .isin(dirty.toSeq: _*))
     MergeLogSpill.write(spark, root, 2L, "s", "k", dirtyContent,
       carry = Some((1L, dirty)))
     // v2's manifest points FRESH (v2-pool) files only for the dirty
     // buckets — every clean bucket re-pointed at v1's files, zero data
     // I/O (checked from the manifest, the format's own metadata)
-    val manifest = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$root/v2/s/MANIFEST")),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").toIndexedSeq.filter(_.nonEmpty)
-      .map { l => val Array(b, f) = l.split("\\|", 2); b.toInt -> f }
+    val manifest = MergeLogSpill.readManifest(root, 2L, "s")
     val freshBuckets = manifest.filter(_._2.contains("/v2/")).map(_._1).toSet
     assert(freshBuckets == dirty,
       s"carry rewrote data for buckets ${freshBuckets -- dirty} it should have re-pointed")
@@ -141,10 +133,10 @@ class SpillFormatContractSpec extends SparkSpec {
     assert(rowsOf(w) == rowsOf(state1),
       "a foreign pool file leaked into the written state")
     val all = MergeLogSpill.readBuckets(spark, root, 1L, "s", state1.schema,
-      (0 until MergeLogSpill.buckets).toSet)
+      (0 until MergeLogSpill.Buckets).toSet)
     assert(rowsOf(all) == rowsOf(state1),
       "a foreign pool file leaked into the bucket read")
-    MergeLogSpill.drop(spark, root, 1L, "s")
+    MergeLogSpill.drop(root, 1L, Seq("s"))
     assert(java.nio.file.Files.exists(decoy),
       "GC deleted a file no manifest ever referenced — it must only " +
         "reclaim what it owns")
