@@ -12,10 +12,9 @@ import graft.streaming.ZSet
   * checkpointed DELTA frames — exactly like [[graft.streaming.IncrementalQ3.step]]
   * does per micro-batch, executes the join, and prints the AQE FINAL plan.
   *
-  * `sbt -Dgraft.ivm.broadcast.delta=false "runMain graft.ZSetPlanDump"`
-  * shows the unhinted shape (state-side shuffle written before AQE's
-  * runtime downgrade); the default shows the r15 broadcast-delta shape
-  * (plans/r15/ivm_delta_join_{before,after}.txt).
+  * `sbt "runMain graft.ZSetPlanDump"` shows the r15 broadcast-delta shape
+  * (plans/r15/ivm_delta_join_after.txt; the unhinted shape it replaced is
+  * plans/r15/ivm_delta_join_before.txt).
   */
 object ZSetPlanDump {
   def main(args: Array[String]): Unit = {
@@ -32,8 +31,7 @@ object ZSetPlanDump {
     val dB = Seq((3L, 1L)).toDF("b_k", ZSet.W).localCheckpoint()
     val dj = ZSet.deltaJoin(state, dA, bState, dB, col("a_k") === col("b_k"))
     dj.collect()
-    println(s"=== ZSet.deltaJoin executed plan (AQE final), " +
-      s"graft.ivm.broadcast.delta=${sys.props.getOrElse("graft.ivm.broadcast.delta", "true")} ===")
+    println("=== ZSet.deltaJoin executed plan (AQE final) ===")
     println(dj.queryExecution.executedPlan.toString)
     spark.stop()
   }

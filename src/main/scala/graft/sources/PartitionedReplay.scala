@@ -10,13 +10,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** PARTITIONED replayable transport — the real broker shape. A Kafka topic
-  * is not one totally-ordered stream: it is P independently-ordered
-  * partitions, ordered WITHIN each and arbitrary ACROSS them, each with
-  * its own offset sequence. This source consumes a set of
-  * [[ReplayServer]] instances as the partitions of one logical topic (the
-  * standard CDC layout — one ordered log per table — is exactly this with
-  * partition = relation):
+/** The replay source — the real broker shape. A Kafka topic is not one
+  * totally-ordered stream: it is P independently-ordered partitions,
+  * ordered WITHIN each and arbitrary ACROSS them, each with its own offset
+  * sequence. This source consumes a set of [[ReplayServer]] instances as
+  * the partitions of one logical topic (the standard CDC layout — one
+  * ordered log per table — is exactly this with partition = relation; a
+  * single ordered log is the one-partition topic, `ports` = its one port):
   *
   *  - offsets are a VECTOR, one sequence number per partition,
   *    checkpointed through Structured Streaming's offset log as
@@ -103,6 +103,9 @@ class PartitionedReplayStream(host: String, ports: IndexedSeq[Int],
                               maxTriggerDelayMs: Long, group: String = "")
     extends MicroBatchStream with SupportsAdmissionControl {
 
+  // POLLED per admission decision, never cached: a growing broker's
+  // published watermark advances while the query runs, and a cached total
+  // would freeze the stream at whatever had arrived by the first trigger
   private def counts(): IndexedSeq[Long] =
     ports.map(p => ReplayServer.count(host, p))
 
@@ -155,7 +158,8 @@ class PartitionedReplayStream(host: String, ports: IndexedSeq[Int],
     throw new UnsupportedOperationException(
       "graft-replay-partitioned uses admission control: latestOffset(start, limit)")
 
-  // captured at construction like ReplayStream's (driver-side)
+  // set on construction (driver-side, like a real source's conf capture):
+  // the scheduler-visible core count that caps the adaptive split fan-out
   private val parallelism: Int = ReplayServer.schedulerParallelism
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
@@ -165,9 +169,10 @@ class PartitionedReplayStream(host: String, ports: IndexedSeq[Int],
     // the old one-task-per-partition plan made the dominant log — lineitem,
     // ~80% of events at TPC-H ratios — fetch AND decode serially, and left
     // the downstream per-batch cache 3-partitioned and skewed). The batch's
-    // split budget (scheduler parallelism, floored per split like the
-    // single-log source) is apportioned across partitions in proportion to
-    // their admitted rows, ≥ 1 each — a broker consumer fanning one
+    // split budget (scheduler parallelism, floored per split by
+    // ReplayServer.splitCount) is apportioned across partitions in
+    // proportion to their admitted rows, ≥ 1 each — one partition's ranges
+    // tile it contiguously (f + rows·i/k) — a broker consumer fanning one
     // partition's fetch across readers is sound here because offsets are
     // stamped from range start + position, so sub-ranges reproduce the
     // identical (partition, offset, value) rows.
@@ -175,7 +180,7 @@ class PartitionedReplayStream(host: String, ports: IndexedSeq[Int],
       (p, a.getOrElse(p, 0L), b.getOrElse(p, 0L))
     }.filter { case (_, f, t) => t > f }
     val total = ranges.map { case (_, f, t) => t - f }.sum
-    val budget = ReplayServer.splitCount(0, total, parallelism)
+    val budget = ReplayServer.splitCount(total, parallelism)
     ranges.flatMap { case (p, f, t) =>
       val rows = t - f
       val k = math.max(1L, math.min(rows, budget * rows / math.max(1L, total))).toInt
@@ -191,7 +196,8 @@ class PartitionedReplayStream(host: String, ports: IndexedSeq[Int],
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionedReplayReaderFactory
 
-  override def commit(end: Offset): Unit = ()
+  override def commit(end: Offset): Unit = () // the server retains all —
+                                              // replayability IS the point
   override def stop(): Unit = ()
 }
 
@@ -215,12 +221,16 @@ class PartitionedReplayReaderFactory extends PartitionReaderFactory {
           served += 1
           true
         } else {
+          // the offset range is a CONTRACT: short delivery would silently
+          // drop events and break exactly-once — fail loudly instead
           require(served == to - from,
             s"replay partition $part range [$from,$to) delivered $served " +
               s"of ${to - from} events")
           false
         }
       override def get(): InternalRow = row
+      // a cancelled task (a mid-stream kill) must release its socket, or
+      // the server-side worker stays blocked writing to it (ADVICE r11)
       override def close(): Unit = it.close()
     }
   }

@@ -203,7 +203,7 @@ object EventTimeReplay {
     val logs = arrivals(spark, dir, perRelation)
     val broker =
       if (perRelation) Broker(logs, chunks = 16, maxAhead = 3)
-      else Broker(logs, chunks = 24, maxAhead = 6, offsets = true)
+      else Broker(logs, chunks = 24, maxAhead = 6)
     FoldDriver.run(spark, "etreplay", broker,
       fold = Some(Fold(batches = 6,
         spillAtRows = _ => IncrementalQ3.adaptiveSpillThreshold,

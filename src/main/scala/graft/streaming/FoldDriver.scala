@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import org.apache.spark.storage.StorageLevel
 
-import graft.sources.{PartitionedReplayProvider, ReplayProvider, ReplayServer}
+import graft.sources.{PartitionedReplayProvider, ReplayServer}
 
 /** THE EXACTLY-ONCE FOLD DRIVER — the snapshot-skip protocol every
   * replay-fed composition runs ([[ReplayIngest]], [[EventTimeReplay]],
@@ -193,17 +193,16 @@ object FoldDriver {
 
   /** What a run serves: the ordered logs — one, or one per partition (the
     * CDC topic layout) — the producer's chunk count and flow-control
-    * window in chunks, the session timeout after which a silent group is
-    * evicted (0 = never), and whether a single log's rows carry their
-    * offsets.
+    * window in chunks, and the session timeout after which a silent group
+    * is evicted (0 = never).
     */
   final case class Broker(logs: Seq[DataFrame], chunks: Int, maxAhead: Int,
-                          sessionTimeoutMs: Long = 0L, offsets: Boolean = false)
+                          sessionTimeoutMs: Long = 0L)
 
   /** A served broker: one handle per partition, and the reader a consumer
-    * group consumes it with. A single log is the one-partition case: with
-    * offsets, its rows carry `partition` 0 and their `offset`, the columns
-    * every partitioned row has.
+    * group consumes it with — [[PartitionedReplayProvider]] over every
+    * handle's port, so each row is `(partition, offset, value)`. A single
+    * log is the one-partition topic: its rows are partition 0.
     */
   final case class Transport(handles: Seq[ReplayServer.Handle], broker: Broker,
                              reader: (String, Long) => DataFrame) {
@@ -224,28 +223,20 @@ object FoldDriver {
     val handles = b.logs.map(l => ReplayServer.serveGrowing(l,
       chunks = b.chunks, intervalMs = 10L, maxAheadChunks = b.maxAhead,
       groups = groups, sessionTimeoutMs = b.sessionTimeoutMs))
-    def reader(group: String, batchSize: Long): DataFrame = {
-      val r = spark.readStream.option("host", Host)
+    def reader(group: String, batchSize: Long): DataFrame =
+      spark.readStream.format(classOf[PartitionedReplayProvider].getName)
+        .option("host", Host)
+        .option("ports", handles.map(_.port).mkString(","))
         .option("batchSize", batchSize.toString)
         // hold admission for a REAL batch: per-chunk admission would pay a
         // full fold + snapshot per producer step
         .option("minBatchSize", batchSize.toString)
-        .option("group", group)
-      if (handles.size == 1) {
-        val log = r.format(classOf[ReplayProvider].getName)
-          .option("port", handles.head.port.toString)
-          .option("splits", "0") // 0 = adaptive per-batch fan-out
-          .option("includeOffset", b.offsets.toString)
-          .load()
-        if (b.offsets) log.withColumn("partition", lit(0)) else log
-      } else r.format(classOf[PartitionedReplayProvider].getName)
-        .option("ports", handles.map(_.port).mkString(","))
         // the tail-drain contract: once the small partitions drain, the
         // remaining window can sit below minBatchSize — this flush bounds
         // the hold, stated rather than inherited as the source default
         .option("maxTriggerDelayMs", "500")
+        .option("group", group)
         .load()
-    }
     Transport(handles, b, reader)
   }
 

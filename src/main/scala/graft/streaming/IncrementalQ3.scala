@@ -288,17 +288,14 @@ object IncrementalQ3 {
       spec = spec)
   }
 
-  /** The session default for [[step]]'s `spillAtRows` when a caller opts
-    * into ADAPTIVE spill: consolidated state rows above which a fold with
-    * a spill dir moves its state from executor memory to the bucketed
-    * tables. Sized so the 10×-bench event-time state (~2–3 M consolidated
-    * rows) stays comfortably in-memory on a 128 GiB driver-test JVM while
-    * a 100× run (tens of millions of rows) engages the bounded-memory
-    * path; at cluster scale an operator would set it from executor
-    * storage budget / row width.
+  /** [[step]]'s `spillAtRows` when a caller opts into ADAPTIVE spill:
+    * consolidated state rows above which a fold with a spill dir moves its
+    * state from executor memory to the spill store. Sized so the
+    * 10×-bench event-time state (~2–3 M consolidated rows) stays
+    * comfortably in-memory while a 100× run (tens of millions of rows)
+    * engages the bounded-memory path.
     */
-  def adaptiveSpillThreshold: Long =
-    java.lang.Long.getLong("graft.ivm.spill.threshold", 8000000L)
+  val adaptiveSpillThreshold: Long = 8000000L
 
   /** Apply one micro-batch of raw changelog lines to the state. The
     * query and its grains come from `st` (set at [[init]]); `spillDir`
@@ -462,26 +459,13 @@ object IncrementalQ3 {
     // The probe is the partial's pin action — the per-batch dAgg jobs
     // below then hit the cached blocks, so no plan runs twice.
     val batchBuckets: Map[String, Set[Int]] =
-      if (!engaged) {
-        // With broadcast-delta on (the default), the build constructions
-        // above already materialized every delta checkpoint: each delta is
-        // some term's BROADCAST stage, and AQE's toRdd materializes those
-        // stages eagerly — so the two pin jobs here became redundant
-        // re-counts of cached blocks (r15: −2 AQE job rounds per batch,
-        // every fold query). They remain NECESSARY when the hint is off:
-        // a sort-merge plan streams the delta sides lazily, and the
-        // concurrent upkeep/snapshot futures would then race to
-        // materialize a shared un-pinned checkpoint (the layering rule
-        // above).
-        if (!ZSet.broadcastDelta) {
-          graft.Phase("ivm.step.deltaPin") {
-            dC.select(col(ZSet.W)).unionByName(dO.select(col(ZSet.W)))
-              .unionByName(dL.select(col(ZSet.W))).count()
-          }
-          graft.Phase("ivm.step.dcoPin") { dCO.count() }
-        }
-        Map.empty
-      } else {
+      // In memory, no pin jobs: the build constructions above already
+      // materialized every delta checkpoint — each delta is some term's
+      // BROADCAST stage (ZSet.deltaJoin always broadcasts the delta), and
+      // AQE's toRdd materializes those stages eagerly (r15: −2 AQE job
+      // rounds per batch, every fold query).
+      if (!engaged) Map.empty
+      else {
         val deltaProbe = dC.select(lit("c").as("s"), bucketExpr("c_custkey").as("b"))
           .unionByName(dO.select(lit("o").as("s"), bucketExpr("o_custkey").as("b")))
           .unionByName(dL.select(lit("l").as("s"), bucketExpr("l_orderkey").as("b")))
@@ -635,12 +619,11 @@ object IncrementalQ3 {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     if (grains.size > 1 && spillTo.isEmpty) dJ.count()
-    val wantSizes = java.lang.Boolean.getBoolean("graft.ivm.sizes")
     // a spill batch already materialized every state as its table write —
-    // nothing to pin unless the sizes diagnostic wants the counts
+    // nothing to pin
     val toPin =
-      if (spillTo.nonEmpty) (if (wantSizes) next.all else Seq.empty)
-      else if (compact || wantSizes) next.all
+      if (spillTo.nonEmpty) Seq.empty
+      else if (compact) next.all
       else if (aggCompact) next.aggsRaw.map(_._2) // agg-only consolidation
       else dAggs // the only frames this batch newly checkpointed: the
                  // delta-sized partials (the chain's older links are
@@ -651,12 +634,6 @@ object IncrementalQ3 {
       Await.result(
         Future.sequence(toPin.map(df => Future { df.count() })), Duration.Inf)
     }
-    // the sizes diagnostic (z-set rows incl. not-yet-compacted ± pairs,
-    // for capacity planning) counts all states regardless
-    if (wantSizes)
-      System.err.println("[ivm] state rows " +
-        next.names.zip(sizes)
-          .map { case (n, s) => s"$n=$s" }.mkString(" "))
     parsed.unpersist(blocking = false)
     // adaptive engagement: a pre-engagement compaction just measured the
     // consolidated state (toPin == next.all exactly then, so sizes.sum IS

@@ -95,30 +95,6 @@ object ZSet {
       .drop("__wl", "__wr")
   }
 
-  /** Broadcast the micro-batch delta sides of [[deltaJoin]] (r15, guide
-    * §3.1: size ESTIMATES "are often badly wrong … use an explicit
-    * broadcast hint when you know a side is small"). Today the stats that
-    * checkpointed frames propagate happen to keep every term a broadcast
-    * join already (verified with graft.Prof at sf0.1: zero shuffle bytes
-    * on the per-batch jobs, hint on or off — so this is measured NEUTRAL
-    * locally, not claimed as a local win). What the hint buys is the
-    * guarantee: the DELTA side is the one quantity micro-batching BOUNDS
-    * by construction (source admission control sizes the trigger), while
-    * the state side is unbounded — if a future plan shape or a bad
-    * estimate ever flipped a term to sort-merge, the planner would
-    * shuffle-WRITE the whole accumulated state once per batch before
-    * AQE's runtime stats could downgrade it. A deployment whose triggers
-    * exceed broadcast capacity (8 GB / 512 M rows per relation) sets
-    * `-Dgraft.ivm.broadcast.delta=false` to fall back to the planner's
-    * choice — the hint changes strategy only, never the result
-    * (ZSetPropertySpec pins both).
-    */
-  private[streaming] def broadcastDelta: Boolean =
-    sys.props.get("graft.ivm.broadcast.delta").forall(_.toBoolean)
-
-  private def asBuildSide(delta: DataFrame): DataFrame =
-    if (broadcastDelta) broadcast(delta) else delta
-
   /** Delta of `A ⋈ B` given old states and this batch's deltas (the bilinear
     * delta rule Δ(A⋈B) = ΔA⋈B ∪ ΔA⋈ΔB ∪ A⋈ΔB): everything the reference's
     * two-sided symmetric-join state machine computes record-at-a-time
@@ -126,15 +102,30 @@ object ZSet {
     *
     * Spelled fully distributed (three joins, not `ΔA⋈(B∪ΔB)` two) so each
     * STATE side sits directly under its join — and each term BROADCASTS
-    * its batch-bounded delta side ([[asBuildSide]]), so the state side
-    * never shuffles at all: not in-memory (where the unknown-stats
-    * checkpoint scan used to sort-merge, reshuffling the accumulated
-    * state every batch) and not spilled (a plain scan of the spill
-    * store's files).
+    * its batch-bounded delta side, so the state side never shuffles at
+    * all: not in-memory (where the unknown-stats checkpoint scan used to
+    * sort-merge, reshuffling the accumulated state every batch) and not
+    * spilled (a plain scan of the spill store's files).
+    *
+    * The broadcast is a hint (r15, guide §3.1: size ESTIMATES "are often
+    * badly wrong … use an explicit broadcast hint when you know a side is
+    * small"). Today the stats that checkpointed frames propagate happen to
+    * keep every term a broadcast join already (verified with graft.Prof at
+    * sf0.1: zero shuffle bytes on the per-batch jobs, hint on or off — so
+    * this is measured NEUTRAL locally, not claimed as a local win). What
+    * the hint buys is the guarantee: the DELTA side is the one quantity
+    * micro-batching BOUNDS by construction (source admission control sizes
+    * the trigger), while the state side is unbounded — if a future plan
+    * shape or a bad estimate ever flipped a term to sort-merge, the
+    * planner would shuffle-WRITE the whole accumulated state once per
+    * batch before AQE's runtime stats could downgrade it. A trigger must
+    * therefore fit broadcast capacity (8 GB / 512 M rows per relation).
+    * The hint changes strategy only, never the result (ZSetPropertySpec
+    * pins hinted ≡ unhinted).
     */
   def deltaJoin(aOld: DataFrame, dA: DataFrame,
                 bOld: DataFrame, dB: DataFrame, cond: Column): DataFrame =
-    join(asBuildSide(dA), bOld, cond)
-      .unionByName(join(dA, asBuildSide(dB), cond))
-      .unionByName(join(aOld, asBuildSide(dB), cond))
+    join(broadcast(dA), bOld, cond)
+      .unionByName(join(dA, broadcast(dB), cond))
+      .unionByName(join(aOld, broadcast(dB), cond))
 }

@@ -1,11 +1,32 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Temp dirs for a suite: each [[tempDir]] is deleted, with everything
+  * under it, after the suite's last test.
+  */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+  private val made = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A fresh, empty directory named `prefix…` in the system temp dir. */
+  def tempDir(prefix: String): String = made.synchronized {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    made += dir
+    dir.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try super.afterAll()
+    finally made.synchronized {
+      made.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+      made.clear()
+    }
+}
+
 /** Shared session base for all specs: one local session per suite. */
-trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+trait SparkSpec extends AnyFunSuite with TempDirs {
   val sfDir = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = SparkSpec.session

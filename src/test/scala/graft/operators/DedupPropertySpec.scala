@@ -174,7 +174,7 @@ class DedupPropertySpec extends SparkSpec {
     val shDelta = sh.filter(col("doc_id") >= split)
     val derived = Dedup.incrementalPairs(Dedup.lshIndex(shBase), sh, shDelta)
       .collect().map(_.toSeq).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-index").toString
+    val dir = tempDir("graft-lsh-index")
     Dedup.lshIndex(shBase).write.mode("overwrite").parquet(dir)
     val reloaded = Dedup.incrementalPairs(spark.read.parquet(dir), sh, shDelta)
       .collect().map(_.toSeq).toSet

@@ -111,7 +111,7 @@ class RelationalSpec extends SparkSpec {
   test("partitioned layout prunes non-matching partitions at planning time") {
     import graft.sources.Tables
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val tmp = tempDir("graft-part")
     Tables.table(spark, sfDir, "documents")
       .write.mode("overwrite").partitionBy("lang").parquet(tmp)
     val pruned = Relational.partitionPrunedFrame(spark, tmp)
@@ -144,7 +144,7 @@ class RelationalSpec extends SparkSpec {
 
   test("csv source drops malformed rows (the reference's bad-row skipping)") {
     import graft.sources.{Csv, Tables}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-csv").toString
+    val tmp = tempDir("graft-csv")
     Csv.stage(spark, sfDir, "customer", tmp)
     // NB: collect(), not count() — CSV column pruning under count() parses
     // zero columns, so malformed rows would never be detected/dropped.

@@ -9,10 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * marker, never on directory existence — a partially-failed prior attempt
   * must be wiped and re-staged, and a completed one must not re-run.
   */
-class StagingSpec extends AnyFunSuite {
+class StagingSpec extends AnyFunSuite with graft.TempDirs {
 
   test("partial prior staging (dir without marker) is wiped and re-staged") {
-    val dir = Files.createTempDirectory("graft_staging_spec").toString + "/stage"
+    val dir = tempDir("graft_staging_spec") + "/stage"
     new File(dir).mkdirs()
     Files.write(Paths.get(dir, "stale.bin"), "stale".getBytes("UTF-8"))
     Staging.ensure(dir) { out =>
@@ -25,7 +25,7 @@ class StagingSpec extends AnyFunSuite {
   }
 
   test("completed staging is reused — the body does not re-run") {
-    val dir = Files.createTempDirectory("graft_staging_spec").toString + "/stage"
+    val dir = tempDir("graft_staging_spec") + "/stage"
     Staging.ensure(dir) { out =>
       Files.write(Paths.get(out, "a.bin"), "a".getBytes("UTF-8"))
     }
@@ -36,7 +36,7 @@ class StagingSpec extends AnyFunSuite {
   }
 
   test("a failing staging body leaves no marker, so the next call retries") {
-    val dir = Files.createTempDirectory("graft_staging_spec").toString + "/stage"
+    val dir = tempDir("graft_staging_spec") + "/stage"
     intercept[RuntimeException] {
       Staging.ensure(dir) { out =>
         Files.write(Paths.get(out, "half.bin"), "half".getBytes("UTF-8"))

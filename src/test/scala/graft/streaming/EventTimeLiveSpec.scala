@@ -16,8 +16,7 @@ class EventTimeLiveSpec extends SparkSpec {
 
   test("live event-time Q3 killed mid-stream resumes to the exact answer") {
     val staged = StreamingEventTime.stageArrivals(spark, sfDir)
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-etlive-spec").toString
+    val work = tempDir("graft-etlive-spec")
     try {
       val lastId = StreamingEventTime.K.toLong // ids 0..K (K on-time + 1 late)
       val applied = new AtomicLong(-1L)

@@ -109,20 +109,21 @@ class EventTimeReplaySpec extends SparkSpec {
   test("replay source exposes offsets when asked") {
     import spark.implicits._
     val lines = (0 until 50).map(i => s"v$i").toDF("line")
-    val handle = graft.sources.ReplayServer.serve(lines.orderBy(col("line")))
+    val handle = ReplaySourceSpec.published(lines.orderBy(col("line")))
     try {
       // the DSv2 reader attaches range-start + position; spot-check via a
-      // direct partition read of a mid-stream range
-      val factory = new graft.sources.ReplayReaderFactory(includeOffset = true)
-      val reader = factory.createReader(
-        graft.sources.ReplayRange("127.0.0.1", handle.port, 7, 12))
+      // direct partition read of a mid-stream range of a one-port topic
+      val factory = new graft.sources.PartitionedReplayReaderFactory
+      val reader = factory.createReader(graft.sources.PartitionedReplayRange(
+        0, "127.0.0.1", handle.port, 7, 12))
       val got = Iterator.continually(reader)
-        .takeWhile(_.next()).map(r => (r.get().getLong(0),
-          r.get().getUTF8String(1).toString)).toVector
+        .takeWhile(_.next()).map(r => (r.get().getInt(0), r.get().getLong(1),
+          r.get().getUTF8String(2).toString)).toVector
       reader.close()
-      assert(got.map(_._1) == (7L to 11L).toVector,
+      assert(got.map(_._1).forall(_ == 0), "a single log is partition 0")
+      assert(got.map(_._2) == (7L to 11L).toVector,
         "offsets must be the events' sequence numbers")
-      assert(got.map(_._2).forall(_.startsWith("v")))
+      assert(got.map(_._3).forall(_.startsWith("v")))
     } finally handle.close()
   }
 }

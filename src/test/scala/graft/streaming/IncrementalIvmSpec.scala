@@ -80,7 +80,7 @@ class IncrementalIvmSpec extends SparkSpec {
       .toSeq.map(_.getName).filter(_.matches("v\\d+"))
 
   private def tempRoot(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix)
 
   test("Q5 ± cycle through the spilled fold cancels to an empty aggregate and cleans up") {
     assert(java.lang.Boolean.getBoolean("graft.strict"), "the spec relies on strict mode")

@@ -50,8 +50,7 @@ class IncrementalSpillSpec extends SparkSpec {
 
   test("spilled fold ≡ in-memory fold at every batch; versions pruned to two") {
     val plain = plainTops
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ivm-spill").toString
+    val root = tempDir("graft-ivm-spill")
     System.setProperty("graft.ivm.spill.dir", root)
     val spilled = try tops()
     finally System.clearProperty("graft.ivm.spill.dir")
@@ -72,8 +71,7 @@ class IncrementalSpillSpec extends SparkSpec {
     // this test pins the contract LOUDLY: if a Spark upgrade ever changed
     // the writer's hash, a clean-classified bucket could silently hold
     // delta rows and the carry-forward would corrupt state.
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bucket-contract").toString
+    val root = tempDir("graft-bucket-contract")
     val df = spark.range(500).select(col("id").as("k"), lit(1L).as(ZSet.W))
     val written = MergeLogSpill.write(
       spark, root, 1L, "probe", "k", df, carry = None)
@@ -109,8 +107,7 @@ class IncrementalSpillSpec extends SparkSpec {
       Seq(li(100)), Seq(li(101)), Seq(li(102)),                   // → compaction 1 (full)
       Seq(li(100, "-")), Seq(li(200)), Seq(li(201)), Seq(li(200, "-")) // → compaction 2 (dirty-only)
     )
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ivm-dirty").toString
+    val root = tempDir("graft-ivm-dirty")
     val fin = batches.foldLeft(IncrementalQ3.init(spark)) { (st, ls) =>
       IncrementalQ3.step(st, ls.toDF("line"), spillDir = Some(root))
     }
@@ -171,8 +168,7 @@ class IncrementalSpillSpec extends SparkSpec {
       Seq(li(1)), Seq(li(1)), Seq(li(1)),                           // → compaction 1 (full)
       Seq(li(2)), Seq(li(2, "-")), Seq(li(2)), Seq(li(2, "-"))      // → compaction 2 (order 2's date only)
     )
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ivm-grain-probe").toString
+    val root = tempDir("graft-ivm-grain-probe")
     val grains = Seq(IncrementalQ3.DefaultAggKeys, Seq("o_orderdate"))
     val fin = batches.foldLeft(IncrementalQ3.init(spark, grains)) { (st, ls) =>
       IncrementalQ3.step(st, ls.toDF("line"), spillDir = Some(root))
@@ -212,8 +208,7 @@ class IncrementalSpillSpec extends SparkSpec {
     // 1) unreachable threshold → the fold must never engage: no spill
     //    versions, no latch, and the root is never even created (write
     //    paths alone pin roots)
-    val rootHi = java.nio.file.Files
-      .createTempDirectory("graft-ivm-adaptive-hi").toString
+    val rootHi = tempDir("graft-ivm-adaptive-hi")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(rootHi))
     val never = IncrementalQ3.runBatches(spark, events, K,
       spillDir = Some(rootHi), spillAtRows = Long.MaxValue)
@@ -225,8 +220,7 @@ class IncrementalSpillSpec extends SparkSpec {
     //    and every later compaction spills; per-batch answers stay
     //    bit-identical to the in-memory fold, and the latch + history
     //    survive a snapshot round-trip
-    val rootLo = java.nio.file.Files
-      .createTempDirectory("graft-ivm-adaptive-lo").toString
+    val rootLo = tempDir("graft-ivm-adaptive-lo")
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Seq[Any]]]
     var engagedAt = -1
     var firstCompactInMemory = false
@@ -245,8 +239,7 @@ class IncrementalSpillSpec extends SparkSpec {
     assert(engagedAt >= 0 && fin.spillEngaged && fin.spillHistory.nonEmpty,
       s"threshold 1 must engage and spill (engagedAt=$engagedAt, " +
         s"history=${fin.spillHistory})")
-    val snap = java.nio.file.Files
-      .createTempDirectory("graft-ivm-adaptive-snap").toString
+    val snap = tempDir("graft-ivm-adaptive-snap")
     Snapshots.save(fin, snap)
     val loaded = Snapshots.load(spark, snap)
     assert(loaded.spillEngaged,
@@ -264,8 +257,7 @@ class IncrementalSpillSpec extends SparkSpec {
       least(expr(s"CAST(((t - 1L) * ${K}L) DIV ${tMax}L AS INT)"), lit(K - 1)))
       .localCheckpoint()
     val bs = (0 until K).map(i => batched.filter(col("batch") === i).select("line"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ivm-spill-snap").toString
+    val root = tempDir("graft-ivm-spill-snap")
     System.setProperty("graft.ivm.spill.dir", s"$root/spill")
     try {
       val direct = bs.foldLeft(IncrementalQ3.init(spark))(IncrementalQ3.step(_, _))

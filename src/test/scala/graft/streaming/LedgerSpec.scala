@@ -9,13 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * composition's exactly-once pins read: a missing record, a re-delivered
   * id, and a crash between the tmp write and the rename.
   */
-class LedgerSpec extends AnyFunSuite {
+class LedgerSpec extends AnyFunSuite with graft.TempDirs {
 
-  private def withDir(body: String => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft-ledger-spec").toString
-    try body(dir)
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-  }
+  private def withDir(body: String => Unit): Unit = body(tempDir("graft-ledger-spec"))
 
   test("a missing ledger reads as (-1, empty)") {
     withDir { dir =>

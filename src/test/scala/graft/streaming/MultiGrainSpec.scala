@@ -36,8 +36,7 @@ class MultiGrainSpec extends SparkSpec {
     val events = Changelog.generate(spark, sfDir, insertOnly = true)
       .localCheckpoint()
     val st = IncrementalQ3.runBatches(spark, events, 2, grains = grains)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-multigrain-snap").toString
+    val dir = tempDir("graft-multigrain-snap")
     Snapshots.save(st, dir)
     val loaded = Snapshots.load(spark, dir)
     assert(loaded.aggs.map(_._1) == st.aggs.map(_._1),
@@ -45,6 +44,5 @@ class MultiGrainSpec extends SparkSpec {
     st.aggs.zip(loaded.aggs).foreach { case ((g, a), (_, b)) =>
       assert(rows(a) == rows(b), s"grain $g state changed across save/load")
     }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }

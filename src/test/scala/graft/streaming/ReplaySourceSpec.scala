@@ -1,25 +1,32 @@
 package graft.streaming
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.{ReplayOffset, ReplayServer}
+import graft.sources.{PartitionedReplayStream, ReplayServer, VectorOffset}
 
-/** The replayable transport ([[graft.sources.ReplayProvider]]) — what
-  * makes exactly-once COMPOSABLE, unlike the at-most-once plain socket:
+/** The replayable transport — the [[graft.sources.ReplayServer]] broker
+  * and the one DSv2 source over it,
+  * [[graft.sources.PartitionedReplayProvider]] (a single log is its
+  * one-partition topic) — what makes exactly-once COMPOSABLE, unlike the
+  * at-most-once plain socket:
   *  - REPLAYABILITY: any offset range can be fetched any number of times
   *    and always yields the identical lines (the broker contract);
-  *  - the DSv2 offset round-trips through its checkpoint JSON form;
+  *  - the vector offset round-trips through its checkpoint JSON form;
+  *  - admission and split planning, on one port and on three;
   *  - the full composition: a checkpointed streaming query over the
   *    source is KILLED mid-stream, restarted, and the accumulated totals
   *    equal the changelog's ground truth exactly (no loss, no double).
   */
 class ReplaySourceSpec extends SparkSpec {
+  import ReplaySourceSpec.published
 
   test("any offset range replays identically, any number of times") {
     val lines = Changelog.generate(spark, sfDir)
       .orderBy(col("t"), col("sub"), col("idx")).select(col("line"))
-    val handle = ReplayServer.serve(lines)
+    val handle = published(lines)
     try {
       val n = handle.expected
       assert(n > 100, s"fixture too small: $n events")
@@ -222,26 +229,73 @@ class ReplaySourceSpec extends SparkSpec {
   }
 
   test("offset JSON round-trip") {
-    val o = ReplayOffset(123456789L)
-    assert(new graft.sources.ReplayStream("h", 1, 10, 2)
-      .deserializeOffset(o.json()) == o)
+    val one = new PartitionedReplayStream("h", IndexedSeq(1), 10L, 1L, 500L)
+    val o1 = VectorOffset(Map(0 -> 123456789L))
+    assert(o1.json() == "0:123456789")
+    assert(one.deserializeOffset(o1.json()) == o1)
+    val three = new PartitionedReplayStream("h", IndexedSeq(1, 2, 3), 10L, 1L, 500L)
+    val o3 = VectorOffset(Map(2 -> 7L, 0 -> 5000000000L, 1 -> 0L))
+    assert(o3.json() == "0:5000000000,1:0,2:7")
+    assert(three.deserializeOffset(o3.json()) == o3)
+  }
+
+  test("one port: admission takes min(batchSize, available), holding below minBatchSize until the delay flush") {
+    import spark.implicits._
+    val handle = published((0 until 1000).map(i => f"a_$i%04d").toDF("line"))
+    try {
+      def at(n: Long) = VectorOffset(Map(0 -> n))
+      val s = new PartitionedReplayStream("127.0.0.1", IndexedSeq(handle.port),
+        batchSize = 600L, minBatchSize = 500L, maxTriggerDelayMs = 1500L)
+      val limit = s.getDefaultReadLimit
+      assert(s.latestOffset(at(0L), limit) == at(600L))
+      assert(s.latestOffset(at(0L), ReadLimit.maxRows(250L)) == at(250L))
+      // 400 available < minBatchSize: held (the offset does not move) …
+      assert(s.latestOffset(at(600L), limit) == at(600L))
+      // … until maxTriggerDelayMs has passed since the last admission
+      Thread.sleep(1600L)
+      assert(s.latestOffset(at(600L), limit) == at(1000L))
+      // nothing left: no batch
+      assert(s.latestOffset(at(1000L), limit) == at(1000L))
+    } finally handle.close()
+  }
+
+  test("three ports: admission apportions the batch budget by each partition's backlog") {
+    import spark.implicits._
+    val handles = Seq(100, 200, 400).map(n =>
+      published((0 until n).map(i => f"p_$i%04d").toDF("line")))
+    try {
+      val s = new PartitionedReplayStream("127.0.0.1", handles.map(_.port).toIndexedSeq,
+        batchSize = 500L, minBatchSize = 1L, maxTriggerDelayMs = 500L)
+      val limit = s.getDefaultReadLimit
+      def at(a: Long, b: Long, c: Long) = VectorOffset(Map(0 -> a, 1 -> b, 2 -> c))
+      // backlogs 100/200/400 of 700: floor shares 71/142/285, and the
+      // 2-event remainder goes to the largest backlog
+      assert(s.latestOffset(at(0L, 0L, 0L), limit) == at(71L, 142L, 287L))
+      // partition 0 drained: its share is 0, the rest split 200/400 of 600
+      assert(s.latestOffset(at(100L, 0L, 0L), limit) == at(100L, 166L, 334L))
+      // a budget above the total backlog admits everything
+      assert(s.latestOffset(at(50L, 150L, 300L), limit) == at(100L, 200L, 400L))
+    } finally handles.foreach(_.close())
   }
 
   test("adaptive split planning covers each admitted range exactly") {
-    import graft.sources.{PartitionedReplayRange, PartitionedReplayStream,
-      ReplayRange, ReplayStream, VectorOffset}
-    // splitCount arithmetic: pinned wins; adaptive derives from rows,
-    // floors at 1 and caps at the scheduler parallelism
-    assert(ReplayServer.splitCount(4, 1000000L, 32) == 4)
-    assert(ReplayServer.splitCount(0, 100L, 32) == 1)
-    assert(ReplayServer.splitCount(0, 4096L * 8, 32) == 8)
-    assert(ReplayServer.splitCount(0, 10000000L, 32) == 32)
-    assert(ReplayServer.splitCount(0, 0L, 32) == 1)
-    // single-log: the planned sub-ranges tile [a, b) contiguously, in
-    // order, with no gaps or overlaps — identical row set to one range
-    val s = new ReplayStream("h", 1, 200000, 0)
-    val parts = s.planInputPartitions(ReplayOffset(1000L), ReplayOffset(131000L))
-      .map { case ReplayRange(_, _, f, t, _) => (f, t) }
+    import graft.sources.PartitionedReplayRange
+    // splitCount arithmetic: derived from rows, floored at 1 and capped at
+    // the scheduler parallelism
+    assert(ReplayServer.splitCount(100L, 32) == 1)
+    assert(ReplayServer.splitCount(4096L * 8, 32) == 8)
+    assert(ReplayServer.splitCount(10000000L, 32) == 32)
+    assert(ReplayServer.splitCount(0L, 32) == 1)
+    // one port (a single log): the planned sub-ranges tile [a, b)
+    // contiguously, in order, with no gaps or overlaps — identical row
+    // set to one range
+    val s = new PartitionedReplayStream("h", IndexedSeq(1), 200000L, 1L, 500L)
+    val parts = s.planInputPartitions(
+        VectorOffset(Map(0 -> 1000L)), VectorOffset(Map(0 -> 131000L)))
+      .map { case PartitionedReplayRange(p, _, _, f, t, _) =>
+        assert(p == 0)
+        (f, t)
+      }
     assert(parts.length > 1, "a big batch must fan out")
     assert(parts.head._1 == 1000L && parts.last._2 == 131000L)
     parts.sliding(2).foreach { case Array((_, t0), (f1, _)) =>
@@ -278,5 +332,20 @@ class ReplaySourceSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(result == truth,
       "resumed totals must equal the changelog ground truth exactly")
+  }
+}
+
+object ReplaySourceSpec {
+
+  /** `lines` served as one log, staged in a single chunk: returns once the
+    * whole stream is published.
+    */
+  def published(lines: DataFrame): ReplayServer.Handle = {
+    val handle = ReplayServer.serveGrowing(lines, chunks = 1, intervalMs = 0L)
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (ReplayServer.count("127.0.0.1", handle.port) < handle.expected &&
+           System.nanoTime() < deadline)
+      Thread.sleep(10)
+    handle
   }
 }

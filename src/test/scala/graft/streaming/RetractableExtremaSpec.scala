@@ -11,7 +11,7 @@ import graft.SparkSpec
 class RetractableExtremaSpec extends SparkSpec {
 
   test("transformWithState retractable extrema: build up, then exact drain") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tws-ext").toString
+    val dir = tempDir("graft-tws-ext")
     val ev = Changelog.generate(spark, sfDir).localCheckpoint()
     ev.filter(col("sub") < 3).orderBy("t", "sub", "idx")
       .coalesce(1).select("line").write.mode("overwrite").text(dir)

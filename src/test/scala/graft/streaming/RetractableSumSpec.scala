@@ -10,7 +10,7 @@ import graft.SparkSpec
 class RetractableSumSpec extends SparkSpec {
 
   test("transformWithState retractable sum: build up, then exact teardown") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tws").toString
+    val dir = tempDir("graft-tws")
     val ev = Changelog.generate(spark, sfDir).localCheckpoint()
     // file 0 = all inserts, file 1 = all deletes (capacity=nL two-phase);
     // written sequentially so the file source's mtime ordering replays

@@ -21,7 +21,7 @@ class SnapshotsSpec extends SparkSpec {
   test("save/load mid-stream resumes to the exact uninterrupted answer") {
     val bs = batches(insertOnly = true, k = 4)
     val direct = bs.foldLeft(IncrementalQ3.init(spark))(IncrementalQ3.step(_, _))
-    val snapDir = java.nio.file.Files.createTempDirectory("graft-snap").toString
+    val snapDir = tempDir("graft-snap")
 
     val half = bs.take(2).foldLeft(IncrementalQ3.init(spark))(IncrementalQ3.step(_, _))
     Snapshots.save(half, snapDir)
@@ -41,7 +41,7 @@ class SnapshotsSpec extends SparkSpec {
     // mid-window → base + pending chain)
     val k = 6 // CompactEvery = 4: kill points straddle the first compaction
     val bs = batches(insertOnly = true, k = k)
-    val spillA = java.nio.file.Files.createTempDirectory("graft-dsnap-a").toString
+    val spillA = tempDir("graft-dsnap-a")
     val direct = bs.foldLeft(IncrementalQ3.init(spark))(
       IncrementalQ3.step(_, _, spillDir = Some(spillA)))
     val truth = IncrementalQ3.topN(direct).collect().map(_.toSeq).toSeq
@@ -49,10 +49,8 @@ class SnapshotsSpec extends SparkSpec {
     // kill points: pre-spill, the batch before the first compaction,
     // at-compaction, mid-window
     for (cut <- Seq(2, 3, 4, 5)) {
-      val spillB = java.nio.file.Files
-        .createTempDirectory(s"graft-dsnap-b$cut").toString
-      val snapDir = java.nio.file.Files
-        .createTempDirectory(s"graft-dsnap-s$cut").toString
+      val spillB = tempDir(s"graft-dsnap-b$cut")
+      val snapDir = tempDir(s"graft-dsnap-s$cut")
       var st = IncrementalQ3.init(spark)
       bs.take(cut).zipWithIndex.foreach { case (b, i) =>
         st = IncrementalQ3.step(st, b, spillDir = Some(spillB))
@@ -83,8 +81,8 @@ class SnapshotsSpec extends SparkSpec {
     // not read the missing manifests back as an empty state
     import java.nio.file.{Files, Paths}
     val bs = batches(insertOnly = true, k = 6)
-    val spill = Files.createTempDirectory("graft-dsnap-old").toString
-    val snapDir = Files.createTempDirectory("graft-dsnap-old-s").toString
+    val spill = tempDir("graft-dsnap-old")
+    val snapDir = tempDir("graft-dsnap-old-s")
     var st = IncrementalQ3.init(spark)
     bs.take(4).zipWithIndex.foreach { case (b, i) =>
       st = IncrementalQ3.step(st, b, spillDir = Some(spill))
@@ -104,7 +102,7 @@ class SnapshotsSpec extends SparkSpec {
 
   test("full-cycle resume still cancels to exactly empty") {
     val bs = batches(insertOnly = false, k = 3)
-    val snapDir = java.nio.file.Files.createTempDirectory("graft-snap2").toString
+    val snapDir = tempDir("graft-snap2")
     val first = IncrementalQ3.step(IncrementalQ3.init(spark), bs.head)
     Snapshots.save(first, snapDir)
     val fin = bs.tail.foldLeft(Snapshots.load(spark, snapDir))(IncrementalQ3.step(_, _))
@@ -117,10 +115,10 @@ class SnapshotsSpec extends SparkSpec {
     import graft.operators.Relational
 
     val ev = Changelog.generateCached(spark, sfDir, insertOnly = true)
-    val live = Files.createTempDirectory("graft-resume-live").toString
-    val stage = Files.createTempDirectory("graft-resume-stage").toString
-    val ckpt = Files.createTempDirectory("graft-resume-ckpt").toString
-    val snap = Files.createTempDirectory("graft-resume-snap").toString
+    val live = tempDir("graft-resume-live")
+    val stage = tempDir("graft-resume-stage")
+    val ckpt = tempDir("graft-resume-ckpt")
+    val snap = tempDir("graft-resume-snap")
     val half = ev.agg(max(col("t"))).head().getLong(0) / 2
     Changelog.write(ev.filter(col("t") <= half), live, nFiles = 2)
     Changelog.write(ev.filter(col("t") > half), stage, nFiles = 2)

@@ -38,20 +38,17 @@ class SpillFormatContractSpec extends SparkSpec {
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("[mergelog] full write: returned frame and all-buckets read equal input") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-spillfmt-mergelog-full").toString
+    val root = tempDir("graft-spillfmt-mergelog-full")
     val w = MergeLogSpill.write(spark, root, 1L, "s", "k", state1, carry = None)
     assert(rowsOf(w) == rowsOf(state1))
     val all = MergeLogSpill.readBuckets(spark, root, 1L, "s", state1.schema,
       (0 until MergeLogSpill.Buckets).toSet)
     assert(rowsOf(all) == rowsOf(state1))
     MergeLogSpill.drop(root, 1L, Seq("s"))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("[mergelog] carry: dirty-only input serves the full merged state") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-spillfmt-mergelog-carry").toString
+    val root = tempDir("graft-spillfmt-mergelog-carry")
     MergeLogSpill.write(spark, root, 1L, "s", "k", state1, carry = None)
     // the churn: key 3 upweighted, key 7 deleted → their buckets dirty
     val dirty = Set(bucketOfKey(3L), bucketOfKey(7L))
@@ -77,20 +74,16 @@ class SpillFormatContractSpec extends SparkSpec {
     val gone = MergeLogSpill.readBuckets(spark, root, 2L, "s", state1.schema,
       (0 until MergeLogSpill.Buckets).toSet)
     assert(gone.isEmpty, "dropped version still served rows")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("[mergelog] fileless read yields an empty frame with the pinned schema") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-spillfmt-mergelog-empty").toString
+    val root = tempDir("graft-spillfmt-mergelog-empty")
     val e = MergeLogSpill.readBuckets(spark, root, 9L, "s", state1.schema, Set(0, 1))
     assert(e.schema == state1.schema && e.isEmpty)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("[mergelog] carry is metadata-only: fresh data files exist only for dirty buckets") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-spillfmt-mergelog-meta").toString
+    val root = tempDir("graft-spillfmt-mergelog-meta")
     MergeLogSpill.write(spark, root, 1L, "s", "k", state1, carry = None)
     val dirty = Set(bucketOfKey(3L))
     val dirtyContent = state1
@@ -108,7 +101,6 @@ class SpillFormatContractSpec extends SparkSpec {
     val carriedBuckets = manifest.filterNot(_._2.contains("/v2/")).map(_._1).toSet
     assert(carriedBuckets.nonEmpty && (carriedBuckets & dirty).isEmpty,
       "clean buckets must be carried forward from v1, never rewritten")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("[mergelog] listing-free: a planted decoy file in the pool is invisible") {
@@ -118,8 +110,7 @@ class SpillFormatContractSpec extends SparkSpec {
     // have swept into the manifest) must neither enter the manifest nor
     // corrupt reads, and GC must leave it alone (it owns only what its
     // manifests reference)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-spillfmt-mergelog-decoy").toString
+    val root = tempDir("graft-spillfmt-mergelog-decoy")
     val decoyDir = java.nio.file.Paths.get(s"$root/pool/s/v1")
     java.nio.file.Files.createDirectories(decoyDir)
     // a VALID parquet file with poison rows, named like a data file
@@ -140,6 +131,5 @@ class SpillFormatContractSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(decoy),
       "GC deleted a file no manifest ever referenced — it must only " +
         "reclaim what it owns")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 }

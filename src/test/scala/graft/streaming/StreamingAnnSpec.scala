@@ -35,7 +35,7 @@ class StreamingAnnSpec extends SparkSpec {
 
   test("maintained index equals a from-scratch rebuild; kill-and-resume holds") {
     val ctx = StreamingAnn.prepare(spark, sfDir)
-    val base = Files.createTempDirectory("graft-ann-recover").toString
+    val base = tempDir("graft-ann-recover")
 
     // uninterrupted twin
     StreamingAnn.startCheckpointed(

@@ -34,7 +34,7 @@ class StreamingBasketsSpec extends SparkSpec {
       StreamingBaskets.streamBasketRules(spark, sfDir)
       graft.sources.Staging.dirFor(spark, "streambaskets", sfDir)
     }
-    val base = Files.createTempDirectory("graft-baskets-recover").toString
+    val base = tempDir("graft-baskets-recover")
 
     StreamingBaskets.startCheckpointed(spark, staged, s"$base/full")
       .awaitTermination()
@@ -74,7 +74,7 @@ class StreamingBasketsSpec extends SparkSpec {
 
   test("priorSeen ignores stray entries under seen/ instead of crashing") {
     val s = spark; import s.implicits._
-    val root = Files.createTempDirectory("graft-baskets-stray").toString
+    val root = tempDir("graft-baskets-stray")
     Seq((1L, 2L)).toDF("ok", "p").write.parquet(s"$root/seen/batch_0")
     Seq((1L, 3L)).toDF("ok", "p").write.parquet(s"$root/seen/batch_7")
     // strays a real filesystem accumulates: a marker file, a backup dir,

@@ -27,7 +27,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("checkpointed dedup ingest resumes after a stop: kill-and-resume ≡ uninterrupted") {
     val ctx = StreamingDedup.prepare(spark, sfDir)
-    val base = Files.createTempDirectory("graft-dedup-recover").toString
+    val base = tempDir("graft-dedup-recover")
 
     // uninterrupted twin: all files, one run, its own checkpoint + acc
     StreamingDedup.startCheckpointed(

@@ -157,7 +157,7 @@ class StreamingSpec extends SparkSpec {
     // negative-revenue groups. With stamped mtimes every emission of a
     // well-formed insert-then-delete cycle stays non-negative and the
     // stream still cancels to empty.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ordered").toString
+    val dir = tempDir("graft-ordered")
     Changelog.write(Changelog.generate(spark, sfDir), dir, nFiles = 6)
     @volatile var minRevenue = Double.MaxValue
     @volatile var last: Array[org.apache.spark.sql.Row] = Array.empty
@@ -182,7 +182,7 @@ class StreamingSpec extends SparkSpec {
     // paced by the trigger clock, with strictly increasing timestamps in
     // the JSON pushed through the real sink.
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cadence").toString
+    val dir = tempDir("graft-cadence")
     val nFiles = 5
     Changelog.write(Changelog.generate(spark, sfDir, insertOnly = true), dir, nFiles = nFiles)
     val sink = new JsonPushSink()
@@ -240,7 +240,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("structured streaming wiring (readStream → foreachBatch) converges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-changelog").toString
+    val dir = tempDir("graft-changelog")
     Changelog.write(Changelog.generate(spark, sfDir, insertOnly = true), dir, nFiles = 3)
     @volatile var last: Array[org.apache.spark.sql.Row] = Array.empty
     var emissions = 0

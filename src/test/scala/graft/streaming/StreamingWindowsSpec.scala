@@ -7,7 +7,7 @@ import graft.operators.Windows
 class StreamingWindowsSpec extends SparkSpec {
 
   test("append-mode tumbling windows finalize exactly once and match batch") {
-    val staged = java.nio.file.Files.createTempDirectory("graft-events").toString
+    val staged = tempDir("graft-events")
     StreamingWindows.stage(spark, sfDir, staged, nFiles = 3)
     val q = StreamingWindows.startTumbling(spark, staged, "tumbling_sink")
     assert(q.awaitTermination(300000), "streaming query did not finish in time")
@@ -27,7 +27,7 @@ class StreamingWindowsSpec extends SparkSpec {
   }
 
   test("append-mode session windows merge across batches and match batch") {
-    val staged = java.nio.file.Files.createTempDirectory("graft-events-s").toString
+    val staged = tempDir("graft-events-s")
     StreamingWindows.stage(spark, sfDir, staged, nFiles = 3)
     val q = StreamingWindows.startSession(spark, staged, "session_sink")
     assert(q.awaitTermination(300000), "streaming query did not finish in time")
@@ -64,7 +64,7 @@ class StreamingWindowsSpec extends SparkSpec {
   test("checkpointed tumbling query resumes after a stop: kill-and-resume ≡ uninterrupted") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import scala.jdk.CollectionConverters._
-    val base = Files.createTempDirectory("graft-recover").toString
+    val base = tempDir("graft-recover")
     val staged = s"$base/events"
     StreamingWindows.stage(spark, sfDir, staged)
     // uninterrupted twin: all files, one run, its own checkpoint
@@ -114,7 +114,7 @@ class StreamingWindowsSpec extends SparkSpec {
   test("checkpointed interval JOIN resumes after a stop: kill-and-resume ≡ uninterrupted") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import scala.jdk.CollectionConverters._
-    val base = Files.createTempDirectory("graft-recover-j").toString
+    val base = tempDir("graft-recover-j")
     val staged = s"$base/events"
     StreamingWindows.stage(spark, sfDir, staged)
     // uninterrupted twin: all files, one run, its own checkpoint
@@ -211,7 +211,7 @@ class StreamingWindowsSpec extends SparkSpec {
 
   test("stream-stream interval join matches batch and EVICTS watermark-expired state") {
     import org.apache.spark.sql.functions._
-    val staged = java.nio.file.Files.createTempDirectory("graft-events-j").toString
+    val staged = tempDir("graft-events-j")
     StreamingWindows.stage(spark, sfDir, staged, nFiles = 3)
     val q = StreamingWindows.startJoinInterval(spark, staged, "joinint_sink")
     assert(q.awaitTermination(300000), "streaming query did not finish in time")

@@ -81,29 +81,21 @@ class ZSetAppendSpec extends SparkSpec {
     }
   }
 
-  test("with broadcast-delta off, append folds to the same aggregates as unionByName") {
-    val key = "graft.ivm.broadcast.delta"
-    val prev = sys.props.get(key)
-    sys.props(key) = "false"
-    try {
-      // the unionByName spelling of the same fold: start from states that
-      // are not leaves (a bare projection), so every upkeep falls back to
-      // unionByName and the states carry growing Union plans
-      def unleafed(df: DataFrame): DataFrame = df.select(df.columns.map(df.col).toIndexedSeq: _*)
-      val init = IncrementalQ3.init(spark)
-      val byNameInit = init.copy(c = unleafed(init.c), o = unleafed(init.o),
-        l = unleafed(init.l), co = unleafed(init.co),
-        aggsRaw = init.aggsRaw.map { case (keys, df) => keys -> unleafed(df) })
-      val appended = batches.take(3).foldLeft(init)(step)
-      val byName = batches.take(3).foldLeft(byNameInit)(step)
-      assert(byName.all.forall(_.queryExecution.analyzed.children.nonEmpty),
-        "the reference fold was meant to carry Union plans")
-      val got = aggRows(appended)
-      assert(got.nonEmpty)
-      assert(got == aggRows(byName))
-    } finally prev match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
+  test("append folds to the same aggregates as unionByName") {
+    // the unionByName spelling of the same fold: start from states that
+    // are not leaves (a bare projection), so every upkeep falls back to
+    // unionByName and the states carry growing Union plans
+    def unleafed(df: DataFrame): DataFrame = df.select(df.columns.map(df.col).toIndexedSeq: _*)
+    val init = IncrementalQ3.init(spark)
+    val byNameInit = init.copy(c = unleafed(init.c), o = unleafed(init.o),
+      l = unleafed(init.l), co = unleafed(init.co),
+      aggsRaw = init.aggsRaw.map { case (keys, df) => keys -> unleafed(df) })
+    val appended = batches.take(3).foldLeft(init)(step)
+    val byName = batches.take(3).foldLeft(byNameInit)(step)
+    assert(byName.all.forall(_.queryExecution.analyzed.children.nonEmpty),
+      "the reference fold was meant to carry Union plans")
+    val got = aggRows(appended)
+    assert(got.nonEmpty)
+    assert(got == aggRows(byName))
   }
 }
