@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Marker-gated local/shared-FS staging for operators that must materialize
@@ -31,9 +32,41 @@ object Staging {
       .getOrElse(System.getProperty("java.io.tmpdir"))
 
   /** A session- and input-scoped staging directory path (not yet created). */
-  def dirFor(spark: SparkSession, kind: String, inputDir: String): String =
+  def dirFor(spark: SparkSession, kind: String, inputDir: String): String = {
+    cleanupAtEnd(spark)
     s"${root(spark)}/graft_${kind}_${spark.sparkContext.applicationId}_" +
       Integer.toHexString(inputDir.hashCode)
+  }
+
+  /** Delete every `graft_*` entry of application `appId` directly under
+    * `roots`: the [[dirFor]] dirs and the work dirs library code names
+    * `graft_<kind>_<appId>…` by hand. Other applications' entries stay.
+    */
+  def cleanup(appId: String, roots: Seq[String]): Unit =
+    roots.distinct.foreach { r =>
+      Option(new java.io.File(r).listFiles()).getOrElse(Array.empty)
+        .filter { f =>
+          val n = f.getName
+          n.startsWith("graft_") && (n.endsWith(s"_$appId") || n.contains(s"_${appId}_"))
+        }
+        .foreach(deleteRecursively)
+    }
+
+  private val cleanupRegistered =
+    scala.collection.concurrent.TrieMap.empty[String, Unit]
+
+  /** Run [[cleanup]] of this application's dirs, under the staging root
+    * and `java.io.tmpdir`, when the application ends. Registered once per
+    * context; every entry point that names such dirs calls it.
+    */
+  def cleanupAtEnd(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    if (cleanupRegistered.putIfAbsent(sc.applicationId, ()).isEmpty)
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+          cleanup(sc.applicationId, Seq(root(spark), System.getProperty("java.io.tmpdir")))
+      })
+  }
 
   /** Run `write(dir)` at most once per directory: gated on the completion
     * marker, wiping any partial prior attempt first. Synchronized so two

@@ -27,6 +27,8 @@ object Tables {
     // the instant is identical) — downstream epoch arithmetic
     // (`unix_micros`) and the streaming schemas require the zoned type.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // callers stage fixture-derived work dirs named for this application
+    Staging.cleanupAtEnd(spark)
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events")
       df.schema("ts").dataType match {

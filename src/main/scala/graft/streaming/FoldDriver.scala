@@ -22,9 +22,11 @@ import graft.sources.{PartitionedReplayProvider, ReplayServer}
   *     the one it expects are already folded — skipped; an id above it is
   *     a gap and fails loudly (`require`);
   *  2. SNAPSHOT BEFORE THE OFFSET COMMIT: the folded state is snapshotted
-  *     with `id` ([[Snapshots.saveBatchAuto]]) before `foreachBatch`
-  *     returns, i.e. before Spark commits the batch's offsets — a crash
-  *     after the snapshot re-delivers `id`, which step 1 then skips;
+  *     with `id` ([[Snapshots.saveBatch]], whose `LATEST` flip is the
+  *     commit point of the snapshot) before `foreachBatch` returns, i.e.
+  *     before Spark commits the batch's offsets — a crash after the flip
+  *     re-delivers `id`, which step 1 then skips; a crash before it leaves
+  *     `LATEST` at `id − 1` and re-delivers `id` to be folded again;
   *  3. ACCOUNTING ON ITS OWN ID WATERMARK: events, deletes, lateness and
   *     watermarks advance a [[Ledger]] keyed by its own last id — a crash
   *     between the snapshot and the ledger write re-delivers a batch whose
@@ -158,7 +160,7 @@ object FoldDriver {
             s"batch $id delivered but IVM state is at $expectedBatch — " +
               "a gap would corrupt the aggregate")
           state = IncrementalQ3.step(state, in.lines, spill, spillAtRows)
-          Snapshots.saveBatchAuto(state, snapDir, id)
+          Snapshots.saveBatch(state, snapDir, id)
           expectedBatch = id + 1
           onApplied(state, id)
         } // else: already folded into the loaded snapshot — skipped

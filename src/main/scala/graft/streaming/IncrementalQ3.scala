@@ -96,9 +96,10 @@ object IncrementalQ3 {
                            * exactly for the states whose upkeep took the
                            * plain-union path that batch (state' = state ∪ delta,
                            * nothing rewritten) — what lets a per-batch snapshot
-                           * hard-link the previous snapshot's files and write
-                           * only the delta ([[Snapshots.saveBatch]], r14).
-                           * Never persisted; rebuilt every step.
+                           * hard-link the previous snapshot's base and parts
+                           * and write only the delta as one more part
+                           * ([[Snapshots.saveBatch]]). Never persisted; rebuilt
+                           * every step.
                            */
                          snapDeltas: Map[String, DataFrame] = Map.empty,
                          spec: IvmSpec = Q3Spec) {
@@ -177,8 +178,9 @@ object IncrementalQ3 {
   // written before the state rebinds to it, and only then is everything
   // older than the PREVIOUS version dropped — a consumer holding last
   // batch's State keeps readable files (the store's reference-counted GC
-  // keeps carried-forward files alive), same discipline as
-  // Snapshots.saveBatch.
+  // keeps carried-forward files alive). The two newest versions staying
+  // on disk is also what keeps a snapshot's spill base readable
+  // (Snapshots.saveBatch names the newest version as its base).
   private[streaming] def spillRoot: Option[String] =
     sys.props.get("graft.ivm.spill.dir").map(_.trim)
       .filter(d => d.nonEmpty && d != "off")

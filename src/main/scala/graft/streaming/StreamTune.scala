@@ -53,6 +53,8 @@ object StreamTune {
     * caller-constructed session gets them).
     */
   def prepare(spark: SparkSession): Unit = {
+    // streaming entry points name their work dirs for this application
+    graft.sources.Staging.cleanupAtEnd(spark)
     val key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     // Honor an explicit setting (ADVICE r14 medium): a caller's
     // spark.conf.set must not be silently reverted by a library entry

@@ -26,9 +26,11 @@ object StreamingQ3 {
     * Recovery: Structured Streaming's checkpoint persists only SOURCE
     * offsets for a `foreachBatch` query; the IVM state lives on the driver.
     * With `snapshotDir` set, the state is snapshotted durably after every
-    * batch ([[Snapshots.saveBatch]]) and `start` auto-resumes: it loads the
-    * latest consistent snapshot and skips any re-delivered batch already
-    * folded into it (a batch can be re-delivered when the driver dies
+    * batch ([[Snapshots.saveBatch]]: this batch's delta, linked over the
+    * previous snapshot) and `start` auto-resumes: it loads the latest
+    * complete snapshot ([[Snapshots.loadLatest]]) and skips any
+    * re-delivered batch already folded into it (a batch can be
+    * re-delivered when the driver dies
     * between the snapshot flip and the offset-log commit — exactly-once
     * comes from the skip, not from luck). Pair `snapshotDir` with
     * `checkpointDir` on the same query; restart with both unchanged.
@@ -69,7 +71,7 @@ object StreamingQ3 {
           state = IncrementalQ3.step(state, batch)
           // snapshot BEFORE the offset commit: a crash after this point
           // re-delivers `id`, which the branch above then skips
-          snapshotDir.foreach(d => Snapshots.saveBatchAuto(state, d, id))
+          snapshotDir.foreach(d => Snapshots.saveBatch(state, d, id))
           onEmit(IncrementalQ3.topN(state).collect(), id)
         }
       }

@@ -50,4 +50,25 @@ class StagingSpec extends AnyFunSuite with graft.TempDirs {
     assert(!new File(dir, "half.bin").exists(), "retry must not see half-staged data")
     assert(new File(dir, "full.bin").exists())
   }
+
+  test("cleanup deletes this application's graft_ dirs and no one else's") {
+    // the staging root and java.io.tmpdir, as two roots; an application id
+    // that extends this one must not match it
+    val (stage, tmp) = (tempDir("graft-cleanup-stage"), tempDir("graft-cleanup-tmp"))
+    val app = "local-1700000000000"
+    def make(root: String, name: String): File = {
+      val d = new File(root, name)
+      new File(d, "part").mkdirs()
+      Files.write(Paths.get(d.getPath, "part", "f.bin"), "x".getBytes("UTF-8"))
+      d
+    }
+    val mine = Seq(make(stage, s"graft_streamann_${app}_1a2b"),
+      make(tmp, s"graft_bkt_$app"), make(tmp, s"graft_streamcep_state_${app}_3"))
+    val others = Seq(make(stage, s"graft_streamann_${app}1_1a2b"),
+      make(tmp, s"graft_bkt_${app}1"), make(tmp, "graft_spillscale_1a2b"),
+      make(tmp, s"kept_${app}_1"))
+    Staging.cleanup(app, Seq(stage, tmp))
+    mine.foreach(d => assert(!d.exists(), s"$d survived the cleanup"))
+    others.foreach(d => assert(new File(d, "part/f.bin").exists(), s"$d was deleted"))
+  }
 }

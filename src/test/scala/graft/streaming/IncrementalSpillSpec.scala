@@ -240,8 +240,8 @@ class IncrementalSpillSpec extends SparkSpec {
       s"threshold 1 must engage and spill (engagedAt=$engagedAt, " +
         s"history=${fin.spillHistory})")
     val snap = tempDir("graft-ivm-adaptive-snap")
-    Snapshots.save(fin, snap)
-    val loaded = Snapshots.load(spark, snap)
+    Snapshots.saveBatch(fin, snap, 0)
+    val loaded = Snapshots.loadLatest(spark, snap).get._1
     assert(loaded.spillEngaged,
       "the engagement latch must survive a snapshot — a resumed fold " +
         "falling back to the heap would re-pay the memory it can't afford")
@@ -265,8 +265,8 @@ class IncrementalSpillSpec extends SparkSpec {
         .foldLeft(IncrementalQ3.init(spark))(IncrementalQ3.step(_, _))
       assert(half.spillHistory.nonEmpty,
         "the snapshot must be taken AFTER a spill to exercise the composition")
-      Snapshots.save(half, s"$root/snap")
-      val loaded = Snapshots.load(spark, s"$root/snap")
+      Snapshots.saveBatch(half, s"$root/snap", 0)
+      val loaded = Snapshots.loadLatest(spark, s"$root/snap").get._1
       assert(loaded.spillHistory == half.spillHistory,
         "the snapshot must carry the spill history, or a resumed fold " +
           "leaks every pre-snapshot version forever")

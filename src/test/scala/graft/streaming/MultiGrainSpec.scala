@@ -37,8 +37,8 @@ class MultiGrainSpec extends SparkSpec {
       .localCheckpoint()
     val st = IncrementalQ3.runBatches(spark, events, 2, grains = grains)
     val dir = tempDir("graft-multigrain-snap")
-    Snapshots.save(st, dir)
-    val loaded = Snapshots.load(spark, dir)
+    Snapshots.saveBatch(st, dir, 0)
+    val loaded = Snapshots.loadLatest(spark, dir).get._1
     assert(loaded.aggs.map(_._1) == st.aggs.map(_._1),
       "the grain key lists must survive the snapshot")
     st.aggs.zip(loaded.aggs).foreach { case ((g, a), (_, b)) =>

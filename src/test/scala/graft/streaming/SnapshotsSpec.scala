@@ -9,6 +9,12 @@ import graft.SparkSpec
   */
 class SnapshotsSpec extends SparkSpec {
 
+  /** Whether the snapshot dir's META names a spill base for any state. */
+  private def hasBase(snap: String): Boolean =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$snap/META")), "UTF-8")
+      .split("\n").exists(l => l.startsWith("state=") && l.split(":")(1).nonEmpty)
+
   private def batches(insertOnly: Boolean, k: Int) = {
     val ev = Changelog.generateCached(spark, sfDir, insertOnly = insertOnly)
     val tMax = ev.agg(max(col("t"))).head().getLong(0)
@@ -24,8 +30,8 @@ class SnapshotsSpec extends SparkSpec {
     val snapDir = tempDir("graft-snap")
 
     val half = bs.take(2).foldLeft(IncrementalQ3.init(spark))(IncrementalQ3.step(_, _))
-    Snapshots.save(half, snapDir)
-    val resumed = bs.drop(2).foldLeft(Snapshots.load(spark, snapDir))(IncrementalQ3.step(_, _))
+    Snapshots.saveBatch(half, snapDir, 0)
+    val resumed = bs.drop(2).foldLeft(Snapshots.loadLatest(spark, snapDir).get._1)(IncrementalQ3.step(_, _))
 
     val a = IncrementalQ3.topN(direct).collect().map(_.toSeq).toSeq
     val b = IncrementalQ3.topN(resumed).collect().map(_.toSeq).toSeq
@@ -33,11 +39,11 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("delta snapshots resume to the exact uninterrupted answer at every kill point") {
-    // a SPILLED fold saved with saveBatchAuto persists only the pending
-    // deltas + the spill-version pointer once spillMeta exists; resuming
-    // from that delta snapshot must equal the uninterrupted fold no matter
-    // where the kill lands relative to the compaction cadence (before the
-    // first spill → full form; right after a compaction → pure metadata;
+    // a SPILLED fold's snapshot persists only the pending deltas over a
+    // spill-version base once spillMeta exists; resuming from it must
+    // equal the uninterrupted fold no matter where the kill lands relative
+    // to the compaction cadence (before the first spill → no base, the
+    // states as parts; right after a compaction → the base alone;
     // mid-window → base + pending chain)
     val k = 6 // CompactEvery = 4: kill points straddle the first compaction
     val bs = batches(insertOnly = true, k = k)
@@ -54,14 +60,12 @@ class SnapshotsSpec extends SparkSpec {
       var st = IncrementalQ3.init(spark)
       bs.take(cut).zipWithIndex.foreach { case (b, i) =>
         st = IncrementalQ3.step(st, b, spillDir = Some(spillB))
-        Snapshots.saveBatchAuto(st, snapDir, i.toLong)
+        Snapshots.saveBatch(st, snapDir, i.toLong)
       }
-      // the snapshot form must match the kill point: delta once spilled
-      val latest = s"$snapDir/b${cut - 1}"
-      val isDelta = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$latest/DELTA"))
-      assert(isDelta == (cut >= 4),
-        s"cut=$cut: expected ${if (cut >= 4) "delta" else "full"} snapshot form")
+      // the snapshot form must match the kill point: a base once spilled
+      val based = hasBase(s"$snapDir/b${cut - 1}")
+      assert(based == (cut >= 4),
+        s"cut=$cut: expected ${if (cut >= 4) "a" else "no"} spill base")
       val (resumedSt, lastId) = Snapshots.loadLatest(spark, snapDir).get
       assert(lastId == cut - 1)
       val fin = bs.drop(cut).foldLeft(resumedSt)(
@@ -77,7 +81,7 @@ class SnapshotsSpec extends SparkSpec {
   test("a spill root in an older build's parquet layout fails loudly on resume") {
     // an older build could spill in a bucketed-parquet layout (state dirs
     // of bucket files, no manifests) and named it in the root's FORMAT
-    // marker; resuming a delta snapshot over such a root must refuse it,
+    // marker; resuming a snapshot based on such a root must refuse it,
     // not read the missing manifests back as an empty state
     import java.nio.file.{Files, Paths}
     val bs = batches(insertOnly = true, k = 6)
@@ -86,10 +90,10 @@ class SnapshotsSpec extends SparkSpec {
     var st = IncrementalQ3.init(spark)
     bs.take(4).zipWithIndex.foreach { case (b, i) =>
       st = IncrementalQ3.step(st, b, spillDir = Some(spill))
-      Snapshots.saveBatchAuto(st, snapDir, i.toLong)
+      Snapshots.saveBatch(st, snapDir, i.toLong)
     }
-    assert(Files.exists(Paths.get(s"$snapDir/b3/DELTA")),
-      "fixture bug: the snapshot must be in delta form to read the spill root")
+    assert(hasBase(s"$snapDir/b3"),
+      "fixture bug: the snapshot must carry a spill base to read the spill root")
     IncrementalQ3.cleanupSpillRoot(spill)
     st.names.foreach(n => spark.range(1).write
       .parquet(s"$spill/v${st.spillHistory.head}/$n"))
@@ -104,9 +108,92 @@ class SnapshotsSpec extends SparkSpec {
     val bs = batches(insertOnly = false, k = 3)
     val snapDir = tempDir("graft-snap2")
     val first = IncrementalQ3.step(IncrementalQ3.init(spark), bs.head)
-    Snapshots.save(first, snapDir)
-    val fin = bs.tail.foldLeft(Snapshots.load(spark, snapDir))(IncrementalQ3.step(_, _))
+    Snapshots.saveBatch(first, snapDir, 0)
+    val fin = bs.tail.foldLeft(Snapshots.loadLatest(spark, snapDir).get._1)(IncrementalQ3.step(_, _))
     assert(IncrementalQ3.topN(fin).collect().isEmpty)
+  }
+
+  test("a resumed fold keeps the uninterrupted fold's aggDepth and dirty") {
+    // the agg-chain depth cap and the compaction counter are fold state
+    // too: a snapshot taken mid-chain must resume the SAME cadence, not
+    // restart it — compared after every later batch, with the answer
+    val bs = batches(insertOnly = false, k = 6)
+    val cut = 2
+    val direct = bs.scanLeft(IncrementalQ3.init(spark))(IncrementalQ3.step(_, _)).tail
+    val half = direct(cut - 1)
+    assert(half.aggDepth > 0 && half.spillMeta.isEmpty,
+      "fixture bug: the snapshot must be a no-base one taken mid agg chain")
+    val snapDir = tempDir("graft-snap-depth")
+    Snapshots.saveBatch(half, snapDir, cut - 1L)
+    val resumed = bs.drop(cut).scanLeft(Snapshots.loadLatest(spark, snapDir).get._1)(
+      IncrementalQ3.step(_, _)).tail
+    direct.drop(cut).zip(resumed).zipWithIndex.foreach { case ((a, b), i) =>
+      assert((b.aggDepth, b.dirty) == (a.aggDepth, a.dirty),
+        s"batch ${cut + i}: resumed (aggDepth, dirty) = ${(b.aggDepth, b.dirty)}, " +
+          s"uninterrupted ${(a.aggDepth, a.dirty)}")
+      assert(IncrementalQ3.topN(b).collect().toSeq == IncrementalQ3.topN(a).collect().toSeq,
+        s"batch ${cut + i}: resumed answer diverged")
+    }
+  }
+
+  test("a crash at the snapshot boundary resumes from the previous snapshot") {
+    // debris of a crashed saveBatch(b5) over a spilled fold whose b4 holds
+    // a base plus one part: b5's parts (linked from b4, plus b5's own
+    // written delta) without META, and a complete b5 whose LATEST flip
+    // never happened. Either way LATEST still names b4; re-running
+    // saveBatch(b5) over the debris and resuming must equal the
+    // uninterrupted fold.
+    import java.nio.file.{Files, Path, Paths}
+    val bs = batches(insertOnly = true, k = 7)
+    val spill = tempDir("graft-snap-crash-spill")
+    val fold = bs.scanLeft(IncrementalQ3.init(spark))(
+      IncrementalQ3.step(_, _, spillDir = Some(spill))).tail
+    def top(st: IncrementalQ3.State) = IncrementalQ3.topN(st).collect().map(_.toSeq).toSeq
+    val truth = top(fold.last)
+    for (withMeta <- Seq(false, true)) {
+      val snapDir = tempDir("graft-snap-crash")
+      (0 to 4).foreach(i => Snapshots.saveBatch(fold(i), snapDir, i.toLong))
+      assert(hasBase(s"$snapDir/b4"), "fixture bug: b4 must carry a spill base")
+      // a complete b5 made in a copy, mirrored back file by file: part
+      // files b4 already holds are hard-linked from b4, the rest copied
+      val copy = tempDir("graft-snap-crash-copy")
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(snapDir),
+        new java.io.File(copy))
+      Snapshots.saveBatch(fold(5), copy, 5L)
+      val (made, b4, b5) = (Paths.get(s"$copy/b5"), Paths.get(s"$snapDir/b4"),
+        Paths.get(s"$snapDir/b5"))
+      var linked = 0
+      val files = Files.walk(made)
+      try files.filter(Files.isRegularFile(_)).forEach { (f: Path) =>
+        val rel = made.relativize(f)
+        Files.createDirectories(b5.resolve(rel).getParent)
+        if (rel.getNameCount > 1 && Files.exists(b4.resolve(rel))) {
+          Files.createLink(b5.resolve(rel), b4.resolve(rel)); linked += 1
+        } else Files.copy(f, b5.resolve(rel))
+      } finally files.close()
+      assert(linked > 0, "fixture bug: the debris must hold linked parts")
+      if (!withMeta) Files.delete(b5.resolve("META"))
+      val (pre, preId) = Snapshots.loadLatest(spark, snapDir).get
+      assert(preId == 4 && top(pre) == top(fold(4)),
+        s"withMeta=$withMeta: the debris must not be resumed")
+      Snapshots.saveBatch(fold(5), snapDir, 5L)
+      val (st, id) = Snapshots.loadLatest(spark, snapDir).get
+      assert(id == 5)
+      val fin = bs.drop(6).foldLeft(st)(IncrementalQ3.step(_, _, spillDir = Some(spill)))
+      assert(top(fin) == truth,
+        s"withMeta=$withMeta: resume over re-saved debris diverged")
+    }
+    IncrementalQ3.cleanupSpillRoot(spill)
+  }
+
+  test("a snapshot without META that LATEST names fails loudly") {
+    val snapDir = tempDir("graft-snap-nometa")
+    val st = IncrementalQ3.step(IncrementalQ3.init(spark),
+      batches(insertOnly = true, k = 2).head)
+    Snapshots.saveBatch(st, snapDir, 0)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$snapDir/b0/META"))
+    val err = intercept[IllegalArgumentException](Snapshots.loadLatest(spark, snapDir))
+    assert(err.getMessage.contains("older build"), err.getMessage)
   }
 
   test("continuous query kill-and-resume equals the uninterrupted run") {

@@ -10,7 +10,8 @@ values (columns sorted by name, rows sorted by all columns).
 
 graft.Verify writes oracle entries only for the queries it ran, so an
 entry with no output directory is a query that failed to produce one: it
-is reported as missing and counted as bad.
+is reported as missing and counted as bad. A run that checked nothing
+(no oracle entry, e.g. a Verify regex that matched no query) fails.
 """
 import json
 import sys
@@ -84,6 +85,11 @@ def main() -> int:
             print(f"  ✗ {name}: VALUE MISMATCH\n{str(ex)[:800]}")
             n_bad += 1
     print(f"== {n_ok} ok, {n_bad} bad, {len(missing)} missing ==")
+    if n_ok + n_bad == 0:
+        # an empty oracle_sql.json (a Verify regex that matched no query)
+        # checked nothing: that is not a pass
+        print("nothing was checked: oracle_sql.json has no entries")
+        return 1
     return 1 if n_bad else 0
 
 
