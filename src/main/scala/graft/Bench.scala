@@ -4,7 +4,7 @@ object Bench {
 
   /** `SPARK_GRAFT_CPUS` (default 4), parsed fail-fast (ADVICE r6): a
     * non-numeric value would both break master=local[...] and leak invalid
-    * JSON into the bench record. Shared by the query-timing mains.
+    * JSON into the bench record.
     */
   private[graft] def envCpus(): Int = {
     val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -12,15 +12,27 @@ object Bench {
       sys.error(s"SPARK_GRAFT_CPUS must be a positive int, got '$raw'"))
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The one session of the mains (`Bench`, `Verify`, `Prof`, `ScaleData`,
+    * `Explain`): [[envCpus]] local threads, as many shuffle partitions,
+    * UTC, UI off. `Verify`'s outputs are compared against the oracle
+    * under exactly these settings.
+    */
+  private[graft] def session(): SparkSession = {
     val cpus = envCpus()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = envCpus()
+    val spark = session()
     // Warm the JVM once so the first timed query isn't charged for session
     // startup, the whole-stage-codegen compiler, shuffle machinery, and the
     // Janino/JIT paths the real queries hit. The warmup runs at sf0.001

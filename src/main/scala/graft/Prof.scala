@@ -3,14 +3,17 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-job attribution for a registered query (guide §1: decide whether
   * time goes to shuffle, compute, or scheduling BEFORE changing code).
-  * Runs each named query like [[Solo]] (fresh JVM, per-query isolation)
-  * with a listener that records every Spark job's wall time, summed task
-  * time, task count, and shuffle bytes — the local-mode stand-in for the
-  * Spark UI's Jobs/Stages pages (the UI is disabled in this harness).
+  * Times each named query in a fresh JVM, isolated like [[Bench]]
+  * isolates (resetSession between queries, the fold memo invalidated
+  * before each), with a listener that records every Spark job's wall
+  * time, summed task time, task count, and shuffle bytes — the local-mode
+  * stand-in for the Spark UI's Jobs/Stages pages (the UI is disabled in
+  * this harness). The tool for separating a genuine per-query regression
+  * from bench-session or host effects; run a name twice to see warm-vs-cold
+  * codegen cost.
   *
   * {{{ SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.Prof changelog_counts" }}}
   */
@@ -29,11 +32,7 @@ object Prof {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Bench.envCpus()
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     spark.range(1000).selectExpr("sum(id)").collect()
 
     val jobs = new ConcurrentHashMap[Int, JobRec]()

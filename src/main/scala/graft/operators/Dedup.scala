@@ -34,10 +34,7 @@ object Dedup {
   def shingled(spark: SparkSession, dir: String): DataFrame =
     shingledDocs(Tables.table(spark, dir, "documents"))
 
-  /** [[shingled]] over an explicit `(doc_id, text)` frame (scale-up
-    * harnesses build synthetic larger corpora and dedup them through the
-    * same operators — see `graft.DedupBench`).
-    */
+  /** [[shingled]] over an explicit `(doc_id, text)` frame. */
   def shingledDocs(docs: DataFrame): DataFrame =
     Tables.spread(docs) // single-file fixture scan → spread the CPU-heavy
                         // shingle/verify work across cores (no-op at scale)
@@ -104,7 +101,7 @@ object Dedup {
 
   /** Exact Jaccard pairs ≥ `threshold` over a PINNED shingle frame — the
     * recall-independent ground truth the approximate families are judged
-    * against (DedupSpec; DedupBench's scaled self-check). `sh` must be
+    * against (DedupPropertySpec). `sh` must be
     * checkpointed by the caller: it is consumed by an explode and a sizes
     * projection, and an unpinned inline shingle expression under the
     * explode re-evaluates per output row.
@@ -195,9 +192,7 @@ object Dedup {
     minhashLshPairs(shingled(spark, dir).localCheckpoint())
       .orderBy("doc_a", "doc_b")
 
-  /** The MinHash+LSH pair pipeline over a PINNED shingle frame — shared
-    * by the driver query and the scale harness (`graft.DedupBench`).
-    */
+  /** The MinHash+LSH pair pipeline over a PINNED shingle frame. */
   def minhashLshPairs(sh: DataFrame): DataFrame = {
     val bands = lshIndex(sh)
     val cand = bands.as("x").join(bands.as("y"),
@@ -283,8 +278,7 @@ object Dedup {
     * doc_ids — a stand-in for "today's ingest batch") near-duplicate the
     * BASE corpus? The production dedup shape: a corpus that already paid
     * its MinHash cost once must not be re-paired per ingest — see
-    * [[incrementalPairs]] for the cost argument and `graft.DedupBench`
-    * for the measured marginal-ingest cost at a scaled corpus. Output
+    * [[incrementalPairs]] for the cost argument. Output
     * matches [[dedupMinhashLsh]]'s contract restricted to base×delta
     * pairs (doc_a < split ≤ doc_b), so the exact-Jaccard oracle is the
     * same feasible form with the split predicate.
@@ -358,10 +352,7 @@ object Dedup {
     simhashPairsDocs(shingled(spark, dir).localCheckpoint())
       .orderBy("doc_a", "doc_b")
 
-  /** The frame-parametric core of [[dedupSimhash]] — shared with
-    * [[graft.SimhashBench]], whose ≥100K-doc corpora exercise the
-    * NARROWED chunk regime the fixture gate never reaches.
-    */
+  /** The frame-parametric core of [[dedupSimhash]]. */
   private[graft] def simhashPairsDocs(sh: DataFrame): DataFrame = {
     val sig = simhashSignatures(sh).localCheckpoint()
     val nChunks = simhashChunks(sig.count())
@@ -635,10 +626,7 @@ object Dedup {
   def repeatedPassages(spark: SparkSession, dir: String): DataFrame =
     repeatedPassagesDocs(Tables.table(spark, dir, "documents"))
 
-  /** [[repeatedPassages]] over an explicit `(doc_id, text)` frame (the
-    * scale-up harness pushes synthetic larger corpora through the same
-    * operator — see `graft.DedupBench`).
-    */
+  /** [[repeatedPassages]] over an explicit `(doc_id, text)` frame. */
   def repeatedPassagesDocs(docs: DataFrame): DataFrame =
     if (docs.sparkSession.conf.get("spark.graft.substring.hashed", "false").toBoolean)
       repeatedPassagesHashedDocs(docs)

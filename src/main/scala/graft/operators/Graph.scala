@@ -34,8 +34,7 @@ import graft.sources.Tables
 object Graph {
 
   /** The distinct (order, part) basket frame every co-purchase kernel
-    * starts from — frame-parametric so [[graft.GraphBench]] can feed
-    * key-shifted scaled copies through the identical cores.
+    * starts from.
     */
   private[graft] def basketFrame(spark: SparkSession, dir: String): DataFrame =
     Tables.table(spark, dir, "lineitem")

@@ -46,7 +46,7 @@ object ProductQuant {
     quantizedOf(Tables.table(spark, dir, "embeddings"))
 
   /** Quantize any `(vec_id, embedding)` frame to the engine's integer
-    * millionths (shared with [[graft.AnnBench]]'s scaled corpora).
+    * millionths.
     */
   private[graft] def quantizedOf(df: DataFrame): DataFrame =
     df.select(col("vec_id"), quantized.as("e"))
@@ -208,17 +208,9 @@ object ProductQuant {
 
   // --- IVF × PQ composition ----------------------------------------------
 
-  // coarse cells / probe seeds — sysprops so the scale harness can grow
-  // cells with the corpus (the driver contract stays at the defaults);
-  // cell seeds are vec_id 0..cells-1
-  lazy val IvfCells: Int = {
-    val v = sys.props.get("graft.pq.cells").map(_.toInt).getOrElse(16)
-    require(v >= 2 && v <= 1024, s"graft.pq.cells must be in [2,1024], got $v"); v
-  }
-  lazy val IvfProbes: Int = {
-    val v = sys.props.get("graft.pq.probes").map(_.toInt).getOrElse(4)
-    require(v >= 1 && v <= 1024, s"graft.pq.probes must be in [1,1024], got $v"); v
-  }
+  // coarse cells / probe seeds; cell seeds are vec_id 0..cells-1
+  val IvfCells = 16
+  val IvfProbes = 4
 
   /** `ann_ivf_pq` — the production billion-vector index shape: IVF coarse
     * cells restrict which encoded vectors each query ADC-scores, replacing

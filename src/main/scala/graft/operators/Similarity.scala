@@ -70,10 +70,7 @@ object Similarity {
   def annBruteForce(spark: SparkSession, dir: String): DataFrame =
     bruteForceOn(vectors(spark, dir))
 
-  /** The frame-parametric core of [[annBruteForce]] — shared with
-    * [[graft.AnnBench]], whose scaled corpora need the same exact scan as
-    * ground truth.
-    */
+  /** The frame-parametric core of [[annBruteForce]]. */
   private[graft] def bruteForceOn(v: DataFrame): DataFrame = {
     import graft.functions.VectorExprs.dot
     val q = v.filter(col("vec_id") < NumQueries)
@@ -254,15 +251,11 @@ object Similarity {
   // FIXED seed-42 family in the full-recall regime on the verification
   // fixtures, so the exact rerank over candidates reproduces the
   // brute-force top-K bit-for-bit (checked by the driver's oracle). At
-  // production scale raise `graft.ann.bits` (selectivity) and accept the
-  // recall curve — the plan shape (bucket join, never corpus²) is unchanged.
-  private def intProp(key: String, dflt: Int, lo: Int, hi: Int): Int = {
-    val v = sys.props.get(key).map(_.toInt).getOrElse(dflt)
-    require(v >= lo && v <= hi, s"$key must be in [$lo,$hi], got $v")
-    v
-  }
-  private lazy val NumTables = intProp("graft.ann.tables", 28, 1, 256)
-  private lazy val BitsPerTable = intProp("graft.ann.bits", 3, 1, 16)
+  // production scale more bits per table buy selectivity at the cost of
+  // the recall curve — the plan shape (bucket join, never corpus²) is
+  // unchanged.
+  private val NumTables = 28
+  private val BitsPerTable = 3
 
   /** Deterministic ±1 hyperplane components, seeded once — the engine's
     * fixed hash family (analogous to MinHash's seeds).
@@ -307,8 +300,8 @@ object Similarity {
 
   // Probes only seed the pruning bound (exactness never depends on them —
   // see annIvf); more probes ⇒ tighter seed ⇒ fewer phase-2 cells.
-  private lazy val IvfCells = intProp("graft.ann.cells", 16, 2, 4096)
-  private lazy val IvfProbes = intProp("graft.ann.probes", 4, 1, 4096)
+  private val IvfCells = 16
+  private val IvfProbes = 4
 
   /** IVF ANN — the other classic scale path: a coarse k-means quantizer
     * (MLlib, trained once over unit-normalized vectors) partitions the
@@ -325,8 +318,8 @@ object Similarity {
   def annIvf(spark: SparkSession, dir: String): DataFrame =
     annIvfOn(spark, vectors(spark, dir).localCheckpoint())
 
-  /** The frame-parametric core of [[annIvf]] (shared with
-    * [[graft.AnnBench]]); `v` must be pinned by the caller.
+  /** The frame-parametric core of [[annIvf]]; `v` must be pinned by the
+    * caller.
     */
   private[graft] def annIvfOn(spark: SparkSession, v: DataFrame): DataFrame = {
     import spark.implicits._

@@ -82,9 +82,7 @@ object Changelog {
       Tables.table(spark, dir, "customer"),
       capacity, insertOnly)
 
-  /** [[generate]] over explicit table DataFrames (scale-up harnesses build
-    * synthetic larger tables and stream them through the same generator).
-    */
+  /** [[generate]] over explicit table DataFrames. */
   def generateFrom(li: DataFrame, or: DataFrame, cu: DataFrame,
                    capacity: Option[Long] = None,
                    insertOnly: Boolean = false): DataFrame = {

@@ -155,12 +155,11 @@ object IncrementalQ3 {
   //
   // By default the five states are localCheckpoint'd frames — executor
   // storage memory (with BlockManager disk overflow), fine at driver-test
-  // scale but an unbounded envelope at 100×: the 153 M-event StreamBench
-  // run peaks above 100 M state rows. With a spill dir set (the
-  // `spillDir` parameter of [[step]]/[[runBatches]], defaulting to
-  // `-Dgraft.ivm.spill.dir`), every compaction instead MERGEs each state
-  // into per-bucket parquet files ([[MergeLogSpill]], bucketed by the
-  // state's join key):
+  // scale but an unbounded envelope at 100×: a 153 M-event fold of the
+  // 100× corpus peaked above 100 M state rows. With a spill dir set (the
+  // `spillDir` parameter of [[step]]/[[runBatches]], default none),
+  // every compaction instead MERGEs each state into per-bucket parquet
+  // files ([[MergeLogSpill]], bucketed by the state's join key):
   //  - memory holds only the deltas since the last compaction — the
   //    envelope is CompactEvery × batch size, not accumulated state
   //    (under spill, compaction fires every CompactEvery batches even on
@@ -181,9 +180,6 @@ object IncrementalQ3 {
   // keeps carried-forward files alive). The two newest versions staying
   // on disk is also what keeps a snapshot's spill base readable
   // (Snapshots.saveBatch names the newest version as its base).
-  private[streaming] def spillRoot: Option[String] =
-    sys.props.get("graft.ivm.spill.dir").map(_.trim)
-      .filter(d => d.nonEmpty && d != "off")
 
   // Version allocation is PER ROOT and seeded from whatever v<N> dirs
   // already exist there — a resumed process (Snapshots restores
@@ -301,9 +297,9 @@ object IncrementalQ3 {
 
   /** Apply one micro-batch of raw changelog lines to the state. The
     * query and its grains come from `st` (set at [[init]]); `spillDir`
-    * bounds the memory envelope via the state spill (default:
-    * the `graft.ivm.spill.dir` system property — threaded as a parameter
-    * so concurrent folds in one JVM never share a mutable global).
+    * bounds the memory envelope via the state spill (default: none, the
+    * in-memory fold) — a parameter, so concurrent folds in one JVM never
+    * share a mutable global.
     *
     * `spillAtRows` makes the spill a POLICY instead of a switch (r13
     * verdict item 1): with a positive threshold the fold starts IN-MEMORY
@@ -319,7 +315,7 @@ object IncrementalQ3 {
     * gates rely on.
     */
   def step(st: State, lines: DataFrame,
-           spillDir: Option[String] = spillRoot,
+           spillDir: Option[String] = None,
            spillAtRows: Long = 0L): State = {
     val grains = st.aggsRaw.map(_._1)
     // adaptive-threshold latch: below the threshold the fold behaves as
@@ -631,10 +627,13 @@ object IncrementalQ3 {
                  // delta-sized partials (the chain's older links are
                  // already pinned; counting the whole chain per batch
                  // would be the O(k²) trap the comment above names)
+    // each pin runs under the caller's job label: a pool thread keeps the
+    // label of the moment it was made (the same rule as Snapshots.saveBatch)
     val sizes = graft.Phase(
       if (compact) "ivm.step.upkeepPin.compact" else "ivm.step.upkeepPin") {
-      Await.result(
-        Future.sequence(toPin.map(df => Future { df.count() })), Duration.Inf)
+      val label = st.c.sparkSession.sparkContext.getLocalProperty("spark.job.description")
+      Await.result(Future.sequence(toPin.map(df =>
+        Future(graft.Phase.labelled(label)(df.count())))), Duration.Inf)
     }
     parsed.unpersist(blocking = false)
     // adaptive engagement: a pre-engagement compaction just measured the
@@ -674,20 +673,17 @@ object IncrementalQ3 {
                  grains: Seq[Seq[String]] = Seq(DefaultAggKeys),
                  spec: IvmSpec = Q3Spec,
                  tMaxKnown: Option[Long] = None,
-                 spillDir: Option[String] = spillRoot,
+                 spillDir: Option[String] = None,
                  spillAtRows: Long = 0L,
                  onBatch: (Int, State) => Unit = (_, _) => ()): State = {
     val tMax = tMaxKnown.getOrElse(events.agg(max(col("t"))).head().getLong(0))
-    // NO re-checkpoint here: both call sites (generateCached, StreamBench)
-    // hand over an already-pinned frame, and the batch column is a trivial
-    // projection per cached scan — re-materializing millions of lines just
+    // NO re-checkpoint here: callers hand over an already-pinned frame,
+    // and the batch column is a trivial projection per cached scan — re-materializing millions of lines just
     // to attach it cost more than every per-batch filter combined.
     val batched = events.withColumn("batch", Changelog.batchOf(k, tMax))
     val fin = (0 until k).foldLeft(init(spark, grains, spec)) { (st, b) =>
-      val t0 = System.nanoTime()
-      val r = step(st, batched.filter(col("batch") === b).select("line"),
-        spillDir, spillAtRows)
-      System.err.println(f"[ivm] batch $b: ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      val r = graft.Phase(s"ivm.batch.$b")(step(st,
+        batched.filter(col("batch") === b).select("line"), spillDir, spillAtRows))
       onBatch(b, r)
       r
     }

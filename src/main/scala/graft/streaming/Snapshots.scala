@@ -64,7 +64,8 @@ object Snapshots {
 
   private def part(d: Path, name: String, k: Int): Path = d.resolve(s"${name}_$k")
 
-  private def latestId(dir: String): Option[Long] = {
+  /** The id `LATEST` names, if any; [[loadLatest]] reads that snapshot. */
+  private[streaming] def latestId(dir: String): Option[Long] = {
     val latest = Paths.get(s"$dir/LATEST")
     if (!Files.exists(latest)) None
     else Some(new String(Files.readAllBytes(latest), StandardCharsets.UTF_8).trim.toLong)

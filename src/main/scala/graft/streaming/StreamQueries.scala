@@ -180,9 +180,8 @@ object StreamQueries {
     val root = java.nio.file.Files
       .createTempDirectory("graft-ivm-spill-q").toString
     try {
-      // the spill root is THREADED as a parameter (ADVICE r10): mutating
-      // the process-global graft.ivm.spill.dir here would silently flip
-      // any concurrently-running fold in the same JVM into spill mode
+      // the spill root is a parameter, never process-global state: a
+      // concurrently-running fold in the same JVM keeps its own mode
       val fin = IncrementalQ3.runBatches(spark, Changelog.windowed(spark, dir), 6,
         spillDir = Some(root))
       require(fin.spillHistory.nonEmpty,

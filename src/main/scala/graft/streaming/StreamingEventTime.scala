@@ -91,7 +91,7 @@ object StreamingEventTime {
   def start(spark: SparkSession, stagedDir: String, work: String,
             onApplied: Long => Unit = _ => ()): StreamingQuery = {
     val sink = FoldDriver.foldSink(spark, "etlive", work,
-      IncrementalQ3.spillRoot, spillAtRows = 0L, batchWatermark,
+      None, spillAtRows = 0L, batchWatermark,
       (_, id) => onApplied(id))
     StreamTune.prepare(spark)
     spark.readStream
@@ -106,12 +106,13 @@ object StreamingEventTime {
   }
 
   /** True once arrivals 0..`lastId` are all folded AND accounted —
-    * the drain condition for the driver query and the specs.
+    * the drain condition for the driver query and the specs. Reads only
+    * the snapshot id: loading the snapshot would rebuild every state per
+    * poll.
     */
-  private[streaming] def drained(spark: SparkSession, work: String,
-                                 lastId: Long): Boolean =
+  private[streaming] def drained(work: String, lastId: Long): Boolean =
     FoldDriver.progress(work).read()._1 >= lastId &&
-      Snapshots.loadLatest(spark, s"$work/snap").exists(_._2 >= lastId)
+      Snapshots.latestId(s"$work/snap").exists(_ >= lastId)
 
   /** The query's answer from a drained `work` dir: on-time Q3 top-20 with
     * the dropped-late count on every row.
@@ -139,10 +140,10 @@ object StreamingEventTime {
       try {
         val lastId = K.toLong // K on-time files + 1 late file → ids 0..K
         val deadline = System.nanoTime() + 300L * 1000000000L
-        while (!drained(spark, work, lastId) && q.isActive &&
+        while (!drained(work, lastId) && q.isActive &&
                System.nanoTime() < deadline)
           Thread.sleep(25)
-        require(drained(spark, work, lastId),
+        require(drained(work, lastId),
           s"live event-time Q3: not all ${lastId + 1} arrivals " +
             s"folded before timeout (query active: ${q.isActive})")
       } finally q.stop()

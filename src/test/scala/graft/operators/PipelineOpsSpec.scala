@@ -44,7 +44,7 @@ class PipelineOpsSpec extends SparkSpec {
     // the corpus-size → chunk-count derivation IS the recall/selectivity
     // contract (radius = chunks − 1, buckets/chunk = 2^(64/chunks)); the
     // switch points are load-bearing for both the ≤100K full-recall claim
-    // and the ≥100K narrowed regime SimhashBench measures — pin them
+    // and the ≥100K narrowed regime (measured in README.md) — pin them
     assert(Dedup.simhashChunks(500L) == 16)
     assert(Dedup.simhashChunks(100000L) == 16, "the wide band holds THROUGH 100K")
     assert(Dedup.simhashChunks(100001L) == 8, "the narrowed band engages PAST 100K")
@@ -61,8 +61,8 @@ class PipelineOpsSpec extends SparkSpec {
     // pair it emits must be a true J ≥ 0.9 pair (verification is exact),
     // and its pair set must be a subset of the wide 16-chunk answer —
     // recall narrows to the guaranteed radius, precision never moves.
-    // (The 100K+ run with the auto switch is SimhashBench — solo,
-    // tolerated slow; this pins the same semantics cheaply.)
+    // (The 100K+ run with the auto switch is recorded in README.md; this
+    // pins the same semantics cheaply.)
     val wide = Dedup.dedupSimhash(spark, sfDir).collect().map(_.toSeq).toSet
     System.setProperty("graft.simhash.chunks", "8")
     val narrow = try Dedup.dedupSimhash(spark, sfDir).collect().map(_.toSeq).toSet

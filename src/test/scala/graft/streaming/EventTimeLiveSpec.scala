@@ -35,7 +35,7 @@ class EventTimeLiveSpec extends SparkSpec {
       // phase B: resume from checkpoint + snapshot + accounting meta
       val qb = StreamingEventTime.start(spark, staged, work,
         onApplied = applied.set)
-      try awaitOrFail(StreamingEventTime.drained(spark, work, lastId),
+      try awaitOrFail(StreamingEventTime.drained(work, lastId),
         "all arrivals folded after resume")
       finally qb.stop()
       val live = StreamingEventTime.result(spark, work)

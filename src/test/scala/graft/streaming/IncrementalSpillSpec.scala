@@ -23,13 +23,10 @@ class IncrementalSpillSpec extends SparkSpec {
   private lazy val events: DataFrame =
     Changelog.generate(spark, sfDir, capacity = Some(1500L)).localCheckpoint()
 
-  private def fold(onBatch: (Int, IncrementalQ3.State) => Unit)
-      : IncrementalQ3.State =
-    IncrementalQ3.runBatches(spark, events, K, onBatch = onBatch)
-
-  private def tops(): Seq[Seq[Seq[Any]]] = {
+  private def tops(spillDir: Option[String] = None): Seq[Seq[Seq[Any]]] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Seq[Any]]]
-    fold((_, st) => buf += IncrementalQ3.topN(st).collect().map(_.toSeq).toSeq)
+    IncrementalQ3.runBatches(spark, events, K, spillDir = spillDir,
+      onBatch = (_, st) => buf += IncrementalQ3.topN(st).collect().map(_.toSeq).toSeq)
     buf.toSeq
   }
 
@@ -51,9 +48,7 @@ class IncrementalSpillSpec extends SparkSpec {
   test("spilled fold ≡ in-memory fold at every batch; versions pruned to two") {
     val plain = plainTops
     val root = tempDir("graft-ivm-spill")
-    System.setProperty("graft.ivm.spill.dir", root)
-    val spilled = try tops()
-    finally System.clearProperty("graft.ivm.spill.dir")
+    val spilled = tops(Some(root))
     assert(spilled == plain,
       "state spill is a storage change, never a semantic one")
     assert(plain.last.isEmpty, "full cycle converges to exactly-empty state")
@@ -258,24 +253,22 @@ class IncrementalSpillSpec extends SparkSpec {
       .localCheckpoint()
     val bs = (0 until K).map(i => batched.filter(col("batch") === i).select("line"))
     val root = tempDir("graft-ivm-spill-snap")
-    System.setProperty("graft.ivm.spill.dir", s"$root/spill")
-    try {
-      val direct = bs.foldLeft(IncrementalQ3.init(spark))(IncrementalQ3.step(_, _))
-      val half = bs.take(K / 2 + 1)
-        .foldLeft(IncrementalQ3.init(spark))(IncrementalQ3.step(_, _))
-      assert(half.spillHistory.nonEmpty,
-        "the snapshot must be taken AFTER a spill to exercise the composition")
-      Snapshots.saveBatch(half, s"$root/snap", 0)
-      val loaded = Snapshots.loadLatest(spark, s"$root/snap").get._1
-      assert(loaded.spillHistory == half.spillHistory,
-        "the snapshot must carry the spill history, or a resumed fold " +
-          "leaks every pre-snapshot version forever")
-      val resumed = bs.drop(K / 2 + 1)
-        .foldLeft(loaded)(IncrementalQ3.step(_, _))
-      val a = IncrementalQ3.topN(direct).collect().map(_.toSeq).toSeq
-      val b = IncrementalQ3.topN(resumed).collect().map(_.toSeq).toSeq
-      assert(a == b, "spilled-fold resume must equal the uninterrupted fold")
-      assert(b.isEmpty, "full cycle still cancels to exactly empty")
-    } finally System.clearProperty("graft.ivm.spill.dir")
+    val spill = Some(s"$root/spill")
+    def step(st: IncrementalQ3.State, b: DataFrame) =
+      IncrementalQ3.step(st, b, spillDir = spill)
+    val direct = bs.foldLeft(IncrementalQ3.init(spark))(step)
+    val half = bs.take(K / 2 + 1).foldLeft(IncrementalQ3.init(spark))(step)
+    assert(half.spillHistory.nonEmpty,
+      "the snapshot must be taken AFTER a spill to exercise the composition")
+    Snapshots.saveBatch(half, s"$root/snap", 0)
+    val loaded = Snapshots.loadLatest(spark, s"$root/snap").get._1
+    assert(loaded.spillHistory == half.spillHistory,
+      "the snapshot must carry the spill history, or a resumed fold " +
+        "leaks every pre-snapshot version forever")
+    val resumed = bs.drop(K / 2 + 1).foldLeft(loaded)(step)
+    val a = IncrementalQ3.topN(direct).collect().map(_.toSeq).toSeq
+    val b = IncrementalQ3.topN(resumed).collect().map(_.toSeq).toSeq
+    assert(a == b, "spilled-fold resume must equal the uninterrupted fold")
+    assert(b.isEmpty, "full cycle still cancels to exactly empty")
   }
 }

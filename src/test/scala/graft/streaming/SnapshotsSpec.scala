@@ -176,6 +176,8 @@ class SnapshotsSpec extends SparkSpec {
       val (pre, preId) = Snapshots.loadLatest(spark, snapDir).get
       assert(preId == 4 && top(pre) == top(fold(4)),
         s"withMeta=$withMeta: the debris must not be resumed")
+      assert(Snapshots.latestId(snapDir).contains(preId),
+        s"withMeta=$withMeta: the drain check must read the id loadLatest resumes")
       Snapshots.saveBatch(fold(5), snapDir, 5L)
       val (st, id) = Snapshots.loadLatest(spark, snapDir).get
       assert(id == 5)
