@@ -30,15 +30,32 @@ object Phase {
     * of a `foreachBatch`.
     */
   private[graft] def labelled[A](label: String)(body: => A): A =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext) match {
+    context match {
       case None => body
       case Some(sc) =>
         val prev = sc.getLocalProperty(JobDescription)
         sc.setJobDescription(label)
         try body finally sc.setJobDescription(prev)
     }
+
+  /** Run `bodies` concurrently on the global pool and wait for all of
+    * them, each under the calling thread's job label. A pool thread keeps
+    * the label of the moment it was made, which would file its jobs under
+    * whatever phase happened to start that thread.
+    */
+  private[graft] def concurrently[A](bodies: Seq[() => A]): Seq[A] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val label = context.map(_.getLocalProperty(JobDescription)).orNull
+    Await.result(Future.sequence(bodies.map(b => Future(labelled(label)(b())))),
+      Duration.Inf)
+  }
+
+  private def context: Option[org.apache.spark.SparkContext] =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext)
 
   private val JobDescription = "spark.job.description"
 }

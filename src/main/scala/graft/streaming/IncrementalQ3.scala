@@ -57,16 +57,16 @@ object IncrementalQ3 {
                            dL: DataFrame => DataFrame,
                            coCols: Seq[String])
 
-  /** Spill bookkeeping carried between compactions (spill mode only):
-    * which buckets each state has dirtied since `version` was written, and
-    * the per-state delta frames accumulated since then (references to the
-    * already-checkpointed per-batch deltas — no extra storage). Together
-    * they let the next compaction rewrite ONLY the dirty buckets: input =
-    * `readBuckets(version, dirty) ∪ pending ∪ batch delta`, everything
-    * else carried forward unrewritten.
+  /** Spill bookkeeping carried between compactions (spill mode only): the
+    * per-state delta frames accumulated since `version` was written
+    * (references to the already-checkpointed per-batch deltas — no extra
+    * storage). They let the next compaction rewrite ONLY the dirty
+    * buckets: that compaction's one probe action reads which buckets
+    * `pending ∪ batch delta` touches, the input is
+    * `readBuckets(version, dirty) ∪ pending ∪ batch delta`, and everything
+    * else is carried forward unrewritten.
     */
   final case class SpillMeta(root: String, version: Long,
-                             dirty: Map[String, Set[Int]],
                              pending: Map[String, Vector[DataFrame]])
 
   /** All maintained state. `c/o/l/co` are z-set DataFrames with weight
@@ -76,7 +76,7 @@ object IncrementalQ3 {
     * since the base states were last compacted (see the
     * amortized-compaction note in [[step]]). `spillHistory` is this fold's
     * spill versions, newest first (at most the two newest stay on disk —
-    * see the spill note in [[step]]); `spillMeta` is the dirty-bucket
+    * see the spill note in [[step]]); `spillMeta` is the pending-delta
     * bookkeeping since the newest version. `spillEngaged` is the ADAPTIVE
     * spill latch (see the threshold note in [[step]]): once the measured
     * consolidated state crosses the engagement threshold it stays set —
@@ -319,7 +319,7 @@ object IncrementalQ3 {
            spillAtRows: Long = 0L): State = {
     val grains = st.aggsRaw.map(_._1)
     // adaptive-threshold latch: below the threshold the fold behaves as
-    // in-memory (no bucket probes, no table writes) EXCEPT that it keeps
+    // in-memory (no pending chains, no table writes) EXCEPT that it keeps
     // the spill compaction cadence — each compaction is the measurement
     val engaged = spillDir.nonEmpty && (spillAtRows <= 0L || st.spillEngaged)
     // ONE pass over the raw text: parse into a cached tagged z-set, then
@@ -426,58 +426,31 @@ object IncrementalQ3 {
     //    between compactions. A Union gaining a branch per batch renamed
     //    their generated classes (the name carries the codegen stage id),
     //    so the fold recompiled identical code every micro-batch.
-    // Materialize the SHARED plan parents in dependency order BEFORE the
-    // concurrent per-state fan-out below. Concurrent Spark jobs do not
-    // share in-flight computation — five futures racing over the same
-    // un-checkpointed parents each re-run the parse and the delta joins
-    // (observed: escalating per-batch times on the delete phase). One
-    // action per layer pins each layer's blocks exactly once:
+    // Materialize the SHARED plan parents in dependency order BEFORE any
+    // concurrent per-state fan-out below (the upkeep pins, a spilled
+    // batch's MERGEs). Concurrent Spark jobs do not share in-flight
+    // computation — five futures racing over the same un-checkpointed
+    // parents each re-run the parse and the delta joins (observed:
+    // escalating per-batch times on the delete phase). Each layer's blocks
+    // are pinned exactly once:
     //   1. full text parse FIRST, as its own serial action (count, never
     //      isEmpty — isEmpty short-circuits and leaves most partitions
-    //      uncached). Folding this into the deltas action below re-runs
-    //      the parse up to 3× concurrently (one per union branch racing
-    //      before the cache fills) — measured 233K → 145K events/s at k=8.
-    //      Since r15 the action runs at the TOP of the step (hasDeletes
-    //      above), before the dCO/dAgg constructions whose AQE broadcast
-    //      stages would otherwise be the first — uncached — parse readers;
+    //      uncached). Folding it into a later action re-runs the parse up
+    //      to 3× concurrently (one per union branch racing before the
+    //      cache fills) — measured 233K → 145K events/s at k=8. Since r15
+    //      the action runs at the TOP of the step (hasDeletes above),
+    //      before the dCO/dAgg constructions whose AQE broadcast stages
+    //      would otherwise be the first — uncached — parse readers;
+    //   2. every delta checkpoint (dC, dO, dL, dCO) is some delta join's
+    //      BROADCAST stage (ZSet.deltaJoin always broadcasts the delta), and
+    //      AQE's toRdd materializes those stages — and each dAgg's shuffle
+    //      stage — eagerly when the constructions above run (r15: −2 AQE
+    //      job rounds per batch, every fold query). So no layer needs a pin
+    //      job of its own, in memory or spilled.
+    // Under spill the dirty-bucket probe runs only in the compaction that
+    // reads dirty buckets, over the pending chain (see `probe` below).
     val spark = lines.sparkSession
     val bucketN = MergeLogSpill.Buckets
-    def bucketExpr(key: String) = pmod(hash(col(key)), lit(bucketN)).cast("int")
-    //   2. the three relation deltas, in ONE action over the cached parse.
-    //      Under spill that action IS the dirty-bucket probe — the same
-    //      full scan that pins the delta blocks also returns which state
-    //      buckets this batch touches;
-    //   3. the first delta join (both branches of ΔJ and the co upkeep
-    //      read it) — likewise doubling as the co bucket probe.
-    // Each agg grain gets its OWN exact probe over its delta PARTIAL
-    // (r11 verdict item 4 — the old shortcut marked non-`l_orderkey`
-    // grains all-dirty, silently degrading a fact-sized grain to O(state)
-    // agg rewrites every compaction): only groups ΔAgg touches can change
-    // at the merge, so buckets(ΔAgg.leadingKey) is exact for ANY grain.
-    // The probe is the partial's pin action — the per-batch dAgg jobs
-    // below then hit the cached blocks, so no plan runs twice.
-    val batchBuckets: Map[String, Set[Int]] =
-      // In memory, no pin jobs: the build constructions above already
-      // materialized every delta checkpoint — each delta is some term's
-      // BROADCAST stage (ZSet.deltaJoin always broadcasts the delta), and
-      // AQE's toRdd materializes those stages eagerly (r15: −2 AQE job
-      // rounds per batch, every fold query).
-      if (!engaged) Map.empty
-      else {
-        val deltaProbe = dC.select(lit("c").as("s"), bucketExpr("c_custkey").as("b"))
-          .unionByName(dO.select(lit("o").as("s"), bucketExpr("o_custkey").as("b")))
-          .unionByName(dL.select(lit("l").as("s"), bucketExpr("l_orderkey").as("b")))
-          .distinct().collect()
-          .groupBy(_.getString(0)).map { case (s, rs) => s -> rs.map(_.getInt(1)).toSet }
-        val coBuckets = dCO.select(bucketExpr("o_orderkey").as("b"))
-          .distinct().collect().map(_.getInt(0)).toSet
-        val aggBuckets = grains.indices.map { i =>
-          aggName(i) -> dAggs(i).select(bucketExpr(grains(i).head).as("b"))
-            .distinct().collect().map(_.getInt(0)).toSet
-        }
-        (deltaProbe ++ Map("co" -> coBuckets) ++ aggBuckets)
-          .withDefaultValue(Set.empty[Int])
-      }
     // Under spill, compaction fires every CompactEvery batches whether or
     // not deletes arrived (ADVICE r10): an insert-only build-up phase must
     // still flush its deltas to the tables, or the "memory envelope is
@@ -492,42 +465,6 @@ object IncrementalQ3 {
     val spillTo = if (compact && engaged) spillDir else None
     val version = spillTo.map(nextSpillVersion)
 
-    // accumulated dirty buckets / pending deltas since the last spill,
-    // INCLUDING this batch (this batch's delta is part of the compaction
-    // input, so its buckets are dirty too)
-    def dirtySince(name: String): Set[Int] =
-      st.spillMeta.map(_.dirty.getOrElse(name, Set.empty)).getOrElse(Set.empty) ++
-        batchBuckets.getOrElse(name, Set.empty)
-    def pendingSince(name: String): Vector[DataFrame] =
-      st.spillMeta.map(_.pending.getOrElse(name, Vector.empty)).getOrElse(Vector.empty)
-
-    /** Spill `name` at `version`: incremental (dirty buckets only, clean
-      * ones carried forward) when the previous version is known and the
-      * batch left any bucket untouched; full rewrite otherwise. `cons` is
-      * the state's consolidator — [[ZSet.consolidate]] for the base
-      * z-sets, the grain's additive [[consolidateAgg]] for aggregates;
-      * both are sound on a bucket-restricted subset because a row's
-      * duplicates/partials can only live in its own key's bucket.
-      */
-    def spill(root: String, name: String, key: String,
-              cons: DataFrame => DataFrame,
-              state: DataFrame, delta: DataFrame): DataFrame = {
-      val dirty = dirtySince(name)
-      st.spillMeta match {
-        case Some(meta) if meta.root == root && dirty.size < bucketN =>
-          val prev = MergeLogSpill.readBuckets(spark, root, meta.version, name,
-            state.schema, dirty)
-          val rows = cons(
-            (prev +: pendingSince(name)).reduce(_ unionByName _)
-              .unionByName(delta))
-          MergeLogSpill.write(spark, root, version.get, name, key, rows,
-            carry = Some((meta.version, dirty)))
-        case _ =>
-          MergeLogSpill.write(spark, root, version.get, name, key,
-            cons(ZSet.append(state, delta)), carry = None)
-      }
-    }
-
     // The agg chains consolidate on their OWN cadence (every CompactEvery
     // batches, deletes or not): unlike the base z-sets — whose insert-only
     // unions are free — an unconsolidated agg chain grows the EMISSION
@@ -536,51 +473,100 @@ object IncrementalQ3 {
     // the plan and the per-emission scan at CompactEvery partials.
     val aggCompact = compact || st.aggDepth + 1 >= CompactEvery
 
-    def upkeepWith(name: String, key: String, cons: DataFrame => DataFrame,
-                   state: DataFrame, delta: DataFrame,
-                   consolidateNow: Boolean): DataFrame =
-      spillTo match {
-        case Some(root) => spill(root, name, key, cons, state, delta)
-        case None if consolidateNow =>
-          cons(ZSet.append(state, delta)).localCheckpoint(eager = false)
-        case None => ZSet.append(state, delta)
-      }
+    // per state, aligned with st.names: this batch's delta, its
+    // consolidator — [[ZSet.consolidate]] for the base z-sets, the grain's
+    // additive [[consolidateAgg]] for aggregates — and whether this batch
+    // consolidates it
+    val names = st.names
+    val deltas: Seq[DataFrame] = Seq(dC, dO, dL, dCO) ++ dAggs
+    val consolidators: Seq[DataFrame => DataFrame] =
+      Seq.fill(4)(ZSet.consolidate _) ++ grains.map(keys => consolidateAgg(keys, _))
+    def consolidates(i: Int): Boolean = if (i < 4) compact else aggCompact
 
-    def upkeep(name: String, state: DataFrame, delta: DataFrame): DataFrame =
-      upkeepWith(name, spillKey(name, grains), ZSet.consolidate, state, delta,
-        consolidateNow = compact)
+    // deltas pending since the last spill, EXCLUDING this batch's
+    def pendingSince(name: String): Vector[DataFrame] =
+      st.spillMeta.map(_.pending.getOrElse(name, Vector.empty)).getOrElse(Vector.empty)
+
+    /** The buckets each state's compaction input touches — its pending
+      * chain plus this batch's delta — in ONE action over all states. The
+      * pending links are the checkpointed deltas of every batch since the
+      * last version, so the probe covers every row the compaction merges.
+      * Each agg grain probes its own delta PARTIALS at its leading key (r11
+      * verdict item 4 — marking a non-`l_orderkey` grain all-dirty degrades
+      * a fact-sized grain to O(state) agg rewrites every compaction): only
+      * groups a partial touches can change at the merge, so the probe is
+      * exact for ANY grain.
+      */
+    def probe(): Map[String, Set[Int]] = graft.Phase("ivm.step.probe") {
+      names.zip(deltas).flatMap { case (name, delta) =>
+        val key = spillKey(name, grains)
+        (pendingSince(name) :+ delta).map(_.select(lit(name).as("s"),
+          pmod(hash(col(key)), lit(bucketN)).cast("int").as("b")))
+      }.reduce(_ unionByName _)
+        .distinct().collect()
+        .groupBy(_.getString(0)).map { case (s, rs) => s -> rs.map(_.getInt(1)).toSet }
+        .withDefaultValue(Set.empty[Int])
+    }
+
+    /** Spill state `i` at `version`: incremental (dirty buckets only, clean
+      * ones carried forward) when the previous version is known and the
+      * compaction left any bucket untouched; full rewrite otherwise. Both
+      * consolidators are sound on a bucket-restricted subset because a
+      * row's duplicates/partials can only live in its own key's bucket.
+      */
+    def spill(root: String, carry: Option[(SpillMeta, Map[String, Set[Int]])],
+              i: Int): DataFrame = {
+      val (name, state, delta) = (names(i), st.all(i), deltas(i))
+      val key = spillKey(name, grains)
+      carry match {
+        case Some((meta, dirty)) if dirty(name).size < bucketN =>
+          val prev = MergeLogSpill.readBuckets(spark, root, meta.version, name,
+            state.schema, dirty(name))
+          val rows = consolidators(i)(
+            (prev +: pendingSince(name)).reduce(_ unionByName _)
+              .unionByName(delta))
+          MergeLogSpill.write(spark, root, version.get, name, key, rows,
+            carry = Some((meta.version, dirty(name))))
+        case _ =>
+          MergeLogSpill.write(spark, root, version.get, name, key,
+            consolidators(i)(ZSet.append(state, delta)), carry = None)
+      }
+    }
 
     val history = version.map(_ :: st.spillHistory).getOrElse(st.spillHistory)
     val nextMeta: Option[SpillMeta] = (spillTo, version) match {
       case (Some(root), Some(v)) =>
         // fresh bookkeeping window starting at the just-written version
-        Some(SpillMeta(root, v, Map.empty, Map.empty))
+        Some(SpillMeta(root, v, Map.empty))
       case _ => st.spillMeta match {
         case Some(meta) if spillDir.contains(meta.root) =>
-          // accumulate this batch's buckets + delta references (the agg
-          // grains' pendings are their per-batch delta PARTIALS)
-          val deltas = Map("c" -> dC, "o" -> dO, "l" -> dL, "co" -> dCO) ++
-            dAggs.zipWithIndex.map { case (d, i) => aggName(i) -> d }
-          Some(meta.copy(
-            dirty = (st.names.map(n => n -> dirtySince(n))).toMap,
-            pending = deltas.map { case (n, d) =>
-              n -> (meta.pending.getOrElse(n, Vector.empty) :+ d)
-            }))
+          // append this batch's delta references (the agg grains' pendings
+          // are their per-batch delta PARTIALS)
+          Some(meta.copy(pending = names.zip(deltas).map { case (n, d) =>
+            n -> (meta.pending.getOrElse(n, Vector.empty) :+ d)
+          }.toMap))
         case _ => None // no spill version yet (or dir changed): first
                        // compaction full-writes, nothing to track
       }
     }
     val upkeepT0 = System.nanoTime()
-    val next = State(
-      c = upkeep("c", st.c, dC),
-      o = upkeep("o", st.o, dO),
-      l = upkeep("l", st.l, dL),
-      co = upkeep("co", st.co, dCO),
-      aggsRaw = st.aggsRaw.zip(dAggs).zipWithIndex.map {
-        case (((keys, raw), dAgg), i) =>
-          keys -> upkeepWith(aggName(i), keys.head,
-            consolidateAgg(keys, _), raw, dAgg, consolidateNow = aggCompact)
-      },
+    val upkept: Seq[DataFrame] = spillTo match {
+      case Some(root) =>
+        // The MERGEs are independent Spark jobs over blocks pinned above:
+        // run CONCURRENTLY, a spilled compaction's wall time is its
+        // slowest state's write, not the sum of all of them.
+        val carry = st.spillMeta.filter(_.root == root).map(m => m -> probe())
+        graft.Phase.concurrently(names.indices.map(i => () => spill(root, carry, i)))
+      case None =>
+        names.indices.map { i =>
+          val appended = ZSet.append(st.all(i), deltas(i))
+          if (consolidates(i)) consolidators(i)(appended).localCheckpoint(eager = false)
+          else appended
+        }
+    }
+    val Seq(c, o, l, co) = upkept.take(4)
+    val next = State(c, o, l, co,
+      aggsRaw = grains.zip(upkept.drop(4)),
       dirty = if (compact) 0
         else if (countsTowardCompaction) st.dirty + 1 else st.dirty,
       spillHistory = history.take(2),
@@ -590,12 +576,8 @@ object IncrementalQ3 {
       // which states this batch merely UNIONed (snapshot can link + append):
       // base z-sets unless this batch consolidated/spilled them; agg
       // partial chains unless this batch depth-capped/spilled them
-      snapDeltas = (if (spillTo.isEmpty && !compact)
-          Map("c" -> dC, "o" -> dO, "l" -> dL, "co" -> dCO)
-        else Map.empty[String, DataFrame]) ++
-        (if (spillTo.isEmpty && !aggCompact)
-          dAggs.zipWithIndex.map { case (d, i) => aggName(i) -> d }.toMap
-        else Map.empty[String, DataFrame]),
+      snapDeltas = if (spillTo.nonEmpty) Map.empty
+        else names.indices.filterNot(consolidates).map(i => names(i) -> deltas(i)).toMap,
       spec = st.spec)
     if (graft.Phase.enabled) System.err.println(
       f"[phase] ivm.step.upkeepBuild: ${(System.nanoTime() - upkeepT0) / 1e9}%.2fs")
@@ -613,9 +595,6 @@ object IncrementalQ3 {
     // concurrent partial pins racing over an unmaterialized dJ would each
     // recompute the delta joins (the same no-shared-in-flight-computation
     // rule as the parse/delta layers above).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     if (grains.size > 1 && spillTo.isEmpty) dJ.count()
     // a spill batch already materialized every state as its table write —
     // nothing to pin
@@ -627,13 +606,9 @@ object IncrementalQ3 {
                  // delta-sized partials (the chain's older links are
                  // already pinned; counting the whole chain per batch
                  // would be the O(k²) trap the comment above names)
-    // each pin runs under the caller's job label: a pool thread keeps the
-    // label of the moment it was made (the same rule as Snapshots.saveBatch)
     val sizes = graft.Phase(
       if (compact) "ivm.step.upkeepPin.compact" else "ivm.step.upkeepPin") {
-      val label = st.c.sparkSession.sparkContext.getLocalProperty("spark.job.description")
-      Await.result(Future.sequence(toPin.map(df =>
-        Future(graft.Phase.labelled(label)(df.count())))), Duration.Inf)
+      graft.Phase.concurrently(toPin.map(df => () => df.count()))
     }
     parsed.unpersist(blocking = false)
     // adaptive engagement: a pre-engagement compaction just measured the
@@ -646,7 +621,7 @@ object IncrementalQ3 {
     // past the threshold, the same amortization bound as steady state.
     val crossed = spillDir.nonEmpty && spillAtRows > 0L &&
       !next.spillEngaged && compact && sizes.sum >= spillAtRows
-    if (crossed)
+    if (crossed && graft.Phase.enabled)
       System.err.println(s"[ivm] adaptive spill engaged: " +
         s"state ${sizes.sum} >= $spillAtRows rows")
     if (crossed) next.copy(spillEngaged = true) else next

@@ -34,9 +34,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * spill history and the adaptive-spill latch): without the history a
   * resumed spilled fold would leak every pre-snapshot spill version, and
   * without the latch it would fall back to the heap and re-pay the state
-  * it already proved it can't afford. The dirty-bucket bookkeeping is not
-  * persisted: a resumed fold's first compaction is a full rewrite, then
-  * incremental tracking restarts.
+  * it already proved it can't afford. A resumed fold does not rebuild its
+  * [[IncrementalQ3.SpillMeta]] (the pending chains are folded into the
+  * loaded states), so its first compaction is a full rewrite; the ones
+  * after it probe their dirty buckets again.
   *
   * CRASH SAFETY: `b<id>` is cleaned before it is written, `META` is written
   * after every part, and only then is `LATEST` flipped by `ATOMIC_MOVE` —
@@ -151,20 +152,13 @@ object Snapshots {
     // independent Spark jobs over already-pinned blocks — serially each
     // pays its own scheduling + commit latency per batch; concurrently the
     // wall time is the slowest write, the same pattern as
-    // IncrementalQ3.step's upkeep pins. Each write runs under the caller's
-    // job label: a pool thread keeps the label of the moment it was made,
-    // which would file the write under whatever phase happened to start
-    // that thread.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val label = st.c.sparkSession.sparkContext.getLocalProperty("spark.job.description")
-    Await.result(Future.sequence(plan.flatMap { case (name, _, _, into, fresh) =>
+    // IncrementalQ3.step's upkeep pins and spilled MERGEs, each under the
+    // caller's job label.
+    graft.Phase.concurrently(plan.flatMap { case (name, _, _, into, fresh) =>
       fresh.zipWithIndex.map { case (df, i) =>
-        Future(graft.Phase.labelled(label)(
-          df.write.mode("append").parquet(part(d, name, into + i).toString)))
+        () => df.write.mode("append").parquet(part(d, name, into + i).toString)
       }
-    }), Duration.Inf)
+    })
     writeMeta(d, Meta(st.aggsRaw.map(_._1), st.dirty, st.aggDepth,
       st.spillHistory, st.spillEngaged,
       st.spillMeta.map(_.root).orElse(prev.map(_.spillRoot)).getOrElse(""),

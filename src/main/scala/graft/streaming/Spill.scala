@@ -118,7 +118,10 @@ object MergeLogSpill {
       java.nio.charset.StandardCharsets.UTF_8)
       .split("\n").toIndexedSeq.flatMap(_.trim.toLongOption)
 
-  private def vlogAdd(root: String, version: Long): Unit =
+  // synchronized: one compaction's states MERGE concurrently, and each
+  // write registers the same version — an unguarded read-check-append
+  // would log it once per racing writer
+  private def vlogAdd(root: String, version: Long): Unit = synchronized {
     if (!vlogVersions(root).contains(version)) {
       Files.createDirectories(Paths.get(root))
       Files.write(vlogPath(root),
@@ -126,6 +129,7 @@ object MergeLogSpill {
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     }
+  }
 
   /** One task's data-file writes: every row of `it` (last column is the
     * precomputed bucket id) goes to this task's file for its bucket,

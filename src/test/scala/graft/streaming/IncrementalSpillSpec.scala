@@ -32,6 +32,13 @@ class IncrementalSpillSpec extends SparkSpec {
 
   private lazy val plainTops: Seq[Seq[Seq[Any]]] = tops()
 
+  /** `events` cut into `k` trigger-ordered micro-batches of raw lines. */
+  private def slices(k: Int): Seq[DataFrame] = {
+    val tMax = events.agg(max(col("t"))).head().getLong(0)
+    val batched = events.withColumn("batch", Changelog.batchOf(k, tMax)).localCheckpoint()
+    (0 until k).map(i => batched.filter(col("batch") === i).select("line"))
+  }
+
   /** `name`@`v`'s manifest: bucket → root-relative data file. */
   private def entries(root: String, v: Long, name: String): Map[Int, String] =
     MergeLogSpill.readManifest(root, v, name).toMap
@@ -247,11 +254,7 @@ class IncrementalSpillSpec extends SparkSpec {
     // operability × memory-bound together: a fold running WITH spill is
     // snapshotted mid-stream (its states are spill-store scans),
     // reloaded, and folded on — still bit-equal and still exactly empty
-    val tMax = events.agg(max(col("t"))).head().getLong(0)
-    val batched = events.withColumn("batch",
-      least(expr(s"CAST(((t - 1L) * ${K}L) DIV ${tMax}L AS INT)"), lit(K - 1)))
-      .localCheckpoint()
-    val bs = (0 until K).map(i => batched.filter(col("batch") === i).select("line"))
+    val bs = slices(K)
     val root = tempDir("graft-ivm-spill-snap")
     val spill = Some(s"$root/spill")
     def step(st: IncrementalQ3.State, b: DataFrame) =
@@ -270,5 +273,68 @@ class IncrementalSpillSpec extends SparkSpec {
     val b = IncrementalQ3.topN(resumed).collect().map(_.toSeq).toSeq
     assert(a == b, "spilled-fold resume must equal the uninterrupted fold")
     assert(b.isEmpty, "full cycle still cancels to exactly empty")
+  }
+
+  test("dirty-bucket probe: one action per incremental compaction, none per batch") {
+    // The probe is the step's only Dataset collect (MERGE writes collect
+    // their file reports through an RDD, which no QueryExecutionListener
+    // sees). Over a spilled fold compacting at batches 3 (the first: a
+    // full write, nothing to probe), 7 and 11 (incremental), only the
+    // incremental compactions may probe, once each.
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val collects = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") collects.add(qe.analyzed.output.map(_.name).mkString(","))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val bs = slices(12)
+    val root = tempDir("graft-ivm-probe-count")
+    spark.listenerManager.register(listener)
+    val probes = try {
+      bs.zipWithIndex.scanLeft((IncrementalQ3.init(spark), 0)) { case ((st, _), (lines, b)) =>
+        val next = IncrementalQ3.step(st, lines, spillDir = Some(root))
+        // listener events arrive in order: once this batch's sentinel
+        // collect is seen, every collect the step ran has been too
+        val sentinel = s"sentinel_$b"
+        spark.range(1).select(lit(b).as(sentinel)).collect()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!collects.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(collects.contains(sentinel), s"listener never saw batch $b's sentinel")
+        val n = collects.size - 1
+        collects.clear()
+        (next, n)
+      }.drop(1).map(_._2)
+    } finally spark.listenerManager.unregister(listener)
+    val compactions = Seq(3, 7, 11)
+    probes.zipWithIndex.filterNot(p => compactions.contains(p._2)).foreach { case (n, b) =>
+      assert(n == 0, s"non-compacting batch $b ran $n probe actions: $probes") }
+    assert(probes(3) == 0, s"the first compaction is a full write, yet probed: $probes")
+    assert(probes(7) == 1 && probes(11) == 1,
+      s"each incremental compaction must probe exactly once: $probes")
+  }
+
+  test("a concurrent compaction logs its version in VLOG exactly once") {
+    // one compaction MERGEs every state concurrently, and each write
+    // registers the shared version in the root's append-only VLOG
+    val root = tempDir("graft-ivm-vlog")
+    val fin = tops(Some(root)).size
+    assert(fin == K)
+    val logged = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "VLOG")), java.nio.charset.StandardCharsets.UTF_8)
+      .split("\n").toSeq.filter(_.nonEmpty).map(_.toLong)
+    assert(logged.size == 2, s"a K=$K spilled fold compacts twice; VLOG holds $logged")
+    assert(logged.distinct == logged, s"VLOG holds a version more than once: $logged")
+    // and the direct contract: racing writers of one version, many times over
+    val df = spark.range(64).select(col("id").as("k"), lit(1L).as(ZSet.W))
+    (1L to 4L).foreach { v =>
+      graft.Phase.concurrently((0 until 8).map(i =>
+        () => MergeLogSpill.write(spark, s"$root/direct", v, s"s$i", "k", df, carry = None)))
+    }
+    val direct = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "direct", "VLOG")), java.nio.charset.StandardCharsets.UTF_8)
+      .split("\n").toSeq.filter(_.nonEmpty).map(_.toLong)
+    assert(direct == Seq(1L, 2L, 3L, 4L), s"VLOG after concurrent writes: $direct")
   }
 }
