@@ -212,7 +212,7 @@ object SparkEntry {
       (streaming.StreamQueries.q3EventTimeCycle _),
     "stream_agg_extrema" -> (streaming.StreamQueries.priorityExtremaConverged _),
     "agg_cm_frequencies" -> (operators.Sketches.cmFrequencyBound _),
-    "stream_cm_frequencies" -> ((s, d) => streaming.StreamingCm.streamCmFrequencies(s, d)),
+    "stream_cm_frequencies" -> ((s, d) => streaming.SummaryStream.streamCmFrequencies(s, d)),
     // --- text analysis (training-data pipeline) ---
     "text_stats" -> (graft.functions.TextOps.textStats _),
     "lang_id" -> (graft.functions.TextOps.langId _),
@@ -334,20 +334,20 @@ object SparkEntry {
     "profile_quantiles" -> (operators.Profiling.profileQuantiles _),
     "profile_outliers" -> (operators.Profiling.profileOutliers _),
     "profile_drift" -> (operators.Profiling.profileDrift _),
-    "stream_drift" -> ((s, d) => streaming.StreamingDrift.streamDrift(s, d)),
-    "stream_decayed_sum" -> ((s, d) => streaming.StreamingDecay.streamDecayedSum(s, d)),
+    "stream_drift" -> ((s, d) => streaming.SummaryStream.streamDrift(s, d)),
+    "stream_decayed_sum" -> ((s, d) => streaming.SummaryStream.streamDecayedSum(s, d)),
     "stream_basket_rules" -> ((s, d) => streaming.StreamingBaskets.streamBasketRules(s, d)),
-    "stream_benford" -> ((s, d) => streaming.StreamingBenford.streamBenford(s, d)),
+    "stream_benford" -> ((s, d) => streaming.SummaryStream.streamBenford(s, d)),
     "profile_constraints" -> (operators.Profiling.profileConstraints _),
     "profile_benford" -> (operators.Profiling.profileBenford _),
     "profile_dataset_card" -> (operators.Profiling.datasetCard _),
     "profile_correlation" -> (operators.Profiling.profileCorrelation _),
     "stream_profile_incremental" ->
-      ((s: SparkSession, d: String) => streaming.StreamingProfile.streamCorrelation(s, d)),
+      ((s: SparkSession, d: String) => streaming.SummaryStream.streamCorrelation(s, d)),
     "stream_frequent_tokens" ->
-      ((s: SparkSession, d: String) => streaming.StreamingTokens.streamFrequentTokens(s, d)),
+      ((s: SparkSession, d: String) => streaming.SummaryStream.streamFrequentTokens(s, d)),
     "stream_kll_quantiles" ->
-      ((s: SparkSession, d: String) => streaming.StreamingQuantiles.streamKllQuantiles(s, d)),
+      ((s: SparkSession, d: String) => streaming.SummaryStream.streamKllQuantiles(s, d)),
     "layout_zorder" -> (operators.Layout.zorderKeys _),
     "layout_compaction" -> (operators.Layout.compactionPlan _),
     "layout_hilbert" -> (operators.Layout.hilbertKeys _),

@@ -193,7 +193,7 @@ object KllSketch {
 
   /** The serialized ladder itself — the mergeable partial a streaming
     * fold accumulates across micro-batches ([[graft.streaming
-    * .StreamingQuantiles]]); fold with [[Buffer.fromBytes]]+`mergeIn`.
+    * .SummaryStream.streamKllQuantiles]]); fold with [[Buffer.fromBytes]]+`mergeIn`.
     */
   def state(c: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_kll_state", c)

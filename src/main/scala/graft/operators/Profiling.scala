@@ -172,7 +172,7 @@ object Profiling {
 
   /** Slice a `(doc_id, n_chars)` frame into drift histogram rows —
     * row-local, so it applies unchanged to a micro-batch
-    * ([[graft.streaming.StreamingDrift]]).
+    * ([[graft.streaming.SummaryStream.streamDrift]]).
     */
   private[graft] def driftSliced(docs: DataFrame): DataFrame =
     docs.withColumn("hb", Pipelines.hashBucket(col("doc_id")))
@@ -321,7 +321,7 @@ object Profiling {
   /** The nine decimal-exact co-moment sums per return flag, exported as
     * scaled exact DECIMAL(38,4)s. Scaling is linear and the sums exact, so these
     * partials are MERGEABLE by plain addition — which is what
-    * [[graft.streaming.StreamingProfile]] exploits to maintain the
+    * [[graft.streaming.SummaryStream.streamCorrelation]] exploits to maintain the
     * profile incrementally over a stream.
     */
   def correlationSums(li: DataFrame): DataFrame = {
@@ -602,7 +602,7 @@ object Profiling {
 
   /** The MERGEABLE partial: per-digit counts (≤ 9 rows) — plain-additive
     * across micro-batches, which is what [[graft.streaming
-    * .StreamingBenford]] rides. Expects raw order rows.
+    * .SummaryStream.streamBenford]] rides. Expects raw order rows.
     *
     * Non-positive amounts (refunds, zero-value placeholder rows) have no
     * first significant digit and are EXCLUDED before the string render —

@@ -227,7 +227,7 @@ object Sketches {
   }
 
   /** Audit step shared by the batch query and the streaming fold
-    * ([[graft.streaming.StreamingQuantiles]]): given per-group sketch
+    * ([[graft.streaming.SummaryStream.streamKllQuantiles]]): given per-group sketch
     * estimates `(event_type, n, est: array)`, compute the exact quantiles
     * and each estimate's true rank, and emit the bound verdicts.
     */
@@ -287,7 +287,7 @@ object Sketches {
       .filter(length(col("t")) > 0)
 
   /** Audit step shared by the batch query and the streaming fold
-    * ([[graft.streaming.StreamingCm]]): given a 1-row `(n_total, sk)`
+    * ([[graft.streaming.SummaryStream.streamCmFrequencies]]): given a 1-row `(n_total, sk)`
     * sketch frame of ANY provenance (one aggregate, or an element-wise
     * accumulation of per-batch partials — addition commutes, so the
     * counters are identical), estimate the exact top-20 tokens and emit

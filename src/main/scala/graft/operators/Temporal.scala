@@ -410,7 +410,7 @@ object Temporal {
     * (cent sum, event count, purchase count). Decay weights depend only
     * on (day, reference day), so partials from any batching merge by
     * plain addition and the finisher is deferred until read time; this
-    * factoring is what [[graft.streaming.StreamingDecay]] rides.
+    * factoring is what [[graft.streaming.SummaryStream.streamDecayedSum]] rides.
     * Expects raw event rows (`user_id, ts, event_type, value`).
     */
   private[graft] def decayedPartials(ev: DataFrame): DataFrame =

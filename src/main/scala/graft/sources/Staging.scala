@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Marker-gated local/shared-FS staging for operators that must materialize
   * fixture files before reading them back through a real Spark source
-  * (`binaryFile`, partitioned parquet for DPP).
+  * (`binaryFile`, partitioned parquet for DPP, the file-stream archives).
   *
   * Why a marker and not `dir.exists()`: a staging job that fails part-way
   * leaves the directory present, and an existence check would silently

@@ -307,6 +307,19 @@ object Changelog {
         substring(c, 5, Int.MaxValue).as("rest"))
   }
 
+  /** Events per (relation, action) of raw changelog `lines` — the
+    * `changelog_counts` answer, and the per-batch summary of every counts
+    * consumer (≤ 6 rows, plain-additive across batches).
+    */
+  def counts(lines: DataFrame): DataFrame =
+    parse(lines)
+      .select(
+        when(col("tag") === "CU", "customer")
+          .when(col("tag") === "OR", "orders")
+          .otherwise("lineitem").as("relation"),
+        when(col(ZSet.W) === 1, "Insert").otherwise("Delete").as("action"))
+      .groupBy("relation", "action").agg(count(lit(1)).as("n"))
+
   private def typed(parsed: DataFrame, tag: String, cols: Seq[(String, String)]): DataFrame =
     parsed.filter(col("tag") === tag)
       // the split materializes as its own Project alias: multiply

@@ -178,13 +178,7 @@ object FoldDriver {
   private def countsSink(work: String): (DataFrame, Long) => Unit = {
     val ledger = new Ledger(s"$work/counts")
     (batch, id) => ledger.advance(id) { values =>
-      Changelog.parse(batch)
-        .select(
-          when(col("tag") === "CU", "customer")
-            .when(col("tag") === "OR", "orders")
-            .otherwise("lineitem").as("relation"),
-          when(col(ZSet.W) === 1, "Insert").otherwise("Delete").as("action"))
-        .groupBy("relation", "action").agg(count(lit(1)).as("n"))
+      Changelog.counts(batch)
         .collect() // ≤ 6 rows — the per-batch summary, not the data
         .foldLeft(values) { (m, r) =>
           val k = s"${r.getString(0)}/${r.getString(1)}"

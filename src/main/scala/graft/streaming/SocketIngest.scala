@@ -86,13 +86,7 @@ object SocketIngest {
       .writeStream
       .queryName(s"graft_socket_ingest_$port")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = Changelog.parse(batch)
-          .select(
-            when(col("tag") === "CU", "customer")
-              .when(col("tag") === "OR", "orders")
-              .otherwise("lineitem").as("relation"),
-            when(col(ZSet.W) === 1, "Insert").otherwise("Delete").as("action"))
-          .groupBy("relation", "action").agg(count(lit(1)).as("n"))
+        val rows = Changelog.counts(batch)
           .collect() // ≤ 6 rows — the per-batch summary, not the data
         rows.foreach { r =>
           val k = (r.getString(0), r.getString(1))

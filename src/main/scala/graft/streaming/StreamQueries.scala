@@ -23,13 +23,7 @@ object StreamQueries {
     // generate, NOT generateCached: this query scans the stream exactly
     // once, so materializing 2×(nL+nO+nC) lines into block storage first
     // (the memo's localCheckpoint) is pure overhead here
-    val parsed = Changelog.parse(Changelog.generate(spark, dir))
-    parsed.select(
-        when(col("tag") === "CU", "customer")
-          .when(col("tag") === "OR", "orders")
-          .otherwise("lineitem").as("relation"),
-        when(col(ZSet.W) === 1, "Insert").otherwise("Delete").as("action"))
-      .groupBy("relation", "action").agg(count(lit(1)).as("n"))
+    Changelog.counts(Changelog.generate(spark, dir))
   }
 
   private def topAsStrings(st: IncrementalQ3.State): DataFrame =

@@ -86,17 +86,10 @@ object StreamingAnn {
         val shard = Similarity.bucketedIds(bv)
         // the two writes are independent jobs over pinned blocks —
         // overlap them (guide §2.6); wall = the slower write
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        Await.result(Future.sequence(Seq(
-          Future {
-            shard.write.mode("overwrite").parquet(s"$acc/index/batch_$id")
-          },
-          Future {
-            Similarity.lshTopKAgainstBase(bv, shard, ctx.baseVecs, ctx.baseIndex)
-              .write.mode("overwrite").parquet(s"$acc/results/batch_$id")
-          })), Duration.Inf)
+        graft.Phase.concurrently(Seq(
+          () => shard.write.mode("overwrite").parquet(s"$acc/index/batch_$id"),
+          () => Similarity.lshTopKAgainstBase(bv, shard, ctx.baseVecs, ctx.baseIndex)
+            .write.mode("overwrite").parquet(s"$acc/results/batch_$id")))
         ()
       }
       .trigger(Trigger.AvailableNow())

@@ -86,18 +86,11 @@ object StreamingBaskets {
           .select(col("p1").as("a"), col("p2").as("b"))
         // the delta and seen writes are independent jobs over the pinned
         // newRows blocks — overlap them (r15, guide §2.6)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        Await.result(Future.sequence(Seq(
-          Future {
-            newXseen.union(newXnew)
-              .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n"))
-              .write.mode("overwrite").parquet(s"$run/delta/batch_$id")
-          },
-          Future {
-            newRows.write.mode("overwrite").parquet(s"$run/seen/batch_$id")
-          })), Duration.Inf)
+        graft.Phase.concurrently(Seq(
+          () => newXseen.union(newXnew)
+            .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n"))
+            .write.mode("overwrite").parquet(s"$run/delta/batch_$id"),
+          () => newRows.write.mode("overwrite").parquet(s"$run/seen/batch_$id")))
         ()
       }
       .trigger(Trigger.AvailableNow())

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.sources.{Staging, Tables}
+
 /** INCREMENTAL CEP — the streaming twin of
   * [[graft.operators.Temporal.patternMatch]]: per-user pattern counts
   * maintained across micro-batches by a tiny per-key automaton instead of
@@ -38,7 +40,6 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingPattern {
 
   private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val stagedMemo = scala.collection.concurrent.TrieMap.empty[String, String]
 
   private val chExpr =
     """CASE event_type WHEN 'click' THEN 'c' WHEN 'error' THEN 'e'
@@ -53,37 +54,33 @@ object StreamingPattern {
     * slices and trip the per-batch ordering assert).
     */
   private def stagedEvents(spark: SparkSession, dir: String): String =
-    stagedMemo.getOrElseUpdate(
-      spark.sparkContext.applicationId + "#" + dir, {
-        val path = System.getProperty("java.io.tmpdir") +
-          s"/graft_streamcep_${spark.sparkContext.applicationId}_${Integer.toHexString(dir.hashCode)}/events"
-        val ev = graft.sources.Tables.table(spark, dir, "events")
-          .select(col("user_id"), unix_micros(col("ts")).as("us"),
-            expr(chExpr).as("ch"))
-          .localCheckpoint()
-        val Array(lo, hi) = ev.agg(min(col("us")), max(col("us"))).head()
-          .toSeq.map(_.asInstanceOf[Long]).toArray
-        val span = hi - lo + 1
-        import java.nio.file.{Files, Paths}
-        val stamped = scala.collection.mutable.Set.empty[java.nio.file.Path]
-        val base = System.currentTimeMillis()
-        (0 until 6).foreach { b =>
-          ev.filter(expr(s"(us - ${lo}L) * 6 DIV ${span}L") === b)
-            .coalesce(1)
-            .write.mode(if (b == 0) "overwrite" else "append").parquet(path)
-          // stamp every not-yet-stamped data file with the slice index
-          scala.util.Using.resource(Files.list(Paths.get(path))) { s =>
-            s.iterator().forEachRemaining { f =>
-              if (!stamped(f) && f.getFileName.toString.endsWith(".parquet")) {
-                Files.setLastModifiedTime(f,
-                  java.nio.file.attribute.FileTime.fromMillis(base + b * 1000L))
-                stamped += f
-              }
+    Staging.ensure(Staging.dirFor(spark, "streamcep", dir)) { path =>
+      val ev = Tables.table(spark, dir, "events")
+        .select(col("user_id"), unix_micros(col("ts")).as("us"),
+          expr(chExpr).as("ch"))
+        .localCheckpoint()
+      val Array(lo, hi) = ev.agg(min(col("us")), max(col("us"))).head()
+        .toSeq.map(_.asInstanceOf[Long]).toArray
+      val span = hi - lo + 1
+      import java.nio.file.{Files, Paths}
+      val stamped = scala.collection.mutable.Set.empty[java.nio.file.Path]
+      val base = System.currentTimeMillis()
+      (0 until 6).foreach { b =>
+        ev.filter(expr(s"(us - ${lo}L) * 6 DIV ${span}L") === b)
+          .coalesce(1)
+          .write.mode(if (b == 0) "overwrite" else "append").parquet(path)
+        // stamp every not-yet-stamped data file with the slice index
+        scala.util.Using.resource(Files.list(Paths.get(path))) { s =>
+          s.iterator().forEachRemaining { f =>
+            if (!stamped(f) && f.getFileName.toString.endsWith(".parquet")) {
+              Files.setLastModifiedTime(f,
+                java.nio.file.attribute.FileTime.fromMillis(base + b * 1000L))
+              stamped += f
             }
           }
         }
-        path
-      })
+      }
+    }
 
   private val ZeroState =
     "named_struct('nvc', 0L, 'nvcp', 0L, 'maxrun', 0L, 'currun', 0L, 'kvc', 0L, 'kvcp', 0L)"

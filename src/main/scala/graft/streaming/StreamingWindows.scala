@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sources.Tables
+import graft.sources.{Staging, Tables}
 
 /** Event-time windowed aggregation as a REAL Structured Streaming query
   * with watermarking — the beyond-parity streaming surface (the reference
@@ -82,16 +82,8 @@ object StreamingWindows {
   // staged files are immutable once written, so every streaming query in
   // a session replays the same on-disk archive instead of re-writing it
   // (6 driver queries × a write job + mtime stamping, all identical).
-  private val stagedMemo = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def stagedEvents(spark: SparkSession, dir: String): String =
-    stagedMemo.getOrElseUpdate(
-      spark.sparkContext.applicationId + "#" + dir, {
-        val path = System.getProperty("java.io.tmpdir") +
-          s"/graft_stream_${spark.sparkContext.applicationId}_${Integer.toHexString(dir.hashCode)}/events"
-        stage(spark, dir, path)
-        path
-      })
+    Staging.ensure(Staging.dirFor(spark, "streamwin", dir))(stage(spark, dir, _))
 
   // [[StreamTune]] wrapper for this file's STATEFUL queries: engine
   // streaming defaults (checkpoint-checksum switch) + input-size-derived
@@ -199,16 +191,8 @@ object StreamingWindows {
     spark.table(sink)
   }
 
-  private val stagedLateMemo = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def stagedLateEvents(spark: SparkSession, dir: String): String =
-    stagedLateMemo.getOrElseUpdate(
-      spark.sparkContext.applicationId + "#" + dir, {
-        val path = System.getProperty("java.io.tmpdir") +
-          s"/graft_stream_${spark.sparkContext.applicationId}_${Integer.toHexString(dir.hashCode)}/events_late"
-        stageLate(spark, dir, path)
-        path
-      })
+    Staging.ensure(Staging.dirFor(spark, "streamwin_late", dir))(stageLate(spark, dir, _))
 
   /** Stage the events archive with the oldest hour's even-user rows held
     * back into the newest-mtime chunk (see [[streamLate]]). On-time rows
